@@ -13,158 +13,22 @@ oracle's recursive CTE). NaN inputs fall back to the explicit loop:
 pandas skips NaNs with weight bookkeeping, the recurrence propagates
 them.
 
-Execution model: grouped-map Pandas UDF (applyInPandas). Each key's
-series must be contiguous and ordered — Spark shuffles by key and we
-sort within the group. At scale:
-
-  * many keys (the normal case — one per DUID/region/user): each key is
-    one task; the shuffle is the only data movement and parallelism is
-    |keys|, which is exactly how the reference parallelizes (rayon per
-    region).
-  * few keys × very long series: split each key's series into day
-    chunks, run the recurrence per chunk seeded with the closed-form
-    carry-in fm_carry = sum_j a*(1-a)^(n-1-j)*x[j] of the previous
-    chunk (a segmented-scan stitch); the operator exposes the plain
-    version — the stitch composes from it because the recurrence is a
-    linear map. Not needed at the reference's scale (5 regions × 21.6k
-    rows/day).
+Execution model: grouped-map Pandas UDF (applyInPandas) over key-hash
+buckets — each bucket sorts its rows by (key, order) and runs one
+segmented Cython pass, so each key's series is contiguous and ordered
+inside one task. Parallelism is the bucket count. A key's series is
+never split across tasks, which suits the reference's scale (5 regions
+× 21.6k rows/day; the reference also parallelizes per region).
+``ewma`` documents the details.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _ewma_series(x: np.ndarray, alpha: float) -> np.ndarray:
-    """Apply fm[i] = (1-alpha)*fm[i-1] + alpha*x[i], fm[-1] = 0.
-
-    Fast path: pandas ``ewm(adjust=False)`` over the series with a
-    prepended 0.0 is the SAME recurrence evaluated in Cython — verified
-    bit-exact against the explicit loop (the oracle is a bit-exact
-    recursive CTE, so "close" wouldn't do). NaNs take the explicit
-    loop: pandas ewm skips them with weight bookkeeping, while the
-    reference recurrence propagates them — different semantics."""
-    if np.isnan(x).any():
-        out = np.empty(len(x), dtype=np.float64)
-        prev = 0.0
-        one_minus = 1.0 - alpha
-        for i, v in enumerate(x):
-            prev = one_minus * prev + alpha * v
-            out[i] = prev
-        return out
-    seeded = pd.Series(np.concatenate([[0.0], x]))
-    return seeded.ewm(alpha=alpha, adjust=False).mean().to_numpy()[1:]
-
-
-def ewma_chunked(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-    value_col: str,
-    alpha: float,
-    chunk_col: str,
-    negate: bool = False,
-    out_col: str = "ewma",
-) -> DataFrame:
-    """EWMA for FEW keys × VERY LONG series: the segmented-scan stitch.
-
-    The plain operator puts each key's whole series in one task — fine
-    for many keys, a bottleneck for 5 regions × years of 4s data. The
-    recurrence is a linear map, so it parallelizes over time chunks
-    (``chunk_col``, e.g. a day bucket):
-
-      phase 1 (parallel over key×chunk): local EWMA with seed 0, plus a
-        2-number chunk summary (final local value, row count)
-      phase 2 (tiny: |keys|×|chunks| rows): carry-in recurrence
-        v_{c+1} = S_c + v_c * (1-alpha)^{n_c} per key, in chunk order
-      phase 3 (parallel): fm[i] = local[i] + carry * (1-alpha)^(pos+1)
-
-    Matches the sequential recurrence to FP round-off (pow vs iterated
-    multiply); pinned against the plain operator in tests.
-    """
-    from pyspark.sql import types as T
-
-    key_cols = list(key_cols)
-    order_cols = list(order_cols)
-    all_keys = key_cols + [chunk_col]
-
-    local_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("__local", T.DoubleType()),
-            T.StructField("__pos", T.LongType()),
-        ]
-    )
-
-    def local_pass(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as _np
-        import pandas as _pd
-
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        x = pdf[value_col].to_numpy(dtype=_np.float64)
-        if negate:
-            x = -x
-        if _np.isnan(x).any():  # NaN: explicit loop (see _ewma_series)
-            out = _np.empty(len(x), dtype=_np.float64)
-            prev = 0.0
-            om = 1.0 - alpha
-            for i, v in enumerate(x):
-                prev = om * prev + alpha * v
-                out[i] = prev
-        else:  # Cython ewm with a 0.0 seed — bit-exact with the loop
-            out = (
-                _pd.Series(_np.concatenate([[0.0], x]))
-                .ewm(alpha=alpha, adjust=False)
-                .mean()
-                .to_numpy()[1:]
-            )
-        pdf["__local"] = out
-        pdf["__pos"] = _np.arange(len(x), dtype=_np.int64)
-        return pdf
-
-    local = df.groupBy(*all_keys).applyInPandas(local_pass, schema=local_schema)
-
-    # chunk summaries: (final local value, row count) — argmax via struct max
-    summaries = local.groupBy(*all_keys).agg(
-        F.max(F.struct(F.col("__pos"), F.col("__local").alias("s")))["s"].alias("__S"),
-        F.count("*").alias("__n"),
-    )
-
-    carry_schema = T.StructType(
-        [f for f in summaries.schema.fields if f.name not in ("__S", "__n")]
-        + [T.StructField("__carry", T.DoubleType())]
-    )
-
-    def carry_pass(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(chunk_col, kind="mergesort")
-        om = 1.0 - alpha
-        carries = np.empty(len(pdf), dtype=np.float64)
-        v = 0.0
-        for i, (s, n) in enumerate(zip(pdf["__S"], pdf["__n"])):
-            carries[i] = v
-            v = s + v * om**int(n)  # end-of-chunk value feeds the next
-        pdf["__carry"] = carries
-        return pdf.drop(columns=["__S", "__n"])
-
-    carries = summaries.groupBy(*key_cols).applyInPandas(
-        carry_pass, schema=carry_schema
-    )
-
-    om = 1.0 - alpha
-    return (
-        local.join(carries, all_keys)
-        .withColumn(
-            out_col,
-            F.col("__local")
-            + F.col("__carry") * F.pow(F.lit(om), F.col("__pos") + 1),
-        )
-        .drop("__local", "__pos", "__carry")
-    )
 
 
 def ewma(

@@ -120,20 +120,6 @@ def fan_out_sized(df: DataFrame, n_rows: int, rows_per_task: int = 1000) -> Data
     return df.repartition(target)
 
 
-def flat_dot(x, y, dim: int):
-    """Dot product as a flat left-associated codegen expression.
-
-    Identical float sequence to a sequential accumulate (so results
-    hash-match DuckDB's list_dot_product), but compiled into one
-    whole-stage-codegen expression: no per-row array allocation. The
-    HOF ``aggregate(zip_with(...))`` form costs ~4x in hot pair loops.
-    """
-    acc = x[0] * y[0]
-    for i in range(1, dim):
-        acc = acc + x[i] * y[i]
-    return acc
-
-
 def pairwise_cosine9(pairs: DataFrame) -> DataFrame:
     """(query_id, qe, neighbor_id, ce) -> (query_id, neighbor_id,
     cosine) with cosine ROUND(dot/(|q||c|), 9).

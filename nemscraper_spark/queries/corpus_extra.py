@@ -106,14 +106,6 @@ def semantic_dedup_clusters(spark, sf_dir):
 # construction — semantic_pairs loads the table itself;
 # corpus-immutability contract documented ONCE at trunk_cache
 # (clear_trunk_caches() is the rewrite-boundary hook).
-def clear_semantic_pairs_cache() -> None:
-    """Back-compat alias for trunk_cache.clear_trunk_caches() — one
-    hook now clears every trunk family (round-10 ADVICE)."""
-    from nemscraper_spark.queries.trunk_cache import clear_trunk_caches
-
-    clear_trunk_caches()
-
-
 def semantic_pairs(spark, sf_dir):
     """SemDeDup edge set over the int grid: k(n) md5 centroids ->
     max-dot cluster assignment (Arrow GEMM) -> within-cluster pairs

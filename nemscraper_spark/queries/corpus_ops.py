@@ -61,14 +61,6 @@ def _shingles(spark, sf_dir):
 # surviving edge).  Provenance is by construction — _dup_edges loads
 # the table itself; corpus-immutability contract documented ONCE at
 # trunk_cache (clear_trunk_caches() is the rewrite-boundary hook).
-def clear_dup_edges_cache() -> None:
-    """Back-compat alias for trunk_cache.clear_trunk_caches() — one
-    hook now clears every trunk family (round-10 ADVICE)."""
-    from nemscraper_spark.queries.trunk_cache import clear_trunk_caches
-
-    clear_trunk_caches()
-
-
 def _dup_edges(spark, sf_dir):
     """Connectivity-equivalent near-dup edge set: exact-duplicate
     collapse first, word-3-gram Jaccard >= 0.5 pairs (inverted-index

@@ -823,17 +823,6 @@ def _md5_band_candidates(sh, n_perm: int, band_size: int):
 _COUNTED_TAGS = frozenset({"documents", "documents#md5reps"})
 
 
-def clear_counted_cache() -> None:
-    """Back-compat alias for trunk_cache.clear_trunk_caches(): clears
-    EVERY trunk family (counted-pairs, ppjoin candidates, near-dup
-    edges, SemDeDup pairs) plus the opt-in shingle-family frames —
-    the round-10 ADVICE fix for the per-module hooks that each left
-    the other modules' caches alive."""
-    from nemscraper_spark.queries.trunk_cache import clear_trunk_caches
-
-    clear_trunk_caches()
-
-
 def lsh_counted_pairs_md5(d, n_perm: int = 8, band_size: int = 2):
     """Shared md5-LSH verify machinery over a (doc_id, text) frame:
     band-bucket candidates joined back to the shingle table on equal

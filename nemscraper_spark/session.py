@@ -72,8 +72,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read driver testdata tables (TESTDATA.md) as DataFrames."""
-    dfs = [spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names]
-    return dfs[0] if len(dfs) == 1 else dfs

@@ -71,8 +71,8 @@ def replicate(
 ) -> None:
     """Replicate the testdata into dst_dir. ``tables`` (optional)
     limits which tables get the full factor-x treatment — the rest are
-    copied at 1x so single-table probes (e.g. cc_depth_probe over
-    documents) don't pay a 100x lineitem rewrite."""
+    copied at 1x so single-table probes (e.g. a documents-only
+    corpus query) don't pay a 100x lineitem rewrite."""
     from pyspark.sql import functions as F
 
     from nemscraper_spark.queries.common import TABLES, load_table

@@ -658,8 +658,7 @@ def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
     """THE rewrite-boundary hook (r11: ONE registry, one hook) must
     unpersist + empty every trunk family at once — the r10 ADVICE
     gap was per-module hooks leaving sibling caches alive — and a
-    post-clear rebuild yields the same rows.  The legacy per-module
-    hook names must reach the same aggregate clear.  Teardown clears
+    post-clear rebuild yields the same rows.  Teardown clears
     again so the test leaves the registry in a known-empty state
     rather than pinning freshly built trunks for the session (r10
     ADVICE)."""
@@ -680,8 +679,8 @@ def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
         assert ("ppjoin_cand", app, nd, td._PPJOIN_TP, td._PPJOIN_TQ) in tc._TRUNKS
         assert ("sem_pairs", app, nd) in tc._TRUNKS
 
-        # the LEGACY hook name reaches the aggregate clear: counted,
-        # ppjoin, dup-edges AND sem-pairs all drop in one call
+        # the aggregate clear drops counted, ppjoin, dup-edges AND
+        # sem-pairs in one call
         # warm an ANN grid entry too: the aggregate hook covers it
         # (same corpus-staleness hazard, previously no hook at all)
         import nemscraper_spark.queries.ann_twins as at
@@ -689,7 +688,7 @@ def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
         at._int_grid(spark, sf_dir)
         assert at._GRID_CACHE
 
-        td.clear_counted_cache()
+        tc.clear_trunk_caches()
         assert not tc._TRUNKS
         assert not td._SHINGLE_CACHE and not td._BANDS_CACHE
         assert not at._GRID_CACHE and not at._SAMPLE_CACHE
