@@ -185,12 +185,7 @@ def compact_partition(
         ).parquet(staging)
     staged = fsutil.list_files(staging, suffix=".parquet")
     # row count from the staged footers (metadata-only, no extra job)
-    import pyarrow.parquet as pq
-
-    rows = 0
-    for f in staged:
-        with fsutil.open_input(f) as fh:
-            rows += pq.ParquetFile(fh).metadata.num_rows
+    rows = fsutil.parquet_rows(staging)
     if _crash_after == "stage":
         raise RuntimeError("injected crash after stage")
     # commit point: once the manifest is down, recovery rolls FORWARD.

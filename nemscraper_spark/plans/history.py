@@ -6,8 +6,11 @@ files and vacuums them into consolidated files every 30s
 (table_history.rs:58-140). Spark-first equivalent:
 
   * the ledger IS a parquet table partitioned by date
-  * membership = broadcast left-anti join against the ledger keys —
-    no driver-side set at all, so it scales past memory
+  * membership stays a driver-side set, as in the reference: the
+    service tick (scripts/run_pipeline.run_once) collects the key
+    column of read() once per tick — one filename per ZIP, far smaller
+    than the data it guards. In --streaming mode the stream checkpoint
+    is the dedup set and this ledger only records what was ingested.
   * appends are plain partitioned writes; vacuum() compacts each
     partition's small files (M3)
 
@@ -55,7 +58,6 @@ COMPACTED_SCHEMA = T.StructType(
     ]
 )
 
-_KEYS = {"downloaded": "filename", "processed": "filename", "compacted": "input_file"}
 _SCHEMAS = {
     "downloaded": DOWNLOADED_SCHEMA,
     "processed": PROCESSED_SCHEMA,
@@ -74,7 +76,6 @@ class TableHistory:
         self.spark = spark
         self.name = name
         self.path = os.path.join(root, name)
-        self.key = _KEYS[name]
         self.schema = _SCHEMAS[name]
 
     def _exists(self) -> bool:
@@ -102,14 +103,6 @@ class TableHistory:
             "date", F.date_format(F.coalesce(F.col(ts_col), F.current_timestamp()), "yyyyMMdd")
         )
         out.write.mode("append").partitionBy("date").parquet(self.path)
-
-    def filter_unseen(self, candidates: DataFrame, key_col: str | None = None) -> DataFrame:
-        """M1: candidates whose key is NOT in the ledger — a broadcast
-        left-anti join (the Spark shape of the reference's `seen` set,
-        main.rs:177-179, compactor.rs:618-630)."""
-        key_col = key_col or self.key
-        seen = self.read().select(F.col(self.key).alias(key_col)).distinct()
-        return candidates.join(F.broadcast(seen), key_col, "left_anti")
 
     def vacuum(self) -> None:
         """M3: merge each partition's many small files into one

@@ -256,7 +256,8 @@ def nem_compaction_roundtrip(spark, sf_dir):
         zf.writestr("PUBLIC_DISPATCHIS_202207201800.CSV", _NEM_CSV)
 
     from nemscraper_spark.plans.compact import compact_table
-    from nemscraper_spark.sources.nemcsv import _parquet_rows, ingest
+    from nemscraper_spark.sources import fsutil
+    from nemscraper_spark.sources.nemcsv import ingest
 
     ingest(spark, landing, out)
     ingest(spark, landing, out)  # second append → >1 file per partition
@@ -268,7 +269,7 @@ def nem_compaction_roundtrip(spark, sf_dir):
         files = _glob.glob(os.path.join(root, "date=*", "*.parquet"))
         # conservation from the compacted footers — the reference's
         # verify reads metadata, not data (verify.rs:56-133)
-        return (key, _parquet_rows(root), 2 * d, len(files))
+        return (key, fsutil.parquet_rows(root), 2 * d, len(files))
 
     # tables compact independently (disjoint roots) — overlap their
     # job latencies from a driver thread pool, same as compact_table

@@ -12,8 +12,7 @@ ingest watches. Reference parity:
   * poll loop (urls.rs:167-209): round-robin feeds, one fetch per tick.
 
 Dedup against the `downloaded` history ledger happens in the caller
-(plans/history.TableHistory.filter_unseen — M1), mirroring
-main.rs:177-179.
+(scripts/run_pipeline.run_once — M1), mirroring main.rs:177-179.
 """
 
 from __future__ import annotations

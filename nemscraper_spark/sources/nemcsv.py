@@ -43,6 +43,7 @@ from nemscraper_spark.functions import (
     to_double,
     to_nem_timestamp,
 )
+from nemscraper_spark.sources import fsutil
 
 PARSED_SCHEMA = "src_file string, table_key string, headers string, line string"
 BLOCK_SCHEMA = (
@@ -55,6 +56,50 @@ SLICE_LINES = 100_000  # ~7MB/slice row — the reference's 100MiB batch
 # gives the post-parse repartition slice-granular units to balance
 
 
+def nem_segmenter():
+    """Build the I/D grammar segmenter ``segment(text)`` → one
+    ``(table_key, headers, lines)`` tuple per block.
+
+    An ``I,`` row with >= 5 csv fields opens a block (table_key =
+    fields 1-3 joined "---", headers = the rest joined by _HDR_SEP,
+    csv-parsed so quoting round-trips); a short/malformed I row keeps
+    the CURRENT block open (csv_batch_processor.rs:72-74 state-machine
+    semantics); lines before the first I row belong to no block. The
+    block body is every raw line up to the next I row (C/D/other rows
+    alike — callers filter), split on ``\n`` with the trailing ``\r``
+    dropped, so a quoted field holding any other line-break character
+    (``\x0c``, ``\u2028``, ...) stays inside its row.
+
+    Built in function scope on purpose: cloudpickle ships the returned
+    closure BY VALUE, so executors in a foreign-driver deployment never
+    import ``nemscraper_spark`` to run it. Stdlib only. Shared by the
+    mapInPandas splitter (:func:`parse_blocks`) and the ``nemcsv``
+    connector (sources/nemsource.py)."""
+    import csv as _csv
+    import re
+
+    i_row = re.compile(r"(?m)^I,[^\r\n]*")
+    sep = _HDR_SEP
+
+    def segment(text: str) -> list[tuple[str, str, list[str]]]:
+        marks = list(i_row.finditer(text))
+        blocks: list[tuple[str, str, list[str]]] = []
+        for k, m in enumerate(marks):
+            row = next(_csv.reader([m.group(0)]))
+            end = marks[k + 1].start() if k + 1 < len(marks) else len(text)
+            body = [
+                ln[:-1] if ln.endswith("\r") else ln
+                for ln in text[m.end() : end].split("\n")
+            ]
+            if len(row) >= 5:
+                blocks.append(("---".join(row[1:4]), sep.join(row[4:]), body))
+            elif blocks:
+                blocks[-1][2].extend(body)
+        return blocks
+
+    return segment
+
+
 def parse_blocks(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
     """Scan ZIPs and/or raw CSVs → block slices (BLOCK_SCHEMA).
 
@@ -62,11 +107,11 @@ def parse_blocks(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
     so the ZIP-member iteration (split.rs:36-55) runs partition-parallel.
     ``input_path``: a directory/glob or an explicit list of files.
 
-    The python side does SEGMENTATION ONLY — find ``I,`` block
-    boundaries with one C-speed regex pass and bulk-split each block
-    body into lines; no per-line python predicate, no python CSV
-    parsing. Each output row is one <=SLICE_LINES slice of a block's
-    raw lines as an Arrow list<string> (one offsets buffer + one data
+    The python side does SEGMENTATION ONLY (:func:`nem_segmenter` —
+    find ``I,`` block boundaries with one C-speed regex pass and split
+    each block body into lines); no python CSV parsing of data rows.
+    Each output row is one <=SLICE_LINES slice of a block's raw lines
+    as an Arrow list<string> (one offsets buffer + one data
     buffer — per-line metadata is NOT repeated, which is what keeps the
     python->JVM transfer and the fan-out shuffle at ~file size instead
     of 3x). Line-level rows come from a JVM-side explode; the CSV
@@ -83,16 +128,14 @@ def parse_blocks(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
         .select("path", "content")
     )
 
+    segment = nem_segmenter()
+
     def extract(iterator):
-        import csv as _csv
         import io
         import os as _os
-        import re
         import zipfile
 
         import pandas as pd
-
-        i_row = re.compile(r"(?m)^I,[^\r\n]*")
 
         for pdf in iterator:
             src_files, keys, hdrs, line_lists = [], [], [], []
@@ -103,29 +146,13 @@ def parse_blocks(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
                     with zipfile.ZipFile(io.BytesIO(content)) as zf:
                         for m in zf.namelist():
                             if m.lower().endswith(".csv"):
-                                members.append((base, zf.read(m).decode("utf-8", "replace")))
+                                members.append(zf.read(m))
                 else:
-                    members.append((base, bytes(content).decode("utf-8", "replace")))
-                for src, text in members:
-                    marks = list(i_row.finditer(text))
-                    blocks = []  # (src, key, hdr, body) for THIS member
-                    for k, m in enumerate(marks):
-                        row = next(_csv.reader([m.group(0)]))
-                        end = marks[k + 1].start() if k + 1 < len(marks) else len(text)
-                        body = text[m.end():end].splitlines()
-                        if len(row) >= 5:
-                            blocks.append(
-                                (src, "---".join(row[1:4]), _HDR_SEP.join(row[4:]), body)
-                            )
-                        elif blocks:
-                            # malformed I row: the PREVIOUS block
-                            # continues (csv_batch_processor.rs:72-74
-                            # semantics — the splitter state machine
-                            # keeps its current schema)
-                            blocks[-1] = blocks[-1][:3] + (blocks[-1][3] + body,)
-                    for s, k2, h, body in blocks:
+                    members.append(bytes(content))
+                for raw in members:
+                    for k2, h, body in segment(raw.decode("utf-8", "replace")):
                         for off in range(0, max(len(body), 1), SLICE_LINES):
-                            src_files.append(s)
+                            src_files.append(base)
                             keys.append(k2)
                             hdrs.append(h)
                             line_lists.append(body[off : off + SLICE_LINES])
@@ -347,14 +374,14 @@ def ingest(
             # time clustering survives without an explicit sort — a
             # sortWithinPartitions("date", ts) here was measured to add
             # ~1.5s for zero size/stats gain. Re-clustering across
-            # files is the compactor's job (plans/layout.py).
+            # files is the compactor's job (plans/compact.py).
             path = os.path.join(out_dir, key)
             out.write.mode("append").partitionBy("date").option(
                 "compression", compression
             ).parquet(path)
             # conservation count from the written footers (metadata
             # only — no extra scan job; verify.rs:56-133 semantics)
-            return key, _parquet_rows(path)
+            return key, fsutil.parquet_rows(path)
 
         # Tables write to DISJOINT directories, so the per-table jobs
         # are independent — submit them from a driver-side thread pool
@@ -414,12 +441,3 @@ def _input_stats(input_path: str | list[str]) -> tuple[int, int]:
         except (OSError, _zf.BadZipFile):
             pass
     return len(files), total
-
-
-def _parquet_rows(table_root: str) -> int:
-    """Total rows under a table dir from parquet footers (no Spark job).
-    Routed through pyarrow.fs so the conservation check also works on
-    object-store URIs (the reference's GCS target, gcloud-sync.sh)."""
-    from nemscraper_spark.sources import fsutil
-
-    return fsutil.parquet_rows(table_root)

@@ -8,8 +8,9 @@ one row per D-line::
     src_file string, table_key string, headers string, line string
 
 exactly the intermediate sources/nemcsv.py's mapInPandas splitter
-produces (reference grammar: src/process/split.rs:64-125,
-src/process/csv_batch_processor.rs:42-94), after which the existing
+produces — both run the same segmenter, ``nemcsv.nem_segmenter``
+(reference grammar: src/process/split.rs:64-125,
+src/process/csv_batch_processor.rs:42-94) — after which the existing
 typed-projection machinery takes over.  The connector form adds what a
 plain mapInPandas kernel can't express:
 
@@ -25,7 +26,8 @@ factory function so cloudpickle serializes them BY VALUE — executors in
 a foreign-driver deployment (the driver-contract environment) cannot
 import ``nemscraper_spark``, the same constraint that keeps the
 repo's Pandas-UDF closures self-contained.  Everything the reader
-touches at read() time is stdlib (zipfile, io).
+touches at read() time is stdlib (zipfile, plus the segmenter closure,
+itself stdlib-only and shipped by value).
 """
 
 from __future__ import annotations
@@ -40,6 +42,8 @@ def nem_csv_data_source():
         DataSourceStreamReader,
         InputPartition,
     )
+
+    from nemscraper_spark.sources.nemcsv import nem_segmenter
 
     class _NemPart(InputPartition):
         def __init__(self, path: str, member: str | None):
@@ -76,18 +80,11 @@ def nem_csv_data_source():
                 parts.append(_NemPart(f, None))
         return parts
 
+    segment = nem_segmenter()
+
     def _read_part(partition):
-        # Executor-side: stream one member's lines through the
-        # I/D grammar, EXACTLY as sources/nemcsv.py's splitter does
-        # (split.rs:64-125): an "I," row with >= 5 csv fields opens
-        # a block (table_key = fields 1-3 joined "---", headers =
-        # the remaining fields, csv-parsed so quoting round-trips);
-        # a malformed/short I row keeps the CURRENT block open
-        # (csv_batch_processor.rs:72-74 state-machine semantics);
-        # "D," rows belong to the current block; C rows, pre-I
-        # rows, and non-"D," lines drop.
-        import csv as _csv
-        import io
+        # Executor-side: one member through the splitter's own I/D
+        # segmenter (split.rs:64-125), keeping only the "D," lines
         import os
         import zipfile
 
@@ -103,19 +100,10 @@ def nem_csv_data_source():
                 raw = fh.read()
             src = os.path.basename(partition.path)
 
-        table_key = None
-        headers = None
-        sep = "\x1f"  # matches nemcsv._HDR_SEP
-        for line in io.StringIO(raw.decode("utf-8", "replace")):
-            line = line.rstrip("\r\n")
-            if line.startswith("I,"):
-                row = next(_csv.reader([line]), None)
-                if row and len(row) >= 5:
-                    table_key = "---".join(row[1:4])
-                    headers = sep.join(row[4:])
-                # else: previous block continues
-            elif line.startswith("D,") and table_key is not None:
-                yield (src, table_key, headers, line)
+        for table_key, headers, lines in segment(raw.decode("utf-8", "replace")):
+            for line in lines:
+                if line.startswith("D,"):
+                    yield (src, table_key, headers, line)
 
     class _NemReader(DataSourceReader):
         def __init__(self, options):

@@ -10,8 +10,9 @@ worker pools). Spark mapping:
     restarts, no in-memory HashSet to hydrate.
   * foreachBatch runs the same batch ingest (sources/nemcsv.ingest's
     parse→infer→write) — identical semantics batch vs stream.
-  * Trigger.ProcessingTime("60 seconds") ↔ the 60s poll cadence;
-    tests use availableNow to drain synchronously.
+  * the service tick (scripts/run_pipeline.run_once) owns the 60s poll
+    cadence; each tick drains what has landed with an availableNow
+    trigger.
 
 No watermarks/late-data policy — the reference has none (§2.9): late
 files ride the same dedup-by-filename path, and event time only enters
@@ -21,26 +22,34 @@ via the filename-derived date= partition.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 
-def start_ingest_stream(
+def drain_ingest_stream(
     spark: SparkSession,
     landing_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    trigger_seconds: int = 60,
-    available_now: bool = False,
-    history=None,
-) -> StreamingQuery:
-    """Watch ``landing_dir`` for new ZIP/CSV files and ingest each
-    micro-batch with the batch pipeline. Returns the running query.
+) -> tuple[list[str], dict[str, int]]:
+    """Ingest every ZIP/CSV in ``landing_dir`` that the checkpoint has
+    not seen, with the batch pipeline, and block until drained.
 
-    ``history``: optional plans.history.TableHistory('processed') — a
-    row is appended per processed file (main.rs:262-275), on top of the
-    checkpoint's exactly-once guarantee.
+    Returns (file names ingested, {table_key: row_count}) — the row
+    counts as ``nemcsv.ingest`` reports them after the last micro-batch.
     """
-    stream = (
+    import os
+
+    from nemscraper_spark.sources.nemcsv import ingest
+
+    names: list[str] = []
+    counts: dict[str, int] = {}
+
+    def process_batch(batch_df, epoch_id: int) -> None:
+        files = [r.path for r in batch_df.select("path").collect()]
+        if files:
+            counts.update(ingest(batch_df.sparkSession, files, out_dir))
+            names.extend(os.path.basename(f) for f in files)
+
+    (
         spark.readStream.format("binaryFile")
         # streaming sources require an explicit schema — binaryFile's is fixed
         .schema(
@@ -48,40 +57,11 @@ def start_ingest_stream(
         )
         .option("pathGlobFilter", "*.[zZcC][iIsS][pPvV]*")
         .load(landing_dir)
-        .select("path", "length")
+        .select("path")
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-
-    def process_batch(batch_df, epoch_id: int) -> None:
-        from datetime import datetime
-
-        from nemscraper_spark.sources.nemcsv import ingest
-
-        files = [r.path for r in batch_df.select("path").collect()]
-        if not files:
-            return
-        t0 = datetime.now()
-        counts = ingest(batch_df.sparkSession, files, out_dir)
-        if history is not None:
-            t1 = datetime.now()
-            history.add(
-                [
-                    {
-                        "filename": f.rsplit("/", 1)[-1],
-                        "total_rows": sum(counts.values()),
-                        "size_bytes": None,
-                        "processing_start": t0,
-                        "processing_end": t1,
-                        "thread": epoch_id,
-                    }
-                    for f in files
-                ]
-            )
-
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return names, counts

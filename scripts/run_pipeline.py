@@ -19,6 +19,9 @@ Usage:
   python scripts/run_pipeline.py --workdir /tmp/nem --landing-only --once
       (skip polling; process whatever ZIPs are already in
        <workdir>/zips — the daily re-enqueue sweep shape, main.rs:286-307)
+  python scripts/run_pipeline.py --workdir /tmp/nem --landing-only --streaming --loop 10
+      (same tick, but ingest drains <workdir>/zips through the
+       checkpointed Structured Streaming file source)
 """
 
 from __future__ import annotations
@@ -43,12 +46,18 @@ def run_once(
     feeds: list[str],
     sf_dir: str | None,
     mirror: str | None = None,
+    streaming: bool = False,
 ) -> dict:
-    """One tick: returns a summary dict of what moved."""
+    """One tick: returns a summary dict of what moved.
+
+    ``streaming`` changes step 2 only: the ZIPs to ingest are whatever
+    the checkpointed Structured Streaming file source has not yet
+    drained (streaming/ingest.py), instead of the processed ledger's
+    diff against the landing dir. Either way the processed ledger gets
+    one row per ingested ZIP."""
     from nemscraper_spark.plans.compact import compact_table
     from nemscraper_spark.plans.history import TableHistory
     from nemscraper_spark.sources import fetch
-    from nemscraper_spark.sources.nemcsv import ingest
 
     zips_dir = os.path.join(workdir, "zips")
     parquet_dir = os.path.join(workdir, "parquet")
@@ -64,7 +73,7 @@ def run_once(
 
     # 1. poll + download, deduped against the ledger (main.rs:147-197)
     if feeds:
-        seen = {r.filename for r in downloaded.read().collect()} if feeds else set()
+        seen = {r.filename for r in downloaded.read().collect()}
         rows = fetch.poll_feeds_once(
             feeds, zips_dir, already_downloaded=lambda n: n in seen
         )
@@ -72,19 +81,37 @@ def run_once(
             downloaded.add(rows)
         summary["downloaded"] = len(rows)
 
-    # 2. ingest every ZIP the processed ledger hasn't seen (main.rs:248-275)
-    all_zips = sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
-    done = {r.filename for r in processed.read().collect()}
-    todo = [z for z in all_zips if os.path.basename(z) not in done]
-    if todo:
-        counts = ingest(spark, todo, parquet_dir)
+    # 2. ingest every ZIP not yet seen (main.rs:248-275): the processed
+    #    ledger is the dedup set in batch mode, the stream checkpoint
+    #    in streaming mode
+    if streaming:
+        from nemscraper_spark.streaming.ingest import drain_ingest_stream
+
+        names, counts = drain_ingest_stream(
+            spark, zips_dir, parquet_dir, os.path.join(workdir, "checkpoint")
+        )
+    else:
+        from nemscraper_spark.sources.nemcsv import ingest
+
+        done = {r.filename for r in processed.read().collect()}
+        todo = [
+            z
+            for z in sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
+            if os.path.basename(z) not in done
+        ]
+        names = [os.path.basename(z) for z in todo]
+        counts = ingest(spark, todo, parquet_dir) if todo else {}
+    if names:
         processed.add(
             [
-                {"filename": os.path.basename(z), "url": "", "size_bytes": os.path.getsize(z)}
-                for z in todo
+                {
+                    "filename": n,
+                    "size_bytes": os.path.getsize(os.path.join(zips_dir, n)),
+                }
+                for n in names
             ]
         )
-        summary["processed"] = len(todo)
+        summary["processed"] = len(names)
         summary["tables"] = counts
 
     # 3. compact each table's multi-file partitions (compactor.rs:584-792)
@@ -139,16 +166,18 @@ def run_loop(
     interval_sec: float = 60.0,
     stop: threading.Event | None = None,
     mirror: str | None = None,
+    streaming: bool = False,
 ) -> list[dict]:
     """The reference's long-running service shape, as one driver loop:
 
-    * every tick is a FULL zips-dir sweep deduped against the processed
-      ledger — run_once re-globs the directory each time, so files that
-      arrive out-of-band (scp'd in, a crashed tick's leftovers, a
-      previously failed ingest that never reached the ledger) are
-      picked up on the next tick. This subsumes the reference's daily
-      re-enqueue sweep (main.rs:286-307): same idempotence contract
-      (ledger-keyed skip), tighter cadence.
+    * every tick is a FULL zips-dir sweep — run_once re-globs the
+      directory (batch) or re-lists it through the stream checkpoint
+      (``streaming``) each time, so files that arrive out-of-band
+      (scp'd in, a crashed tick's leftovers, a previously failed ingest
+      that never reached the ledger) are picked up on the next tick.
+      This subsumes the reference's daily re-enqueue sweep
+      (main.rs:286-307): same idempotence contract (filename-keyed
+      skip), tighter cadence.
     * SIGINT/SIGTERM stop the loop GRACEFULLY (utils.rs:5-31): the
       in-flight tick finishes — ingest + ledger append + compaction
       swap are never interrupted mid-write, so the ledger stays
@@ -175,128 +204,15 @@ def run_loop(
             prev_handlers[sig] = signal.signal(sig, _on_signal)
     try:
         summaries = []
-        if not stop.is_set():
-            s = run_once(spark, workdir, feeds, sf_dir, mirror=mirror)
-            print(json.dumps({"event": "tick", **s}), flush=True)
-            summaries.append(s)
-        for _ in range(extra_ticks):
-            # urls.rs:176-184 poll cadence; wait() returns True on stop
-            if stop.wait(interval_sec):
+        for i in range(1 + extra_ticks):
+            # the first tick starts at once, later ones keep the poll
+            # cadence (urls.rs:176-184); wait() returns True on stop
+            if stop.wait(interval_sec) if i else stop.is_set():
                 break
-            s = run_once(spark, workdir, feeds, sf_dir, mirror=mirror)
-            print(json.dumps({"event": "tick", **s}), flush=True)
-            summaries.append(s)
-        if stop.is_set():
-            print(json.dumps({"event": "graceful_stop"}), flush=True)
-        return summaries
-    finally:
-        for sig, h in prev_handlers.items():
-            signal.signal(sig, h)
-
-
-def run_streaming(
-    spark,
-    workdir: str,
-    feeds: list[str],
-    sf_dir: str | None,
-    extra_ticks: int = 0,
-    interval_sec: float = 60.0,
-    stop: threading.Event | None = None,
-    mirror: str | None = None,
-) -> list[dict]:
-    """--streaming mode: the continuous deployment shape end-to-end on
-    Structured Streaming (SURVEY.md §2.9) instead of the batch loop.
-
-    The file-source checkpoint replaces the processed ledger's dedup
-    role — each ZIP is ingested exactly once across restarts with no
-    ledger hydration (streaming/ingest.py) — while the driver loop
-    keeps the parts a stream can't own: feed polling/downloads into the
-    landing dir, per-tick compaction, FPP outputs, and graceful
-    SIGINT/SIGTERM stop (query.stop() between micro-batches).
-
-    One tick == drain-everything-available (availableNow trigger), so
-    --once is a synchronous, testable unit exactly like the batch mode.
-    """
-    from nemscraper_spark.plans.compact import compact_table
-    from nemscraper_spark.plans.history import TableHistory
-    from nemscraper_spark.sources import fetch
-    from nemscraper_spark.streaming.ingest import start_ingest_stream
-
-    stop = stop or threading.Event()
-    prev_handlers = {}
-
-    def _on_signal(signum, frame):
-        print(
-            json.dumps({"event": "shutdown_signal", "signal": int(signum)}),
-            flush=True,
-        )
-        stop.set()
-
-    if threading.current_thread() is threading.main_thread():
-        for sig in (signal.SIGINT, signal.SIGTERM):
-            prev_handlers[sig] = signal.signal(sig, _on_signal)
-
-    zips_dir = os.path.join(workdir, "zips")
-    parquet_dir = os.path.join(workdir, "parquet")
-    history_root = os.path.join(workdir, "history")
-    output_dir = os.path.join(workdir, "output")
-    checkpoint_dir = os.path.join(workdir, "checkpoint")
-    for d in (zips_dir, parquet_dir, history_root, output_dir):
-        os.makedirs(d, exist_ok=True)
-
-    downloaded = TableHistory(spark, history_root, "downloaded")
-    processed = TableHistory(spark, history_root, "processed")
-
-    def _tick() -> dict:
-        summary: dict = {"downloaded": 0, "tables": {}, "compacted": {}}
-        if feeds:
-            seen = {r.filename for r in downloaded.read().collect()}
-            rows = fetch.poll_feeds_once(
-                feeds, zips_dir, already_downloaded=lambda n: n in seen
+            s = run_once(
+                spark, workdir, feeds, sf_dir, mirror=mirror, streaming=streaming
             )
-            if rows:
-                downloaded.add(rows)
-            summary["downloaded"] = len(rows)
-        # drain everything currently in the landing dir through the
-        # checkpointed stream; blocks until the micro-batch completes
-        q = start_ingest_stream(
-            spark,
-            zips_dir,
-            parquet_dir,
-            checkpoint_dir,
-            available_now=True,
-            history=processed,
-        )
-        q.awaitTermination()
-        for troot in sorted(glob.glob(os.path.join(parquet_dir, "*"))):
-            if os.path.isdir(troot):
-                res = compact_table(spark, troot)
-                if res:
-                    summary["compacted"][os.path.basename(troot)] = res
-        if mirror:
-            from nemscraper_spark.sources.sync import mirror_tree
-
-            summary["mirror"] = mirror_tree(parquet_dir, mirror)
-        if sf_dir:
-            from nemscraper_spark.queries.fpp_pipeline import performance
-
-            performance(spark, sf_dir).write.mode("overwrite").option(
-                "compression", "snappy"
-            ).parquet(os.path.join(output_dir, "04_performance.parquet"))
-            summary["outputs"] = 1
-        return summary
-
-    try:
-        summaries = []
-        if not stop.is_set():
-            s = _tick()
-            print(json.dumps({"event": "stream_tick", **s}), flush=True)
-            summaries.append(s)
-        for _ in range(extra_ticks):
-            if stop.wait(interval_sec):
-                break
-            s = _tick()
-            print(json.dumps({"event": "stream_tick", **s}), flush=True)
+            print(json.dumps({"event": "tick", **s}), flush=True)
             summaries.append(s)
         if stop.is_set():
             print(json.dumps({"event": "graceful_stop"}), flush=True)
@@ -333,8 +249,7 @@ def main() -> None:
 
     spark = get_spark(app_name="nem_pipeline")
     feeds = [] if args.landing_only else args.feed
-    runner = run_streaming if args.streaming else run_loop
-    runner(
+    run_loop(
         spark,
         args.workdir,
         feeds,
@@ -342,6 +257,7 @@ def main() -> None:
         extra_ticks=0 if args.once else args.loop,
         interval_sec=args.interval,
         mirror=args.mirror,
+        streaming=args.streaming,
     )
     spark.stop()
 

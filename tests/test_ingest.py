@@ -205,8 +205,8 @@ def test_compact_table_parallel_partitions(spark, tmp_path):
 
 
 def test_history_dedup_and_vacuum(spark, tmp_path):
-    """table_history.rs:188-275 semantics: add → filter_unseen → vacuum
-    → keys survive."""
+    """table_history.rs:188-275 semantics: add → vacuum → keys survive.
+    (Cross-tick dedup is the service tick's: tests/test_pipeline_script.py.)"""
     h = TableHistory(spark, str(tmp_path), "downloaded")
     from datetime import datetime
 
@@ -217,11 +217,6 @@ def test_history_dedup_and_vacuum(spark, tmp_path):
          "download_start": datetime(2024, 1, 2), "download_end": datetime(2024, 1, 2), "thread": 2},
     ]
     h.add(rows)
-    cands = spark.createDataFrame(
-        [("a.zip",), ("c.zip",)], "filename string"
-    )
-    unseen = h.filter_unseen(cands)
-    assert [r.filename for r in unseen.collect()] == ["c.zip"]
     # second add = the restart-and-rescan path
     h.add([dict(rows[0], filename="d.zip")])
     h.vacuum()
@@ -312,6 +307,6 @@ def test_compaction_file_uri_root(spark, multi_file_partition):
     assert rows == before
     assert spark.read.parquet(root).count() == before
     assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
-    from nemscraper_spark.sources.nemcsv import _parquet_rows
+    from nemscraper_spark.sources import fsutil
 
-    assert _parquet_rows(uri_root) == before
+    assert fsutil.parquet_rows(uri_root) == before

@@ -90,9 +90,12 @@ def test_connector_matches_splitter_on_malformed_grammar(spark, tmp_path):
             "D,A,B,1,y",
             "I,C,D,2,H3",
             "D,C,D,2,z",
+            # line-break characters other than \n inside a quoted field
+            'D,C,D,2,"form\x0cfeed"',
+            'D,C,D,2,"line\u2028sep"',
         ]
     )
-    (tmp_path / "m.csv").write_text(txt)
+    (tmp_path / "m.csv").write_bytes(txt.encode("utf-8"))
     register(spark)
     got = sorted(
         (r.table_key, r.headers, r.line)
@@ -110,6 +113,9 @@ def test_connector_matches_splitter_on_malformed_grammar(spark, tmp_path):
     )
     assert got == want
     assert ("A---B---1", "H,1\x1fH2", "D,A,B,1,y") in got
+    for row in ('D,C,D,2,"form\x0cfeed"', 'D,C,D,2,"line\u2028sep"'):
+        assert ("C---D---2", "H3", row) in got
+        assert ("C---D---2", "H3", row) in want
 
 
 def test_connector_empty_dir_yields_empty_frame(spark, tmp_path):

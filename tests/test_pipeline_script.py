@@ -4,6 +4,7 @@ ticks), compact, and write the FPP outputs."""
 
 from __future__ import annotations
 
+import glob
 import os
 import sys
 import zipfile
@@ -11,7 +12,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
-from run_pipeline import run_loop, run_once, run_streaming  # noqa: E402
+from run_pipeline import run_loop, run_once  # noqa: E402
 
 from nemscraper_spark.queries.ingest_ops import _NEM_CSV as NEM_CSV  # noqa: E402
 
@@ -197,17 +198,26 @@ def test_streaming_mode_checkpoint_exactly_once(spark, tmp_path):
             )
 
     _drop("20220720")
-    run_streaming(spark, str(work), [], None)
+    s1 = run_once(spark, str(work), [], None, streaming=True)
+    assert set(s1) == {"downloaded", "processed", "tables", "compacted"}
+    assert s1["processed"] == 1
+    assert s1["tables"]["FPP---UNIT_MW---1"] == 3
     table = os.path.join(str(work), "parquet", "FPP---UNIT_MW---1")
     assert spark.read.parquet(table).count() == 3
 
     # same file again: checkpoint suppresses re-ingest (no row growth)
-    run_streaming(spark, str(work), [], None)
+    s2 = run_once(spark, str(work), [], None, streaming=True)
+    assert s2["processed"] == 0
+    assert s2["tables"] == {}
     assert spark.read.parquet(table).count() == 3
 
-    # new arrival: next drain ingests exactly the new file's rows
+    # new arrival: next drain ingests exactly the new file's rows;
+    # ``tables`` carries the table's footer row total after the ingest
+    # (the conservation count), as in batch mode
     _drop("20220721")
-    run_streaming(spark, str(work), [], None)
+    s3 = run_once(spark, str(work), [], None, streaming=True)
+    assert s3["processed"] == 1
+    assert s3["tables"]["FPP---UNIT_MW---1"] == 6
     assert spark.read.parquet(table).count() == 6
     # the processed ledger recorded both files once each
     from nemscraper_spark.plans.history import TableHistory
@@ -218,3 +228,6 @@ def test_streaming_mode_checkpoint_exactly_once(spark, tmp_path):
         "PUBLIC_DISPATCHIS_20220720_0001.zip",
         "PUBLIC_DISPATCHIS_20220721_0001.zip",
     ]
+    # and every tick vacuumed it: one file per ledger partition
+    for part in glob.glob(os.path.join(led.path, "date=*")):
+        assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1

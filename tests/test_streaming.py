@@ -10,7 +10,7 @@ import zipfile
 
 from pyspark.sql import functions as F
 
-from nemscraper_spark.streaming.ingest import start_ingest_stream
+from nemscraper_spark.streaming.ingest import drain_ingest_stream
 from tests.test_ingest import D_ROWS_TOTAL, NEM_CSV
 
 
@@ -26,8 +26,8 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     os.makedirs(landing)
 
     _drop_zip(landing, "PUBLIC_A_20220720_0001.zip")
-    q = start_ingest_stream(spark, landing, out, ckpt, available_now=True)
-    q.awaitTermination(300)
+    names, _ = drain_ingest_stream(spark, landing, out, ckpt)
+    assert names == ["PUBLIC_A_20220720_0001.zip"]
     total = spark.read.parquet(os.path.join(out, "FPP---UNIT_MW---1")).count()
     total += spark.read.parquet(
         os.path.join(out, "FPP---REGION_FREQ_MEASURE---1")
@@ -38,8 +38,8 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     # file (M1/M2 — the reference's filename-keyed exactly-once) while
     # picking up a newly landed one
     _drop_zip(landing, "PUBLIC_B_20220721_0002.zip")
-    q2 = start_ingest_stream(spark, landing, out, ckpt, available_now=True)
-    q2.awaitTermination(300)
+    names2, _ = drain_ingest_stream(spark, landing, out, ckpt)
+    assert names2 == ["PUBLIC_B_20220721_0002.zip"]
     total2 = spark.read.parquet(os.path.join(out, "FPP---UNIT_MW---1")).count()
     total2 += spark.read.parquet(
         os.path.join(out, "FPP---REGION_FREQ_MEASURE---1")
