@@ -20,12 +20,15 @@ that already proved out for MinHash (training_data.minhash_*_md5):
   consume exact integers, so IEEE-754 determinism guarantees the same
   double on both engines.
 
-The production xxhash/float paths stay registered (rows-only + recall
-pins in tests/test_training_ops.py); these twins are the correctness
-gate the driver can hash.  Reference parity: the reference has no ANN
-surface (nemscraper is an ingest engine) — this family is part of the
-training-data pipeline extension (FAISS IVF/PQ layout re-expressed on
-DataFrames; Jégou et al., TPAMI'11 for PQ/ADC).
+The twins and the float paths run the same IVF/PQ/ADC code —
+operators/ann.py (nearest centroid, Lloyd, PQ encode, ADC tables and
+scoring, the top-5 window) — and differ only in the grid, the training
+sample and the dtype they feed it.  The float paths stay registered
+(rows-only + recall pins in tests/test_training_ops.py); these twins
+are the correctness gate the driver can hash.  Reference parity: the
+reference has no ANN surface (nemscraper is an ingest engine) — this
+family is part of the training-data pipeline extension (FAISS IVF/PQ
+layout re-expressed on DataFrames; Jégou et al., TPAMI'11 for PQ/ADC).
 """
 
 from __future__ import annotations
@@ -34,6 +37,16 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from nemscraper_spark.operators.ann import (
+    adc_tables,
+    adc_top5,
+    ivf_assign,
+    ivf_pairs,
+    lloyd,
+    pq_encode,
+    top5,
+    train_pq,
+)
 from nemscraper_spark.queries.common import load_table, register
 
 DIM = 64
@@ -212,38 +225,37 @@ def _id_sample_rows(e, n: int):
     return rows
 
 
-def _int_cosine(pairs):
-    """(query_id, qe, neighbor_id, ce) → + cosine.  Dot/norms are
-    bigint aggregates (exact); the final double math is the oracle's
-    op-for-op: dot / (sqrt(qq) * sqrt(cc)), rounded to 9dp."""
+def _int_queries(e):
+    """{vec_id: int64 vector} of the grid's query vectors (vec_id < 10)."""
+    import numpy as np
+
+    return {
+        int(r.vec_id): np.asarray(r.e, dtype=np.int64)
+        for r in e.filter(F.col("vec_id") < 10).collect()
+    }
+
+
+def _int_cos9():
+    """Spark twin of _COS9 over the array<bigint> columns qe and ce:
+    dot and norms are exact bigint aggregates, the double math is the
+    oracle's op-for-op — dot / (sqrt(qq) * sqrt(cc)), rounded to 9dp."""
 
     def idot(a, b):
         return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
+            F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
             F.lit(0).cast("long"),
             lambda acc, v: acc + v,
         )
 
-    dot = idot(F.col("qe"), F.col("ce"))
-    qq = idot(F.col("qe"), F.col("qe"))
-    cc = idot(F.col("ce"), F.col("ce"))
-    return pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot.cast("double") / (F.sqrt(qq.cast("double")) * F.sqrt(cc.cast("double"))),
-            9,
-        ).alias("cosine"),
-    )
+    qq, cc = idot("qe", "qe").cast("double"), idot("ce", "ce").cast("double")
+    return F.round(idot("qe", "ce").cast("double") / (F.sqrt(qq) * F.sqrt(cc)), 9)
 
 
-def _rank_top5_cos(scored):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+def _cos_top5(pairs):
+    """(query_id, qe, neighbor_id, ce) pairs → each query's top 5 by
+    exact-int cosine (ties → lower neighbor_id)."""
+    scored = pairs.select("query_id", "neighbor_id", _int_cos9().alias("cosine"))
+    return top5(scored, "cosine", desc=True)
 
 
 # ------------------------------------------------------------------ LSH --
@@ -347,7 +359,7 @@ def ann_lsh_cosine_md5(spark, sf_dir):
         .join(c, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    return _rank_top5_cos(_int_cosine(pairs))
+    return _cos_top5(pairs)
 
 
 _LSH_RECALL_ORACLE = f"""
@@ -393,8 +405,6 @@ def ann_lsh_recall_report(spark, sf_dir):
     (queries broadcast, corpus scanned once — the same bounded
     ground-truth sample a production recall monitor scores against a
     full scan or a golden set)."""
-    from pyspark.sql import Window
-
     lsh5 = ann_lsh_cosine_md5(spark, sf_dir).select(
         "query_id", F.col("neighbor_id").alias("hit_id")
     )
@@ -407,15 +417,7 @@ def ann_lsh_recall_report(spark, sf_dir):
         F.broadcast(q)
         .join(c, q.query_id != c.neighbor_id)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    ex5 = (
-        _int_cosine(pairs)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id")
-    )
+    ex5 = _cos_top5(pairs).select("query_id", "neighbor_id")
     j = ex5.join(
         lsh5,
         (ex5.query_id == lsh5.query_id) & (ex5.neighbor_id == lsh5.hit_id),
@@ -462,48 +464,12 @@ def ann_ivf_cosine_md5(spark, sf_dir):
     with ties → lower cid, nprobe=2 probe, exact-cosine re-rank.
     The corpus pass is one Arrow kernel (exact integer GEMM) + one
     broadcast equi-join on cid — the production plan shape."""
+    import numpy as np
+
     e = _int_grid(spark, sf_dir)  # session-cached + persisted
-    cmat = _md5_sample_rows(e, 8)
-
-    def assign_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(cmat, dtype=np.float64)  # integer-valued: exact GEMM
-        kc = C.shape[0]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-            dots = X @ C.T
-            order = np.lexsort((np.tile(np.arange(kc), (n, 1)), -dots), axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cid": order[:, 0].astype("int64"),
-                    "cid2": order[:, 1].astype("int64"),
-                    "e": pdf["e"],
-                }
-            )
-
-    assigned = e.mapInPandas(
-        assign_fn, schema="vec_id long, cid long, cid2 long, e array<long>"
-    )
-    lists = assigned.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce"), "cid"
-    )
-    probes = assigned.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.explode(F.array(F.col("cid"), F.col("cid2"))).alias("cid"),
-    )
-    pairs = (
-        F.broadcast(probes)
-        .join(lists, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _rank_top5_cos(_int_cosine(pairs))
+    # integer-valued doubles: the float GEMM is exact
+    C = np.asarray(_md5_sample_rows(e, 8), dtype=np.float64)
+    return _cos_top5(ivf_pairs(ivf_assign(e, C)))
 
 
 # ------------------------------------------------------------------- PQ --
@@ -528,31 +494,6 @@ SEED_K = 16
 M_SUB, SUB_DIM = 8, 8
 PQ_ROUNDS = 2      # subspace-codebook Lloyd rounds
 COARSE_ROUNDS = 2  # coarse-quantizer Lloyd rounds (IVF-PQ twin)
-
-
-def _train_books_int(train, rounds: int = PQ_ROUNDS) -> list[list[int]]:
-    """Integer Lloyd per subspace over the (n, 64) int training matrix;
-    returns the trained codebook as (K, 64) ints (subspace blocks).
-    Mirrors the SQL CTE chain op-for-op: exact integer d2, argmin ties
-    to the lower code, FLOOR(sum/count) recentering."""
-    import numpy as np
-
-    T = np.asarray(train, dtype=np.int64)
-    books = np.empty((SEED_K, M_SUB * SUB_DIM), dtype=np.int64)
-    for m in range(M_SUB):
-        Xs = T[:, m * SUB_DIM : (m + 1) * SUB_DIM]
-        cb = Xs[:SEED_K].copy()
-        for _ in range(rounds):
-            d2 = ((Xs[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            near = d2.argmin(axis=1)  # ties -> lower code
-            for c in range(SEED_K):
-                mask = near == c
-                if mask.any():
-                    cb[c] = np.floor(
-                        Xs[mask].sum(axis=0) / mask.sum()
-                    ).astype(np.int64)
-        books[:, m * SUB_DIM : (m + 1) * SUB_DIM] = cb
-    return [[int(x) for x in row] for row in books]
 
 
 def _r_cols(src: str, comp) -> str:
@@ -683,84 +624,12 @@ def ann_pq_adc_md5(spark, sf_dir):
     the full train→encode→ADC chain, including the Lloyd loop the
     float production path can't replay.  Corpus passes are shuffle-free
     Arrow kernels, same as production."""
-    from pyspark.sql import Window
-
-    e = _norm_grid(spark, sf_dir)
-    books = _train_books_int(_id_sample_rows(e, TRAIN_N))
-
-    def encode_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        B = np.asarray(books, dtype=np.int64)  # (K, DIM)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["e"]])
-            codes = np.empty((len(X), 8), dtype=np.int64)
-            for m in range(8):
-                Xs = X[:, m * 8 : (m + 1) * 8]
-                Bs = B[:, m * 8 : (m + 1) * 8]
-                d2 = ((Xs[:, None, :] - Bs[None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)  # ties → lower code
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "codes": [list(map(int, c)) for c in codes],
-                }
-            )
-
-    encoded = e.mapInPandas(encode_fn, schema="vec_id long, codes array<int>")
-
     import numpy as np
 
-    B = np.asarray(books, dtype=np.int64)
-    qrows = sorted(
-        (int(r.vec_id), [int(x) for x in r.e])
-        for r in e.filter(F.col("vec_id") < 10).collect()
-    )
-    qtables = {}
-    for qid, qe in qrows:
-        qv = np.asarray(qe, dtype=np.int64)
-        t = np.empty((M_SUB, SEED_K), dtype=np.int64)
-        for m in range(M_SUB):
-            qs = qv[m * SUB_DIM : (m + 1) * SUB_DIM]
-            t[m] = (
-                (B[:, m * SUB_DIM : (m + 1) * SUB_DIM] - qs[None, :]) ** 2
-            ).sum(axis=1)
-        qtables[qid] = [[int(x) for x in row] for row in t]
-
-    def adc_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        tables = {q: np.asarray(t, dtype=np.int64) for q, t in qtables.items()}
-        cols = np.arange(8)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            nid = pdf["vec_id"].astype("int64").to_numpy()
-            out_q, out_n, out_d = [], [], []
-            for q, t in tables.items():
-                d = t[cols, C].sum(axis=1)
-                keep = nid != q
-                out_q.append(np.full(keep.sum(), q, dtype=np.int64))
-                out_n.append(nid[keep])
-                out_d.append(d[keep])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc_dist": np.concatenate(out_d),
-                }
-            )
-
-    scored = encoded.mapInPandas(
-        adc_fn, schema="query_id long, neighbor_id long, adc_dist long"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+    e = _norm_grid(spark, sf_dir)
+    S = np.asarray(_id_sample_rows(e, TRAIN_N), dtype=np.int64)
+    books = train_pq(S, M_SUB, SEED_K, PQ_ROUNDS)
+    return adc_top5(pq_encode(e, books), adc_tables(_int_queries(e), books))
 
 
 # --------------------------------------------------------------- IVF-PQ --
@@ -863,125 +732,18 @@ def ann_ivfpq_adc_md5(spark, sf_dir):
     hashes it end to end.  Encode and score are shuffle-free Arrow
     kernels; per-query scan work is ~nprobe/k of the corpus, as in
     production."""
-    from pyspark.sql import Window
-
     import numpy as np
 
-    KC = 8
     e = _norm_grid(spark, sf_dir)  # session-cached + persisted
-
-    # coarse quantizer: integer Lloyd over the md5 training sample
-    # (seed = its first 8 rows, max-dot assignment ties -> lower cid,
-    # floor-mean recenter) — mirrors _coarse_lloyd_ctes op-for-op
+    # coarse quantizer and residual codebooks: integer Lloyd over the
+    # first-256-by-id sample — mirrors _coarse_lloyd_ctes and the
+    # per-m _lloyd_ctes op-for-op
     S = np.asarray(_id_sample_rows(e, TRAIN_N), dtype=np.int64)
-    cmat = S[:KC].copy()
-    for _ in range(COARSE_ROUNDS):
-        near = np.lexsort(
-            (np.tile(np.arange(KC), (len(S), 1)), -(S @ cmat.T)), axis=1
-        )[:, 0]
-        for c in range(KC):
-            mk = near == c
-            if mk.any():
-                cmat[c] = np.floor(S[mk].sum(axis=0) / mk.sum()).astype(np.int64)
-
-    # residual training set: the sample minus each row's own nearest
-    # (max-dot, ties -> lower cid) trained coarse centroid
-    s_cid = np.lexsort(
-        (np.tile(np.arange(KC), (len(S), 1)), -(S @ cmat.T)), axis=1
-    )[:, 0]
-    books = _train_books_int(S - cmat[s_cid])
-    cmat_l = [[int(x) for x in row] for row in cmat]
-
-    def encode_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(cmat_l, dtype=np.int64)
-        B = np.asarray(books, dtype=np.int64)
-        kc = C.shape[0]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["e"]])
-            dots = X @ C.T
-            cid = np.lexsort((np.tile(np.arange(kc), (n, 1)), -dots), axis=1)[:, 0]
-            R = X - C[cid]
-            codes = np.empty((n, 8), dtype=np.int64)
-            for m in range(8):
-                Rs = R[:, m * 8 : (m + 1) * 8]
-                Bs = B[:, m * 8 : (m + 1) * 8]
-                d2 = ((Rs[:, None, :] - Bs[None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cid": cid.astype("int64"),
-                    "codes": [list(map(int, c)) for c in codes],
-                }
-            )
-
-    encoded = e.mapInPandas(
-        encode_fn, schema="vec_id long, cid long, codes array<int>"
+    C = lloyd(S, 8, COARSE_ROUNDS)
+    books = train_pq(S, M_SUB, SEED_K, PQ_ROUNDS, coarse=C)
+    return adc_top5(
+        pq_encode(e, books, coarse=C), adc_tables(_int_queries(e), books, coarse=C)
     )
-
-    # per-(query, probed-list) integer ADC tables — 10 × 2 × M × K
-    Bn = np.asarray(books, dtype=np.int64)
-    qrows = sorted(
-        (int(r.vec_id), [int(x) for x in r.e])
-        for r in e.filter(F.col("vec_id") < 10).collect()
-    )
-    qtables = {}
-    for qid, qe in qrows:
-        qv = np.asarray(qe, dtype=np.int64)
-        dots = qv @ cmat.T
-        order = np.lexsort((np.arange(KC), -dots))
-        for pcid in order[:2]:
-            qr = qv - cmat[pcid]
-            t = np.empty((M_SUB, SEED_K), dtype=np.int64)
-            for m in range(M_SUB):
-                qs = qr[m * SUB_DIM : (m + 1) * SUB_DIM]
-                t[m] = (
-                    (Bn[:, m * SUB_DIM : (m + 1) * SUB_DIM] - qs[None, :]) ** 2
-                ).sum(axis=1)
-            qtables[(qid, int(pcid))] = [[int(x) for x in row] for row in t]
-
-    def adc_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        tables = {qc: np.asarray(t, dtype=np.int64) for qc, t in qtables.items()}
-        cols = np.arange(8)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Cd = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            nid = pdf["vec_id"].astype("int64").to_numpy()
-            ncid = pdf["cid"].astype("int64").to_numpy()
-            out_q, out_n, out_d = [], [], []
-            for (q, pcid), t in tables.items():
-                keep = (ncid == pcid) & (nid != q)
-                if not keep.any():
-                    continue
-                d = t[cols, Cd[keep]].sum(axis=1)
-                out_q.append(np.full(keep.sum(), q, dtype=np.int64))
-                out_n.append(nid[keep])
-                out_d.append(d)
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc_dist": np.concatenate(out_d),
-                }
-            )
-
-    scored = encoded.mapInPandas(
-        adc_fn, schema="query_id long, neighbor_id long, adc_dist long"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
 
 
 @register("sketch_profile_exact", oracle="""
@@ -1093,16 +855,6 @@ def rank_fusion_rrf(spark, sf_dir):
     c = e.select(F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce"))
     pairs = F.broadcast(q).join(c, q.query_id != c.neighbor_id)
 
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    dot = idot(F.col("qe"), F.col("ce"))
-    qq = idot(F.col("qe"), F.col("qe"))
-    cc = idot(F.col("ce"), F.col("ce"))
     ham = F.aggregate(
         F.zip_with(
             F.col("qe"),
@@ -1115,11 +867,7 @@ def rank_fusion_rrf(spark, sf_dir):
     sc = pairs.select(
         "query_id",
         "neighbor_id",
-        F.round(
-            dot.cast("double")
-            / (F.sqrt(qq.cast("double")) * F.sqrt(cc.cast("double"))),
-            9,
-        ).alias("cosine"),
+        _int_cos9().alias("cosine"),
         ham.alias("ham"),
     )
     wc = Window.partitionBy("query_id").orderBy(

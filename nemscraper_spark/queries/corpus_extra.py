@@ -13,10 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from nemscraper_spark.operators.ann import ivf_assign, top5
 from nemscraper_spark.queries.common import load_table, register
 from nemscraper_spark.queries.ann_twins import (
     _COS9,
     _IV_SQL,
+    _int_cos9,
     _int_grid,
     _md5_sample_rows,
 )
@@ -126,35 +128,15 @@ def _semantic_pairs_build(spark, sf_dir):
     import math
     import os
 
+    import numpy as np
+
     from nemscraper_spark.sources.inspect import footer_row_count
 
     n_docs = footer_row_count(os.path.join(sf_dir, "embeddings.parquet"))
     k = max(8, math.ceil(n_docs / _SEMDEDUP_TARGET))
     e = _int_grid(spark, sf_dir)
-    cmat = _md5_sample_rows(e, k)
-
-    def assign_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(cmat, dtype=np.float64)  # integer-valued: exact
-        kc = C.shape[0]
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-            dots = X @ C.T
-            order = np.lexsort((np.tile(np.arange(kc), (n, 1)), -dots), axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cid": order[:, 0].astype("int64"),
-                    "e": pdf["e"],
-                }
-            )
-
-    asg = e.mapInPandas(assign_fn, schema="vec_id long, cid long, e array<long>")
+    # integer-valued doubles: the float GEMM is exact
+    asg = ivf_assign(e, np.asarray(_md5_sample_rows(e, k), dtype=np.float64))
     a = asg.select(
         "cid", F.col("vec_id").alias("keep_id"), F.col("e").alias("qe")
     )
@@ -162,24 +144,8 @@ def _semantic_pairs_build(spark, sf_dir):
         "cid", F.col("vec_id").alias("drop_id"), F.col("e").alias("ce")
     )
     pairs = a.join(b, "cid").filter(F.col("keep_id") < F.col("drop_id"))
-
-    def idot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    cosine = F.round(
-        idot(F.col("qe"), F.col("ce")).cast("double")
-        / (
-            F.sqrt(idot(F.col("qe"), F.col("qe")).cast("double"))
-            * F.sqrt(idot(F.col("ce"), F.col("ce")).cast("double"))
-        ),
-        9,
-    )
     return pairs.select(
-        "cid", "keep_id", "drop_id", cosine.alias("cosine")
+        "cid", "keep_id", "drop_id", _int_cos9().alias("cosine")
     ).filter(F.col("cosine") >= 0.4)
 
 
@@ -276,8 +242,6 @@ def hard_negative_mining(spark, sf_dir):
     through the same IVF/LSH bucketing as the ANN family — the mining
     loop is ann_*'s plan with a label-inequality filter on the
     candidate list, which this query pins exactly."""
-    from pyspark.sql import Window
-
     e = _int_grid(spark, sf_dir)
     lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     el = e.join(lab, "vec_id")
@@ -292,31 +256,10 @@ def hard_negative_mining(spark, sf_dir):
         F.col("label").alias("neg_label"),
     )
     pairs = F.broadcast(q).join(c, F.col("q_label") != F.col("neg_label"))
-
-    def idot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, r: p * r),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    cosine = F.round(
-        idot(F.col("qe"), F.col("ce")).cast("double")
-        / (
-            F.sqrt(idot(F.col("qe"), F.col("qe")).cast("double"))
-            * F.sqrt(idot(F.col("ce"), F.col("ce")).cast("double"))
-        ),
-        9,
-    )
     scored = pairs.select(
-        "query_id", "neighbor_id", "neg_label", cosine.alias("cosine")
+        "query_id", "neighbor_id", "neg_label", _int_cos9().alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
-    )
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= 5
-    )
+    return top5(scored, "cosine", desc=True)
 
 
 # -------------------------------------------- linear quality score --

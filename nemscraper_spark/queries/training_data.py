@@ -22,6 +22,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from nemscraper_spark.operators.ann import (
+    adc_tables,
+    adc_top5,
+    ivf_assign,
+    ivf_pairs,
+    lloyd,
+    nearest,
+    pq_encode,
+    top5,
+    train_pq,
+)
 from nemscraper_spark.queries.common import (
     fan_out,
     fan_out_sized,
@@ -1469,7 +1480,7 @@ def ann_ivf_cosine(spark, sf_dir):
 
     Coarse quantizer: k=8 centroids from 2 deterministic Lloyd
     iterations seeded with the first k vectors (no RNG — reproducible
-    anywhere), built entirely with explode/groupBy/avg DataFrame ops.
+    anywhere), recentered from per-partition (count, sum) partials.
     Every vector is assigned to its nearest centroid (the inverted
     list); queries probe their own list plus the next-nearest (nprobe=2)
     and exact-cosine re-rank top-5.
@@ -1478,7 +1489,7 @@ def ann_ivf_cosine(spark, sf_dir):
     (k x dim doubles — tiny by design, the MLlib k-means pattern) and
     re-enter the plan as LITERALS, so assignment is a pure projection:
     no crossJoin, no window, no shuffle. The per-iteration re-centering
-    is one partial-aggregated groupBy(cid) with per-dimension sums.
+    collects num_partitions x k (count, sum-vector) partial rows.
     The probe join is a broadcast equi-join on centroid id — candidate
     set shrinks by ~nprobe/k vs brute force, and k scales to 2^16 with
     the same plan shape.
@@ -1493,6 +1504,7 @@ def ann_ivf_cosine(spark, sf_dir):
     # invocation, each consulted during the planning of every later
     # query); the returned plan's own two references re-read the cheap
     # projection instead (guide §5: unpersist when done).
+    import numpy as np
     from pyspark import StorageLevel
 
     e = (
@@ -1503,41 +1515,6 @@ def ann_ivf_cosine(spark, sf_dir):
 
     k = 8
     dim = 64
-
-    def assign(cents):
-        # numpy kernel in mapInPandas: one (n x dim) @ (dim x k) GEMM
-        # per Arrow batch, argsort by (-dot, cid), e passed through so
-        # no re-join with the input. The JVM alternative (k sorted
-        # structs of 64-literal dot trees) explodes analysis + codegen
-        # time, and runs interpreted — Arrow+numpy is the fast path for
-        # dense numeric kernels. Ties break by centroid id, matching
-        # the sorted-struct semantics this replaces.
-        cmat = [list(map(float, c)) for _, c in cents]
-
-        def fn(batches):
-            import numpy as np
-            import pandas as pd
-
-            C = np.asarray(cmat, dtype=np.float64)  # (k, dim)
-            for pdf in batches:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-                dots = X @ C.T  # (n, k); nearest == max dot
-                order = np.lexsort(
-                    (np.tile(np.arange(C.shape[0]), (n, 1)), -dots), axis=1
-                )
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].astype("int64"),
-                        "cid": order[:, 0].astype("int64"),
-                        "cid2": order[:, 1].astype("int64"),
-                        "e": pdf["e"],
-                    }
-                )
-
-        return fn
 
     def recenter_partials(cents):
         # per-partition (cid, count, sum-vector) partials — k x dim
@@ -1557,9 +1534,7 @@ def ann_ivf_cosine(spark, sf_dir):
                 if len(pdf) == 0:
                     continue
                 X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-                near = np.lexsort(
-                    (np.tile(np.arange(k_), (len(X), 1)), -(X @ C.T)), axis=1
-                )[:, 0]
+                near = nearest(X, C, 1)[:, 0]
                 for c in range(k_):
                     m = near == c
                     cnt[c] += int(m.sum())
@@ -1581,8 +1556,6 @@ def ann_ivf_cosine(spark, sf_dir):
         for r in e_pinned.filter(F.col("vec_id") < k).collect()
     )
     for _ in range(2):  # Lloyd iterations — tiny collect per round
-        import numpy as np
-
         parts = e_pinned.mapInPandas(
             recenter_partials(cents), schema="cid long, n long, s array<double>"
         ).collect()
@@ -1596,33 +1569,19 @@ def ann_ivf_cosine(spark, sf_dir):
         )
     e_pinned.unpersist()  # iterations done — no session-lifetime entry
 
-    assigned = e.mapInPandas(
-        assign(cents), schema="vec_id long, cid long, cid2 long, e array<double>"
-    )
-    lists = assigned.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce"), "cid"
-    )
-    probes = (
-        assigned.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            # nprobe=2: own list + next-nearest
-            F.explode(F.array(F.col("cid"), F.col("cid2"))).alias("cid"),
-        )
-    )
+    assigned = ivf_assign(e, np.asarray([c for _, c in cents], dtype=np.float64))
+    return top5(pairwise_cosine9(ivf_pairs(assigned)), "cosine", desc=True)
 
-    cand = F.broadcast(probes).join(lists, "cid").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    from pyspark.sql import Window
 
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairwise_cosine9(cand)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-    )
+def _unit_sample(e):
+    """The float PQ training sample: the vectors with vec_id < 256, in
+    vec_id order, L2-normalized → (vec_ids, (n, dim) array)."""
+    import numpy as np
+
+    rows = sorted(e.filter(F.col("vec_id") < 256).collect())
+    sample = np.stack([np.asarray(r.e, dtype=np.float64) for r in rows])
+    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
+    return [int(r.vec_id) for r in rows], sample
 
 
 @register("ann_pq_adc", oracle=None, tags=("similarity", "quantize"))
@@ -1647,102 +1606,21 @@ def ann_pq_adc(spark, sf_dir):
     (recall floor vs cosine_topk_bruteforce pinned in tests). At 100TB
     this composes with ann_ivf_cosine: coarse IVF probe prunes the
     candidate set, PQ codes re-rank it without reading raw vectors."""
-    from pyspark.sql import Window
+    import numpy as np
 
-    M, SUB, K = 8, 8, 16
+    M, K = 8, 16
     e = _emb_sized(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-
-    import numpy as np
-
-    sample = np.stack(
-        [
-            np.asarray(r.e, dtype=np.float64)
-            for r in sorted(e.filter(F.col("vec_id") < 256).collect())
-        ]
-    )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-    books = []  # books[m]: (K, SUB)
-    for m in range(M):
-        Xs = sample[:, m * SUB : (m + 1) * SUB]
-        cb = Xs[:K].copy()  # deterministic seed: first K sample rows
-        for _ in range(2):  # Lloyd on the sample, ties -> lower code
-            d2 = ((Xs[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            near = d2.argmin(axis=1)
-            for c in range(K):
-                if (near == c).any():
-                    cb[c] = Xs[near == c].mean(axis=0)
-        books.append([[float(x) for x in row] for row in cb])
-
-    def encode_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        B = np.asarray(books, dtype=np.float64)  # (M, K, SUB)
-        m_, k_, s_ = B.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-            X = X / np.linalg.norm(X, axis=1, keepdims=True)
-            codes = np.empty((len(X), m_), dtype=np.int64)
-            for m in range(m_):
-                Xs = X[:, m * s_ : (m + 1) * s_]
-                d2 = ((Xs[:, None, :] - B[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)  # argmin ties -> lower code
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "codes": [list(map(int, c)) for c in codes],
-                }
-            )
-
-    encoded = e.mapInPandas(encode_fn, schema="vec_id long, codes array<int>")
+    _, sample = _unit_sample(e)
+    books = train_pq(sample, M, K, rounds=2)
 
     # per-query ADC tables from the EXACT query vectors (tiny: 10xMxK)
-    qrows = sorted(e.filter(F.col("vec_id") < 10).collect())
-    qtables = {}
-    for r in qrows:
+    queries = {}
+    for r in e.filter(F.col("vec_id") < 10).collect():
         qv = np.asarray(r.e, dtype=np.float64)
-        qv = qv / np.linalg.norm(qv)
-        t = np.empty((M, K))
-        for m in range(M):
-            qs = qv[m * SUB : (m + 1) * SUB]
-            t[m] = ((np.asarray(books[m]) - qs[None, :]) ** 2).sum(axis=1)
-        qtables[int(r.vec_id)] = [[float(x) for x in row] for row in t]
-
-    def adc_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        tables = {q: np.asarray(t) for q, t in qtables.items()}
-        cols = np.arange(8)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            nid = pdf["vec_id"].astype("int64").to_numpy()
-            out_q, out_n, out_d = [], [], []
-            for q, t in tables.items():
-                d = t[cols, C].sum(axis=1)  # (n,) — M lookups summed
-                keep = nid != q
-                out_q.append(np.full(keep.sum(), q, dtype=np.int64))
-                out_n.append(nid[keep])
-                out_d.append(np.round(d[keep], 9))
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc_dist": np.concatenate(out_d),
-                }
-            )
-
-    scored = encoded.mapInPandas(
-        adc_fn, schema="query_id long, neighbor_id long, adc_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
+        queries[int(r.vec_id)] = qv / np.linalg.norm(qv)
+    return adc_top5(pq_encode(e, books, l2=True), adc_tables(queries, books))
 
 
 # ------------------------------------------------------------- text ops --
@@ -2517,139 +2395,24 @@ def ann_ivfpq_adc(spark, sf_dir):
     a query's probed lists are skipped inside the kernel, so scan work
     per query is ~nprobe/k of the corpus. Recall floor vs the exact
     brute force pinned in tests/test_training_ops.py."""
-    from pyspark.sql import Window
-
-    KC, M, SUB, K = 8, 8, 8, 16  # coarse lists; PQ subspaces x entries
+    KC, M, K = 8, 8, 16  # coarse lists; PQ subspaces x entries
     e = _emb_sized(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
+    ids, sample = _unit_sample(e)
 
-    import numpy as np
-
-    sample = np.stack(
-        [
-            np.asarray(r.e, dtype=np.float64)
-            for r in sorted(e.filter(F.col("vec_id") < 256).collect())
-        ]
-    )
-    sample /= np.linalg.norm(sample, axis=1, keepdims=True)
-
-    # coarse quantizer on the sample (first-KC seed, 2 Lloyd rounds,
-    # max-dot assignment with ties -> lower cid)
-    C = sample[:KC].copy()
-    for _ in range(2):
-        near = np.lexsort(
-            (np.tile(np.arange(KC), (len(sample), 1)), -(sample @ C.T)), axis=1
-        )[:, 0]
-        for c in range(KC):
-            if (near == c).any():
-                C[c] = sample[near == c].mean(axis=0)
-    near = np.lexsort(
-        (np.tile(np.arange(KC), (len(sample), 1)), -(sample @ C.T)), axis=1
-    )[:, 0]
-
-    # residual PQ codebooks on the sample residuals
-    resid = sample - C[near]
-    books = []
-    for m in range(M):
-        Xs = resid[:, m * SUB : (m + 1) * SUB]
-        cb = Xs[:K].copy()
-        for _ in range(2):
-            d2 = ((Xs[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            nr = d2.argmin(axis=1)
-            for c in range(K):
-                if (nr == c).any():
-                    cb[c] = Xs[nr == c].mean(axis=0)
-        books.append([[float(x) for x in row] for row in cb])
-    cmat = [[float(x) for x in row] for row in C]
-
-    def encode_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        Cm = np.asarray(cmat, dtype=np.float64)
-        B = np.asarray(books, dtype=np.float64)  # (M, K, SUB)
-        kc = Cm.shape[0]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-            X = X / np.linalg.norm(X, axis=1, keepdims=True)
-            cid = np.lexsort(
-                (np.tile(np.arange(kc), (len(X), 1)), -(X @ Cm.T)), axis=1
-            )[:, 0]
-            R = X - Cm[cid]
-            codes = np.empty((len(X), B.shape[0]), dtype=np.int64)
-            for m in range(B.shape[0]):
-                Rs = R[:, m * SUB : (m + 1) * SUB]
-                d2 = ((Rs[:, None, :] - B[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cid": cid.astype("int64"),
-                    "codes": [list(map(int, c)) for c in codes],
-                }
-            )
-
-    encoded = e.mapInPandas(
-        encode_fn, schema="vec_id long, cid long, codes array<int>"
-    )
+    # coarse quantizer (max-dot Lloyd) + residual PQ codebooks, both on
+    # the sample
+    C = lloyd(sample, KC, rounds=2)
+    books = train_pq(sample, M, K, rounds=2, coarse=C)
 
     # per-(query, probed-list) ADC tables from the EXACT query vectors
-    # (10 queries x nprobe x M x K floats — tiny); queries sit in the
-    # training sample by construction (vec_id < 10 < 256)
-    qtables = {}  # (q, cid) -> (M, K) table
-    qn = sample[:10]
-    q_probe = np.lexsort(
-        (np.tile(np.arange(KC), (len(qn), 1)), -(qn @ C.T)), axis=1
-    )[:, :2]
-    for qi in range(len(qn)):
-        for cid in q_probe[qi]:
-            qr = qn[qi] - C[cid]
-            t = np.empty((M, K))
-            for m in range(M):
-                qs = qr[m * SUB : (m + 1) * SUB]
-                t[m] = ((np.asarray(books[m]) - qs[None, :]) ** 2).sum(axis=1)
-            qtables[(qi, int(cid))] = [[float(x) for x in row] for row in t]
-
-    def adc_fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        tables = {qc: np.asarray(t) for qc, t in qtables.items()}
-        cols = np.arange(8)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Cd = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            nid = pdf["vec_id"].astype("int64").to_numpy()
-            cid = pdf["cid"].astype("int64").to_numpy()
-            out_q, out_n, out_d = [], [], []
-            for (q, lc), t in tables.items():
-                # candidates: this batch's members of the probed list
-                keep = (cid == lc) & (nid != q)
-                if not keep.any():
-                    continue
-                d = t[cols, Cd[keep]].sum(axis=1)
-                out_q.append(np.full(int(keep.sum()), q, dtype=np.int64))
-                out_n.append(nid[keep])
-                out_d.append(np.round(d, 9))
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc_dist": np.concatenate(out_d),
-                }
-            )
-
-    scored = encoded.mapInPandas(
-        adc_fn, schema="query_id long, neighbor_id long, adc_dist double"
+    # (10 queries x nprobe x M x K floats — tiny), keyed by vec_id;
+    # queries sit in the training sample by construction (vec_id < 256)
+    queries = {v: sample[i] for i, v in enumerate(ids) if v < 10}
+    return adc_top5(
+        pq_encode(e, books, coarse=C, l2=True), adc_tables(queries, books, coarse=C)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), "neighbor_id")
-    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 5)
 
 
 _SIGS_SQL = f"""

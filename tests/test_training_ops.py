@@ -97,6 +97,26 @@ def test_ann_recall_vs_bruteforce(spark, sf_dir):
         assert hits / total >= floor, f"{name} recall {hits/total:.2f}"
 
 
+def test_ann_ivfpq_query_ids_are_vec_ids(spark, sf_dir, tmp_path):
+    """IVF-PQ queries are labelled by vec_id, not by their position in
+    the training sample: with vec_id 3 missing, the query ids are the
+    present ids below 10 and no query returns itself."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    t = t.filter(pc.not_equal(t["vec_id"], 3))
+    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    present = {v for v in t["vec_id"].to_pylist() if v < 10}
+    assert 3 not in present and len(present) == 9
+
+    rows = REGISTRY["ann_ivfpq_adc"].fn(spark, str(tmp_path)).collect()
+    assert {r.query_id for r in rows} == present
+    assert all(r.neighbor_id != r.query_id for r in rows)
+
+
 def test_simhash_similar_docs_close(spark, sf_dir):
     """Near-dup pairs (by exact Jaccard) must have small simhash
     hamming distance vs the corpus median — the property that makes
