@@ -264,11 +264,11 @@ def _dedup_groups_md5(spark, sf_dir, n_perm: int, band_size: int):
     # md5(text) group — no randomness, no session state), so it may
     # carry its own cache certificate.  lsh_verified_pairs_md5's
     # counted-pairs trunk then persists per (session, sf_dir,
-    # "documents#md5reps", geometry) and is shared by every
-    # dedup-groups consumer in the session instead of being rebuilt
-    # per query (round-9 verdict, r10 queue item b).  The tag name is
-    # admitted in training_data._COUNTED_TAGS; the shingle cache
-    # matches "documents" exactly, so this tag never pollutes it.
+    # "documents#md5reps") and is shared by every dedup-groups
+    # consumer in the session, at either geometry, instead of being
+    # rebuilt per query (round-9 verdict, r10 queue item b).  The tag
+    # name is admitted in training_data._COUNTED_TAGS; the shingle
+    # cache matches "documents" exactly, so this tag never pollutes it.
     reps_docs = d.join(reps, "doc_id")
     tag = getattr(d, "_sg_table_tag", None)
     if tag is not None:

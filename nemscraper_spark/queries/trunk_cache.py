@@ -15,8 +15,10 @@ consumer 6.5 s -> ~1.4 s).
 CORPUS-IMMUTABILITY CONTRACT (the single copy — the per-family
 builders cite this): cache keys carry the family name, the Spark
 applicationId, the canonicalized corpus directory, and every
-behavior tunable that shaped the trunk (band geometry, threshold
-rationals, provenance slice tag) — but NO file footprint.  A cached
+behavior tunable a caller can vary (threshold rationals, provenance
+slice tag; a module constant such as the counted family's geometry
+set, training_data._COUNTED_GEOMETRIES, stays out) — but NO file
+footprint.  A cached
 trunk is therefore only correct while the parquet files under its
 directory are immutable for the lifetime of the Spark application.
 That is the driver-testdata contract (TESTDATA.md: tables are
@@ -35,8 +37,13 @@ actually queried.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
+import time
 from collections.abc import Callable
+
+_LOG = logging.getLogger("nemscraper_spark.trunk")
 
 # family-keyed registry; an EMPTY module-level dict (runtime cache)
 # is deliberately outside the fingerprint walk — see
@@ -70,7 +77,8 @@ def persist_trunk_adaptive(out):
     guarantees the cached data is laid out while the conf is in
     force.  If that materialization RAISES, the frame is unpersisted
     before re-raising so a failed build never leaves an orphaned
-    persisted plan that no clear hook can reach (round-10 ADVICE)."""
+    persisted plan that no clear hook can reach (round-10 ADVICE).
+    Returns (persisted frame, its row count from that count())."""
     from pyspark import StorageLevel
 
     conf = out.sparkSession.conf
@@ -80,7 +88,7 @@ def persist_trunk_adaptive(out):
     try:
         out = out.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out.count()
+            rows = out.count()
         except Exception:
             try:
                 out.unpersist()
@@ -92,7 +100,7 @@ def persist_trunk_adaptive(out):
             conf.unset(name)
         else:
             conf.set(name, prev)
-    return out
+    return out, rows
 
 
 def trunk(family: str, key: tuple, build: Callable[[], object]):
@@ -100,13 +108,24 @@ def trunk(family: str, key: tuple, build: Callable[[], object]):
     building + persisting it on first request.  ``key`` must carry
     the applicationId, the norm_dir()-canonical corpus directory,
     and every tunable the build depends on (see the module contract
-    above); ``build`` is only invoked on a miss."""
+    above); ``build`` is only invoked on a miss, which logs one JSON
+    record: family, tunables (the key after applicationId and
+    directory), build seconds and row count."""
     k = (family, *key)
     hit = _TRUNKS.get(k)
     if hit is not None:
         return hit
-    out = persist_trunk_adaptive(build())
+    t0 = time.perf_counter()
+    out, rows = persist_trunk_adaptive(build())
     _TRUNKS[k] = out
+    record = {
+        "event": "trunk_build",
+        "family": family,
+        "tunables": list(key[2:]),
+        "seconds": round(time.perf_counter() - t0, 3),
+        "rows": rows,
+    }
+    _LOG.info(json.dumps(record, default=str))
     return out
 
 

@@ -361,7 +361,8 @@ def test_ppjoin_completeness_non_dyadic_threshold(
 def test_verify_matches_collectset_reference(spark, sf_dir_oracle):
     """The shipped equi-join exact-Jaccard verify must be BIT-IDENTICAL
     to the retired collect_set+array_intersect form at both registered
-    band geometries (not a single pair, count, or double may move).
+    band geometries and one outside the trunk's set (not a single pair,
+    count, or double may move).
     The old form lives on HERE as an inline reference implementation —
     it is correct but materializes one shingle array per doc in an
     aggregation buffer, the 100 TB memory/skew hazard the round-8 swap
@@ -380,7 +381,9 @@ def test_verify_matches_collectset_reference(spark, sf_dir_oracle):
         # shingle SETS attached to each candidate pair, verified with
         # array_intersect
         sh = _shingle_frame(d)
-        cand = _md5_band_candidates(sh, n_perm, band_size)
+        cand = _md5_band_candidates(sh, ((n_perm, band_size),)).select(
+            "doc_a", "doc_b"
+        )
         cand_docs = (
             cand.select(F.col("doc_a").alias("doc_id"))
             .union(cand.select(F.col("doc_b").alias("doc_id")))
@@ -412,7 +415,9 @@ def test_verify_matches_collectset_reference(spark, sf_dir_oracle):
         )
 
     d = fan_out(load_table(spark, sf_dir_oracle, "documents"))
-    for n_perm, band_size in ((8, 2), (16, 4)):
+    # (12, 3) lies outside _COUNTED_GEOMETRIES: the uncached
+    # single-geometry path, checked against the same reference
+    for n_perm, band_size in ((8, 2), (16, 4), (12, 3)):
         ref = sorted(
             collectset_reference(
                 d, threshold=0.2, n_perm=n_perm, band_size=band_size
@@ -428,33 +433,27 @@ def test_verify_matches_collectset_reference(spark, sf_dir_oracle):
 
 
 def test_counted_pairs_cache_provenance(spark, sf_dir_oracle):
-    """The round-9 counted-pairs memoization must only ever serve a
-    frame it can PROVE matches what the caller would have built:
-    (a) same tagged documents frame + same geometry -> the identical
-    cached object; (b) a different geometry is a different key;
-    (c) an untransformed-tag-less frame (any select/filter downstream
-    of load_table) BYPASSES the cache entirely — and still computes
-    the same rows."""
+    """The counted-pairs memoization must only ever serve a frame it can
+    PROVE matches what the caller would have built: (a) the tagged
+    documents frame persists ONE trunk per (session, sf_dir, tag) — the
+    key carries no geometry — and every repeat request, at either
+    registered geometry, reuses that entry; (b) an untransformed-tag-less
+    frame (any select/filter downstream of load_table) BYPASSES the
+    cache entirely — and still computes the same rows."""
     import nemscraper_spark.queries.training_data as td
     import nemscraper_spark.queries.trunk_cache as tc
     from nemscraper_spark.queries.common import fan_out, load_table
 
     d = fan_out(load_table(spark, sf_dir_oracle, "documents"))
     app = spark.sparkContext.applicationId
-    nd = tc.norm_dir(sf_dir_oracle)
-    keys = [
-        ("counted", app, nd, "documents", 8, 2),
-        ("counted", app, nd, "documents", 16, 4),
-    ]
-    saved = {k: tc._TRUNKS.pop(k, None) for k in keys}
+    key = ("counted", app, tc.norm_dir(sf_dir_oracle), "documents")
+    saved = tc._TRUNKS.pop(key, None)
     try:
         a1 = td.lsh_counted_pairs_md5(d, 8, 2)
-        a2 = td.lsh_counted_pairs_md5(d, 8, 2)
-        assert a1 is a2  # cache hit on (session, sf_dir, geometry)
-        b = td.lsh_counted_pairs_md5(d, 16, 4)
-        assert b is not a1  # geometry is part of the key
-        assert keys[0] in tc._TRUNKS
-        assert keys[1] in tc._TRUNKS
+        persisted = tc._TRUNKS[key]
+        td.lsh_counted_pairs_md5(d, 8, 2)
+        td.lsh_counted_pairs_md5(d, 16, 4)
+        assert tc._TRUNKS[key] is persisted  # one entry, reused
 
         # tag-less frame: bit-identical projection of the same table,
         # but the provenance certificate is gone -> bypass, no new key
@@ -469,12 +468,65 @@ def test_counted_pairs_cache_provenance(spark, sf_dir_oracle):
             map(tuple, a1.collect())
         )
     finally:
-        for k in keys:
-            hit = tc._TRUNKS.pop(k, None)
-            if hit is not None:
-                hit.unpersist()
-            if saved[k] is not None:
-                tc._TRUNKS[k] = saved[k]
+        hit = tc._TRUNKS.pop(key, None)
+        if hit is not None:
+            hit.unpersist()
+        if saved is not None:
+            tc._TRUNKS[key] = saved
+
+
+def test_counted_trunk_serves_both_geometries(spark, sf_dir_oracle):
+    """ONE counted-pairs trunk per provenance tag serves every geometry
+    in _COUNTED_GEOMETRIES: asking for (8, 2) and then (16, 4) leaves
+    exactly one "counted" key per tag — for the raw documents frame and
+    for the #md5reps slice — each geometry's rows equal the tag-less
+    single-geometry build, and a geometry outside the set adds no key."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    import nemscraper_spark.queries.training_data as td
+    import nemscraper_spark.queries.trunk_cache as tc
+    from nemscraper_spark.queries.common import fan_out, load_table
+
+    d = fan_out(load_table(spark, sf_dir_oracle, "documents"))
+    reps = (
+        d.select("doc_id", F.md5("text").alias("th"))
+        .withColumn("rep", F.min("doc_id").over(W.partitionBy("th")))
+        .filter(F.col("doc_id") == F.col("rep"))
+        .select("doc_id")
+    )
+    reps_docs = d.join(reps, "doc_id")
+    reps_docs._sg_table_tag = (d._sg_table_tag[0], "documents#md5reps")
+
+    def counted_keys():
+        return sorted(k for k in tc._TRUNKS if k[0] == "counted")
+
+    def rows(frame):
+        return sorted(map(tuple, frame.collect()))
+
+    saved = {k: tc._TRUNKS.pop(k) for k in counted_keys()}
+    try:
+        app = spark.sparkContext.applicationId
+        prefix = ("counted", app, tc.norm_dir(sf_dir_oracle))
+        for tagged, bypass, tag in (
+            (d, d.select("doc_id", "text"), "documents"),
+            (reps_docs, d.join(reps, "doc_id"), "documents#md5reps"),
+        ):
+            assert getattr(bypass, "_sg_table_tag", None) is None
+            for n_perm, band_size in ((8, 2), (16, 4)):
+                got = rows(td.lsh_counted_pairs_md5(tagged, n_perm, band_size))
+                assert got, (tag, n_perm, band_size)
+                assert got == rows(
+                    td.lsh_counted_pairs_md5(bypass, n_perm, band_size)
+                ), (tag, n_perm, band_size)
+            assert [k for k in counted_keys() if k[3] == tag] == [(*prefix, tag)]
+        before = counted_keys()
+        assert rows(td.lsh_counted_pairs_md5(d, 12, 3))
+        assert counted_keys() == before
+    finally:
+        for k in counted_keys():
+            tc._TRUNKS.pop(k).unpersist()
+        tc._TRUNKS.update(saved)
 
 
 def test_xxhash_verify_matches_collectset_reference(spark, sf_dir_oracle):
@@ -583,14 +635,14 @@ def test_persist_trunk_adaptive_restores_session_conf(spark, sf_dir):
         # case 1: conf previously unset -> unset again afterwards
         spark.conf.unset(name)
         small = spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
-        out = tc.persist_trunk_adaptive(small)
-        assert out.count() == 3
+        out, rows = tc.persist_trunk_adaptive(small)
+        assert rows == out.count() == 3
         assert spark.conf.get(name, None) is None
         out.unpersist()
         # case 2: conf previously pinned false -> still false afterwards
         spark.conf.set(name, "false")
-        out2 = tc.persist_trunk_adaptive(small.withColumn("z", F.lit(1)))
-        assert out2.count() == 3
+        out2, rows2 = tc.persist_trunk_adaptive(small.withColumn("z", F.lit(1)))
+        assert rows2 == out2.count() == 3
         assert spark.conf.get(name, None) == "false"
         out2.unpersist()
     finally:
@@ -604,9 +656,8 @@ def test_dedup_groups_reps_slice_uses_derived_tag_cache(spark, sf_dir_oracle):
     """r10 queue item b: the dedup-groups md5-collapse representatives
     slice carries the derived "documents#md5reps" provenance tag, so
     its counted-pairs trunk persists under its own key — distinct from
-    the raw-table key at the same geometry — and a repeat build at the
-    same geometry is a cache hit, while rows are unchanged vs the
-    pre-tag (bypass) behavior."""
+    the raw-table key — and a repeat build is a cache hit, while rows
+    are unchanged vs the pre-tag (bypass) behavior."""
     import nemscraper_spark.queries.training_data as td
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
@@ -618,7 +669,7 @@ def test_dedup_groups_reps_slice_uses_derived_tag_cache(spark, sf_dir_oracle):
     import nemscraper_spark.queries.trunk_cache as tc
 
     app = spark.sparkContext.applicationId
-    rkey = ("counted", app, tc.norm_dir(sf_dir_oracle), "documents#md5reps", 8, 2)
+    rkey = ("counted", app, tc.norm_dir(sf_dir_oracle), "documents#md5reps")
     saved = tc._TRUNKS.pop(rkey, None)
     try:
         got = sorted(
@@ -626,11 +677,11 @@ def test_dedup_groups_reps_slice_uses_derived_tag_cache(spark, sf_dir_oracle):
         )
         assert rkey in tc._TRUNKS  # trunk registered under derived tag
         trunk = tc._TRUNKS[rkey]
-        # rebuild: same session + sf_dir + geometry -> identical object
+        # rebuild: same session + sf_dir + tag -> identical object
         _dedup_groups_md5(spark, sf_dir_oracle, 8, 2)
         assert tc._TRUNKS[rkey] is trunk
         # the derived tag never collides with the raw-table key
-        assert ("counted", app, tc.norm_dir(sf_dir_oracle), "documents", 8, 2) != rkey
+        assert ("counted", app, tc.norm_dir(sf_dir_oracle), "documents") != rkey
         # rows match the bypass path (tag stripped -> cache-less build)
         d = fan_out(load_table(spark, sf_dir_oracle, "documents"))
         mapping = (
@@ -749,6 +800,34 @@ def test_failed_trunk_materialization_leaves_no_orphan(spark):
     # persist() returned the same frame; the except-path unpersisted it
     assert bad.storageLevel == StorageLevel.NONE
     assert spark.conf.get(name, None) == prev
+
+
+def test_trunk_build_logs_once_per_miss(spark, caplog):
+    """Every trunk build logs ONE JSON record on the
+    "nemscraper_spark.trunk" logger — family, tunables (the key after
+    applicationId and directory), build seconds and row count — and a
+    cache hit logs nothing."""
+    import json
+    import logging
+
+    import nemscraper_spark.queries.trunk_cache as tc
+
+    key = (spark.sparkContext.applicationId, "__log_test__", 7)
+    caplog.set_level(logging.INFO, logger="nemscraper_spark.trunk")
+    try:
+        first = tc.trunk("test_log", key, lambda: spark.range(5))
+        assert tc.trunk("test_log", key, lambda: spark.range(5)) is first
+        recs = [r for r in caplog.records if r.name == "nemscraper_spark.trunk"]
+        assert len(recs) == 1
+        rec = json.loads(recs[0].getMessage())
+        assert rec["family"] == "test_log"
+        assert rec["tunables"] == [7]
+        assert rec["rows"] == 5
+        assert rec["seconds"] >= 0
+    finally:
+        hit = tc._TRUNKS.pop(("test_log", *key), None)
+        if hit is not None:
+            hit.unpersist()
 
 
 def test_norm_dir_canonicalizes_spellings(tmp_path):
