@@ -3,28 +3,48 @@
 
 The reference keeps an in-memory HashSet hydrated from per-row parquet
 files and vacuums them into consolidated files every 30s
-(table_history.rs:58-140). Spark-first equivalent:
+(table_history.rs:58-140). The engine keeps that shape on the driver:
 
-  * the ledger IS a parquet table partitioned by date
-  * membership stays a driver-side set, as in the reference: the
-    service tick (scripts/run_pipeline.run_once) collects the key
-    column of read() once per tick — one filename per ZIP, far smaller
-    than the data it guards. In --streaming mode the stream checkpoint
-    is the dedup set and this ledger only records what was ingested.
-  * appends are plain partitioned writes; vacuum() compacts each
-    partition's small files (M3)
+  * the ledger is a parquet table partitioned by ``date=YYYYMMDD``
+    (the UTC date of the row's first timestamp, "now" when null);
+  * membership is a driver-side set: ``keys()`` reads the key column
+    of every part file with pyarrow, one filename per ZIP, far smaller
+    than the data it guards. The service tick
+    (scripts/run_pipeline.run_once) calls it once per ledger per tick
+    and runs no Spark job for it. In --streaming mode the stream
+    checkpoint is the dedup set and this ledger only records what was
+    ingested;
+  * ``add()`` writes one small parquet file per date on the driver
+    through pyarrow and sources/fsutil, so ``file://`` / ``gs://``
+    roots work as bare paths do. Each file is staged as a hidden
+    ``.<name>.tmp`` (Spark skips dot-files) and renamed into place;
+  * ``vacuum()`` (M3) merges only partitions that hold two or more
+    files, partition by partition (table_history.rs:143-185): its cost
+    follows the tick's appends, not the ledger's age. A crash between
+    the merged file's rename and the source deletes leaves duplicate
+    rows, never a lost key; membership is a set, so dedup is
+    unaffected;
+  * ``read()`` returns the ledger as a Spark DataFrame for queries and
+    tests.
 
 Schemas per FIXTURES.md §C (downloaded / processed / compacted);
 UInt64/UInt32 in the reference become long/int (Spark has no unsigned).
+Files written by Spark's own parquet writer (INT96 timestamps, ``.crc``
+sidecars) read, merge and vacuum the same way.
 """
 
 from __future__ import annotations
 
-import os
+import posixpath
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from nemscraper_spark.sources import fsutil
 
 DOWNLOADED_SCHEMA = T.StructType(
     [
@@ -64,6 +84,14 @@ _SCHEMAS = {
     "compacted": COMPACTED_SCHEMA,
 }
 
+_ARROW_TYPES = {
+    T.StringType: pa.string(),
+    T.LongType: pa.int64(),
+    T.IntegerType: pa.int32(),
+    T.TimestampType: pa.timestamp("us", tz="UTC"),
+    T.DateType: pa.date32(),
+}
+
 
 class TableHistory:
     """One ledger (downloaded/processed/compacted) rooted at
@@ -75,50 +103,93 @@ class TableHistory:
             raise ValueError(f"unknown history table {name!r}")
         self.spark = spark
         self.name = name
-        self.path = os.path.join(root, name)
+        self.path = posixpath.join(root, name)
         self.schema = _SCHEMAS[name]
+        self.arrow_schema = pa.schema(
+            [
+                pa.field(f.name, _ARROW_TYPES[type(f.dataType)], f.nullable)
+                for f in self.schema.fields
+            ]
+        )
 
-    def _exists(self) -> bool:
-        import glob
+    def _partitions(self) -> dict[str, list[str]]:
+        """Each ``date=`` partition's parquet files, by partition path."""
+        return {
+            part: fsutil.list_files(part, suffix=".parquet")
+            for part in fsutil.list_dirs(self.path, name_prefix="date=")
+        }
 
-        return bool(glob.glob(os.path.join(self.path, "date=*")))
+    def _read_file(self, path: str, columns: list[str] | None = None) -> pa.Table:
+        with fsutil.open_input(path) as fh:
+            return pq.read_table(fh, columns=columns)
+
+    def _write(self, part: str, table: pa.Table) -> None:
+        """One snappy part file in ``part``, staged under a hidden name
+        and renamed into place, so a concurrent scan never sees it torn."""
+        fs, local, _ = fsutil.get_fs(part)
+        fs.create_dir(local, recursive=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = posixpath.join(local, f".{name}.tmp")
+        with fs.open_output_stream(tmp) as out:
+            pq.write_table(table, out, compression="snappy")
+        fs.move(tmp, posixpath.join(local, name))
+
+    def keys(self) -> set:
+        """The values of the ledger's key column (its first field)."""
+        key = self.schema.fields[0].name
+        return {
+            k
+            for files in self._partitions().values()
+            for f in files
+            for k in self._read_file(f, [key]).column(0).to_pylist()
+        }
 
     def read(self) -> DataFrame:
-        if not self._exists():
+        if not fsutil.list_dirs(self.path, name_prefix="date="):
             return self.spark.createDataFrame([], self.schema)
         return self.spark.read.schema(self.schema).parquet(self.path)
 
-    def add(self, rows: DataFrame | list[dict]) -> None:
-        """Append rows (keyed on the first timestamp column's date —
-        the reference partitions by write date, table_history.rs:113)."""
-        if not isinstance(rows, DataFrame):
-            rows = self.spark.createDataFrame(
-                [tuple(r.get(f.name) for f in self.schema.fields) for r in rows],
-                self.schema,
-            )
-        ts_col = next(
+    def add(self, rows: list[dict]) -> None:
+        """Append rows, one file per UTC date of the first timestamp
+        column (the reference partitions by write date,
+        table_history.rs:113). A null timestamp dates the row now.
+        Naive datetimes are driver-local time, as Spark's
+        ``createDataFrame`` reads them."""
+        ts_cols = [
             f.name for f in self.schema.fields if isinstance(f.dataType, T.TimestampType)
-        )
-        out = rows.withColumn(
-            "date", F.date_format(F.coalesce(F.col(ts_col), F.current_timestamp()), "yyyyMMdd")
-        )
-        out.write.mode("append").partitionBy("date").parquet(self.path)
+        ]
+        now = datetime.now(timezone.utc)
+        by_date: dict[str, list[dict]] = {}
+        for r in rows:
+            rec = {f.name: r.get(f.name) for f in self.schema.fields}
+            for c in ts_cols:
+                if rec[c] is not None:
+                    rec[c] = rec[c].astimezone(timezone.utc)
+            day = (rec[ts_cols[0]] or now).strftime("%Y%m%d")
+            by_date.setdefault(day, []).append(rec)
+        for day, recs in by_date.items():
+            self._write(
+                posixpath.join(self.path, f"date={day}"),
+                pa.Table.from_pylist(recs, schema=self.arrow_schema),
+            )
 
     def vacuum(self) -> None:
-        """M3: merge each partition's many small files into one
-        (table_history.rs:95-103, 143-185). Dynamic partition overwrite
-        keeps the swap atomic per partition."""
-        if not self._exists():
-            return
-        df = self.spark.read.schema(
-            T.StructType(list(self.schema.fields) + [T.StructField("date", T.StringType())])
-        ).option("basePath", self.path).parquet(self.path)
-        (
-            # hash-repartition on the partition column: each date lands
-            # wholly in one task → exactly one output file per partition
-            df.repartition("date")
-            .write.mode("overwrite")
-            .partitionBy("date")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path)
-        )
+        """M3: merge each partition that holds two or more files into
+        one (table_history.rs:95-103, 143-185); single-file partitions
+        are not touched. Sources are cast to the ledger's arrow schema
+        (Spark-written files carry INT96 timestamps), the merged file
+        is renamed into place, then the sources and their Hadoop
+        ``.crc`` sidecars are deleted. A crash before the deletes
+        leaves duplicate rows, never a lost key."""
+        names = self.arrow_schema.names
+        for part, files in self._partitions().items():
+            if len(files) < 2:
+                continue
+            merged = pa.concat_tables(
+                self._read_file(f).select(names).cast(self.arrow_schema) for f in files
+            )
+            self._write(part, merged)
+            for f in files:
+                fsutil.delete_file(f)
+                head, tail = posixpath.split(f)
+                fsutil.delete_file(posixpath.join(head, f".{tail}.crc"))

@@ -27,17 +27,31 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
 import glob
 import json
 import os
 import signal
 import sys
 import threading
+import time
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+PHASES = ("poll", "ingest", "compact", "mirror", "outputs", "ledger")
+
+
+@contextlib.contextmanager
+def _phase(seconds: dict, name: str):
+    """Add the wall seconds of the ``with`` body to ``seconds[name]``."""
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        seconds[name] += time.perf_counter() - t0
 
 
 def run_once(
@@ -54,7 +68,11 @@ def run_once(
     the checkpointed Structured Streaming file source has not yet
     drained (streaming/ingest.py), instead of the processed ledger's
     diff against the landing dir. Either way the processed ledger gets
-    one row per ingested ZIP."""
+    one row per ingested ZIP.
+
+    ``summary["seconds"]`` holds the wall seconds of each phase in
+    ``PHASES`` (0.0 when it did not run); ``ledger`` is the ledgers'
+    key reads, appends and vacuums, all driver-side with no Spark job."""
     from nemscraper_spark.plans.compact import compact_table
     from nemscraper_spark.plans.history import TableHistory
     from nemscraper_spark.sources import fetch
@@ -69,16 +87,22 @@ def run_once(
     downloaded = TableHistory(spark, history_root, "downloaded")
     processed = TableHistory(spark, history_root, "processed")
 
-    summary: dict = {"downloaded": 0, "processed": 0, "tables": {}, "compacted": {}}
+    seconds = dict.fromkeys(PHASES, 0.0)
+    summary: dict = {
+        "downloaded": 0, "processed": 0, "tables": {}, "compacted": {}, "seconds": seconds
+    }
 
     # 1. poll + download, deduped against the ledger (main.rs:147-197)
     if feeds:
-        seen = {r.filename for r in downloaded.read().collect()}
-        rows = fetch.poll_feeds_once(
-            feeds, zips_dir, already_downloaded=lambda n: n in seen
-        )
+        with _phase(seconds, "ledger"):
+            seen = downloaded.keys()
+        with _phase(seconds, "poll"):
+            rows = fetch.poll_feeds_once(
+                feeds, zips_dir, already_downloaded=lambda n: n in seen
+            )
         if rows:
-            downloaded.add(rows)
+            with _phase(seconds, "ledger"):
+                downloaded.add(rows)
         summary["downloaded"] = len(rows)
 
     # 2. ingest every ZIP not yet seen (main.rs:248-275): the processed
@@ -87,46 +111,52 @@ def run_once(
     if streaming:
         from nemscraper_spark.streaming.ingest import drain_ingest_stream
 
-        names, counts = drain_ingest_stream(
-            spark, zips_dir, parquet_dir, os.path.join(workdir, "checkpoint")
-        )
+        with _phase(seconds, "ingest"):
+            names, counts = drain_ingest_stream(
+                spark, zips_dir, parquet_dir, os.path.join(workdir, "checkpoint")
+            )
     else:
         from nemscraper_spark.sources.nemcsv import ingest
 
-        done = {r.filename for r in processed.read().collect()}
-        todo = [
-            z
-            for z in sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
-            if os.path.basename(z) not in done
-        ]
-        names = [os.path.basename(z) for z in todo]
-        counts = ingest(spark, todo, parquet_dir) if todo else {}
-    if names:
-        processed.add(
-            [
-                {
-                    "filename": n,
-                    "size_bytes": os.path.getsize(os.path.join(zips_dir, n)),
-                }
-                for n in names
+        with _phase(seconds, "ledger"):
+            done = processed.keys()
+        with _phase(seconds, "ingest"):
+            todo = [
+                z
+                for z in sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
+                if os.path.basename(z) not in done
             ]
-        )
+            names = [os.path.basename(z) for z in todo]
+            counts = ingest(spark, todo, parquet_dir) if todo else {}
+    if names:
+        with _phase(seconds, "ledger"):
+            processed.add(
+                [
+                    {
+                        "filename": n,
+                        "size_bytes": os.path.getsize(os.path.join(zips_dir, n)),
+                    }
+                    for n in names
+                ]
+            )
         summary["processed"] = len(names)
         summary["tables"] = counts
 
     # 3. compact each table's multi-file partitions (compactor.rs:584-792)
-    for troot in sorted(glob.glob(os.path.join(parquet_dir, "*"))):
-        if os.path.isdir(troot):
-            res = compact_table(spark, troot)
-            if res:
-                summary["compacted"][os.path.basename(troot)] = res
+    with _phase(seconds, "compact"):
+        for troot in sorted(glob.glob(os.path.join(parquet_dir, "*"))):
+            if os.path.isdir(troot):
+                res = compact_table(spark, troot)
+                if res:
+                    summary["compacted"][os.path.basename(troot)] = res
 
     # 3b. mirror the compacted tree to the bucket (S15 — the
     #     reference's gcloud-sync sidecar, scripts/gcloud-sync.sh:22-41)
     if mirror:
         from nemscraper_spark.sources.sync import mirror_tree
 
-        summary["mirror"] = mirror_tree(parquet_dir, mirror)
+        with _phase(seconds, "mirror"):
+            summary["mirror"] = mirror_tree(parquet_dir, mirror)
 
     # 4. analytics outputs (crunch.rs:39-82's 01..05 parquet), snappy
     #    like the reference's hot outputs (crunch.rs:163-166)
@@ -140,20 +170,22 @@ def run_once(
         )
 
         # the full crunch output set 01..05 (crunch.rs:39-82)
-        for name, df in (
-            ("01_frequency_measure", fpp_frequency_measure_ewma(spark, sf_dir)),
-            ("02_reference_trajectory", reference_trajectory(spark, sf_dir)),
-            ("03_unit_deviations", unit_deviations(spark, sf_dir)),
-            ("04_performance", performance(spark, sf_dir)),
-            ("05_actual_performance", actual_performance(spark, sf_dir)),
-        ):
-            df.write.mode("overwrite").option("compression", "snappy").parquet(
-                os.path.join(output_dir, f"{name}.parquet")
-            )
+        with _phase(seconds, "outputs"):
+            for name, df in (
+                ("01_frequency_measure", fpp_frequency_measure_ewma(spark, sf_dir)),
+                ("02_reference_trajectory", reference_trajectory(spark, sf_dir)),
+                ("03_unit_deviations", unit_deviations(spark, sf_dir)),
+                ("04_performance", performance(spark, sf_dir)),
+                ("05_actual_performance", actual_performance(spark, sf_dir)),
+            ):
+                df.write.mode("overwrite").option("compression", "snappy").parquet(
+                    os.path.join(output_dir, f"{name}.parquet")
+                )
         summary["outputs"] = 5
 
-    downloaded.vacuum()
-    processed.vacuum()
+    with _phase(seconds, "ledger"):
+        downloaded.vacuum()
+        processed.vacuum()
     return summary
 
 

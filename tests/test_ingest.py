@@ -226,6 +226,123 @@ def test_history_dedup_and_vacuum(spark, tmp_path):
     assert keys == {"a.zip", "b.zip", "d.zip"}
 
 
+def _ledger_files(h):
+    """{partition dir: {file name: (size, mtime_ns)}} of a ledger."""
+    return {
+        part: {
+            e.name: (e.stat().st_size, e.stat().st_mtime_ns)
+            for e in os.scandir(part)
+            if e.name.endswith(".parquet")
+        }
+        for part in glob.glob(os.path.join(h.path, "date=*"))
+    }
+
+
+def _row(name, day):
+    from datetime import datetime
+
+    ts = datetime(2024, 1, day, 12)
+    return {"filename": name, "url": "u", "size_bytes": day, "download_start": ts,
+            "download_end": ts, "thread": 1}
+
+
+def test_history_file_uri_root(spark, tmp_path):
+    """A ledger rooted at a file:// URI is found, read and vacuumed like
+    one on a bare path."""
+    h = TableHistory(spark, "file://" + str(tmp_path), "downloaded")
+    h.add([_row("a.zip", 1)])
+    h.add([_row("b.zip", 1)])
+    h.vacuum()
+    assert h.keys() == {"a.zip", "b.zip"}
+    assert sorted(r.filename for r in h.read().collect()) == ["a.zip", "b.zip"]
+    parts = glob.glob(os.path.join(str(tmp_path), "downloaded", "date=*"))
+    assert len(parts) == 1
+    for part in parts:
+        assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
+
+
+def test_history_vacuum_touches_only_multi_file_partitions(spark, tmp_path):
+    """vacuum() leaves a one-file partition byte-identical and merges a
+    two-file one; over N ticks it rewrites only the partition that
+    received a file (table_history.rs:143-185)."""
+    h = TableHistory(spark, str(tmp_path), "downloaded")
+    h.add([_row("a1.zip", 1)])
+    h.add([_row("b1.zip", 2)])
+    h.add([_row("b2.zip", 2)])
+    before = _ledger_files(h)
+    part_a, part_b = (os.path.join(h.path, d) for d in ("date=20240101", "date=20240102"))
+    assert len(before[part_a]) == 1 and len(before[part_b]) == 2
+    h.vacuum()
+    after = _ledger_files(h)
+    assert after[part_a] == before[part_a]
+    assert len(after[part_b]) == 1
+    b_rows = spark.read.parquet(part_b).collect()
+    assert sorted(r.filename for r in b_rows) == ["b1.zip", "b2.zip"]
+
+    # three ticks into a moving date: each rewrites only the partition
+    # that received a file (a new partition counts as received)
+    for i, day in enumerate((1, 2, 3)):
+        before = _ledger_files(h)
+        h.add([_row(f"t{i}.zip", day)])
+        h.vacuum()
+        after = _ledger_files(h)
+        changed = {p for p in after if after[p] != before.get(p)}
+        assert changed == {os.path.join(h.path, f"date=202401{day:02d}")}
+        assert all(len(files) == 1 for files in after.values())
+    assert h.keys() == {"a1.zip", "b1.zip", "b2.zip", "t0.zip", "t1.zip", "t2.zip"}
+
+
+@pytest.mark.parametrize("name", ["downloaded", "processed"])
+def test_history_reads_spark_written_ledger(spark, tmp_path, name):
+    """A ledger written by Spark's parquet writer (INT96 timestamps,
+    .crc sidecars, the layout older engine versions produced) keeps
+    working: keys(), add() and vacuum() take it over with no row or
+    timestamp lost. ``processed`` rows carry null timestamps, so they
+    land in today's partition."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    h = TableHistory(spark, str(tmp_path), name)
+    fields = h.schema.fieldNames()
+    ts_col = fields[3]
+
+    def row(fname, day):
+        ts = datetime(2024, 1, day, 23, 30) if name == "downloaded" else None
+        return (fname, None if name == "downloaded" else 7, day, ts, ts, day)
+
+    old = [row("a.zip", 1), row("b.zip", 2)]
+    for batch in (old[:1], old[1:]):
+        (
+            spark.createDataFrame(batch, h.schema)
+            .withColumn(
+                "date",
+                F.date_format(F.coalesce(F.col(ts_col), F.current_timestamp()), "yyyyMMdd"),
+            )
+            .write.mode("append")
+            .partitionBy("date")
+            .parquet(h.path)
+        )
+    import pyarrow.parquet as pq
+
+    spark_files = glob.glob(os.path.join(h.path, "date=*", "*.parquet"))
+    assert str(pq.read_schema(spark_files[0]).field(ts_col).type) == "timestamp[ns]"  # INT96
+    assert glob.glob(os.path.join(h.path, "date=*", ".*.crc"))
+    assert h.keys() == {"a.zip", "b.zip"}
+    new = [row("c.zip", 1), row("d.zip", 2)]
+    h.add([dict(zip(fields, r)) for r in new])
+    h.vacuum()
+
+    got = sorted(tuple(r) for r in h.read().select(*fields).collect())
+    assert got == sorted(old + new)
+    assert h.keys() == {"a.zip", "b.zip", "c.zip", "d.zip"}
+    for part in glob.glob(os.path.join(h.path, "date=*")):
+        files = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        assert len(files) == 1
+        crcs = [f for f in os.listdir(part) if f.endswith(".crc")]
+        assert all(f[1:-len(".crc")] in files for f in crcs)
+
+
 @pytest.fixture()
 def multi_file_partition(spark, tmp_path):
     """A standalone date= partition with 3 small files (known rows)."""

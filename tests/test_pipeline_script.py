@@ -199,7 +199,9 @@ def test_streaming_mode_checkpoint_exactly_once(spark, tmp_path):
 
     _drop("20220720")
     s1 = run_once(spark, str(work), [], None, streaming=True)
-    assert set(s1) == {"downloaded", "processed", "tables", "compacted"}
+    assert set(s1) == {"downloaded", "processed", "tables", "compacted", "seconds"}
+    assert set(s1["seconds"]) == {"poll", "ingest", "compact", "mirror", "outputs", "ledger"}
+    assert all(v >= 0.0 for v in s1["seconds"].values())
     assert s1["processed"] == 1
     assert s1["tables"]["FPP---UNIT_MW---1"] == 3
     table = os.path.join(str(work), "parquet", "FPP---UNIT_MW---1")
