@@ -2,94 +2,46 @@
 reference src/bin/compactor.rs:584-792).
 
 Per `table/date=` partition: resolve the evolved schema from parquet
-footers (metadata only), stream-convert every small file + any previous
-compacted file into ONE file, swap crash-safely. Spark-first:
-
-  * evolved schema + casts: sources/evolve.read_evolved
-  * single-file output: .repartition(1) scoped to the one partition
-  * swap: manifest-guarded stage → rename-in → delete-sources, the
-    engine-level equivalent of the reference's .tmp + atomic rename
-    (compactor.rs:645-749) — at no point does the partition hold zero
-    copies of any row. A crash mid-swap leaves a manifest that
-    ``recover_partition`` rolls FORWARD deterministically (finish the
-    renames, then delete the sources it lists); until recovery runs,
-    the only possible anomaly is a bounded double-read window (both a
-    source file and its compacted copy present), never loss.
+footers (metadata only, sources/evolve.evolved_schema), then stream
+every small file + any previous compacted file batch by batch through
+sources/evolve.arrow_cast (text that does not parse becomes null,
+compactor.rs:409-479) into ONE pyarrow ParquetWriter, and swap
+crash-safely. The driver does it all, as the reference does inside one
+process (compactor.rs:545-581); no Spark job runs. The swap is
+manifest-guarded stage → rename-in → delete-sources, the engine-level
+equivalent of the reference's .tmp + atomic rename
+(compactor.rs:645-749) — at no point does the partition hold zero
+copies of any row. A crash mid-swap leaves a manifest that
+``recover_partition`` rolls FORWARD deterministically (finish the
+renames, then delete the sources it lists); until recovery runs, the
+only possible anomaly is a bounded double-read window (both a source
+file and its compacted copy present), never loss.
 
 All file ops go through sources/fsutil (pyarrow.fs), so discovery,
 swap and recovery work on file:// and object-store URIs, matching the
 reference's GCS deployment (scripts/gcloud-sync.sh:22-41).
 
-At scale each partition is an independent job; the driver loops (or
-schedules a pool of) partitions exactly like the compactor's rayon
-scope (compactor.rs:76-94). A 100TB table compacts incrementally —
-only partitions with >1 file are touched.
+Partitions run in a driver thread pool, like the compactor's rayon
+scope (compactor.rs:76-94); pyarrow releases the GIL while it reads
+and writes. A 100TB table compacts incrementally — only partitions
+with >1 file are touched.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import posixpath
+import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from nemscraper_spark.sources import fsutil
-from nemscraper_spark.sources.evolve import read_evolved
+from nemscraper_spark.sources.evolve import arrow_cast, evolved_schema, written_schema
 
 MANIFEST_NAME = "_COMPACT_MANIFEST.json"
-
-
-def write_parquet_brotli(df, out_dir: str, level: int = 5) -> None:
-    """Distributed BROTLI parquet sink via pyarrow — the reference's
-    at-rest format (README.md:14-27 codec study, writer at
-    src/process/chunk.rs:367-369) on a cluster whose JVM classpath has
-    no brotli codec jar: libbrotli ships inside pyarrow, so each task
-    writes its own partition's file with pyarrow.parquet instead of
-    the JVM writer.  Arrow batches flow out of the JVM once
-    (mapInArrow — zero pandas conversion), one output file per
-    non-empty task, so the sink distributes exactly like
-    df.write.parquet.  The driver-side collect is one row per task
-    (bounded).  Spark's native reader needs the codec jar to scan the
-    result; pyarrow (and the reference itself) reads it directly —
-    this sink exists for at-rest format parity, the hot analytics
-    path stays snappy/zstd.
-
-    The task closure is self-contained (no package imports) so it
-    survives foreign-driver cloudpickle shipping."""
-    import pyarrow as pa
-
-    target = out_dir  # captured by value in the closure
-
-    def _write(batches):
-        import uuid
-
-        import pyarrow as _pa
-        import pyarrow.fs as _pafs
-        import pyarrow.parquet as _pq
-
-        if "://" in target:
-            fs, local = _pafs.FileSystem.from_uri(target)
-        else:
-            fs, local = _pafs.LocalFileSystem(), target
-        collected = [b for b in batches if b.num_rows]
-        if not collected:
-            return
-        table = _pa.Table.from_batches(collected)
-        name = f"{local.rstrip('/')}/part-{uuid.uuid4().hex}.parquet"
-        with fs.open_output_stream(name) as out:
-            _pq.write_table(
-                table,
-                out,
-                compression="BROTLI",
-                compression_level=level,
-            )
-        yield _pa.RecordBatch.from_pydict(
-            {"file": [name], "n_rows": [table.num_rows]}
-        )
-
-    fs0, local0, _ = fsutil.get_fs(out_dir)
-    fs0.create_dir(local0, recursive=True)
-    df.mapInArrow(_write, schema="file string, n_rows long").collect()
 
 
 def partitions_needing_compaction(table_root: str, min_files: int = 2) -> list[str]:
@@ -128,7 +80,7 @@ def recover_partition(partition_dir: str) -> bool:
     for src_name in m["sources"]:
         if src_name in final_names:  # paranoia: never delete an output
             continue
-        fsutil.delete_file(posixpath.join(partition_dir, src_name))
+        fsutil.delete_with_crc(posixpath.join(partition_dir, src_name))
     fsutil.delete_dir(staging)
     fsutil.delete_file(manifest_path)
     return True
@@ -148,7 +100,8 @@ def compact_partition(
     files = fsutil.list_files(partition_dir, suffix=".parquet")
     if not files:
         return 0
-    df = read_evolved(spark, files).repartition(1)
+    schema = written_schema(evolved_schema(files))
+    tz = spark.conf.get("spark.sql.session.timeZone")
     # staging dir lives beside the partition with a "." basename prefix
     # (hidden to Hadoop/Spark listing) and no "=" (so partition-column
     # inference never parses it): a concurrent table scan never sees
@@ -159,30 +112,18 @@ def compact_partition(
     )
     fsutil.delete_dir(staging)  # stale tmp from a pre-manifest crash
     # Dense codec at rest (the cold path — ingest writes snappy, see
-    # sources/nemcsv.ingest).  Default zstd; SPARK_GRAFT_REST_CODEC
-    # overrides it, so a cluster with parquet's brotli codec jar on the
-    # classpath matches the reference's brotli-5 at-rest format with
-    # one env var (scripts/codec_ab.py carries the measured brotli-5
-    # density rows via pyarrow; this container lacks the jar).  The
-    # zstd-jni buffer pool is disabled: with it on, repeated
-    # partitioned zstd writes degraded 9s -> 85s in-session (native
-    # buffer growth), without it they hold ~1-4s.
-    import os as _os
-
-    codec = _os.environ.get("SPARK_GRAFT_REST_CODEC", "zstd")
-    if codec.lower() == "brotli":
-        # Reference-exact at-rest format without the JVM codec jar:
-        # route the staged write through the distributed pyarrow
-        # brotli-5 sink (write_parquet_brotli).  A jar-equipped
-        # cluster can instead set codec "brotli-jvm" to use the
-        # native writer below.
-        write_parquet_brotli(df, staging, level=5)
-    else:
-        if codec.lower() == "brotli-jvm":
-            codec = "brotli"
-        df.write.mode("overwrite").option("compression", codec).option(
-            "parquet.compression.codec.zstd.bufferPool.enabled", "false"
-        ).parquet(staging)
+    # sources/nemcsv.ingest): the reference's brotli-5, or zstd at
+    # Spark's parquet writer level (scripts/codec_ab.py compares them).
+    codec = os.environ.get("SPARK_GRAFT_REST_CODEC", "zstd")
+    level = {"brotli": 5, "zstd": 3}.get(codec.lower())
+    fs, local, _ = fsutil.get_fs(staging)
+    fs.create_dir(local, recursive=True)
+    out = fs.open_output_stream(posixpath.join(local, "part-0.parquet"))
+    with out, pq.ParquetWriter(out, schema, compression=codec, compression_level=level) as writer:
+        for f in files:
+            with fsutil.open_input(f) as fh:
+                for batch in pq.ParquetFile(fh).iter_batches():
+                    writer.write_batch(arrow_cast(batch, schema, tz))
     staged = fsutil.list_files(staging, suffix=".parquet")
     # row count from the staged footers (metadata-only, no extra job)
     rows = fsutil.parquet_rows(staging)
@@ -193,8 +134,6 @@ def compact_partition(
     # never collide with the previous compacted file (which is now a
     # SOURCE — a name collision would let the delete phase remove the
     # new data).
-    import uuid
-
     token = uuid.uuid4().hex[:8]
     outputs = [
         (posixpath.basename(f), f"compacted-{token}-{i}.parquet")
@@ -218,7 +157,7 @@ def compact_partition(
         if _crash_after == "move" and n == 0:
             raise RuntimeError("injected crash mid-move")
     for n, src_name in enumerate(manifest["sources"]):
-        fsutil.delete_file(posixpath.join(partition_dir, src_name))
+        fsutil.delete_with_crc(posixpath.join(partition_dir, src_name))
         if _crash_after == "delete" and n == 0:
             raise RuntimeError("injected crash mid-delete")
     fsutil.delete_dir(staging)
@@ -234,20 +173,12 @@ def compact_table(
     previous crash are recovered first (compact_partition rolls them
     forward before re-reading).
 
-    Partitions are submitted from a driver-side thread pool — the
-    rayon-scope shape of compactor.rs:76-94. This matters at scale:
-    each partition's rewrite is ONE task (repartition(1)), so a serial
-    loop would keep a 1000-executor cluster one task busy at a time;
-    ``max_parallel`` concurrent Spark jobs keep the cluster fed while
-    each swap stays partition-local (separate dirs, no shared state).
+    Partitions run in a driver-side thread pool — the rayon-scope
+    shape of compactor.rs:76-94: up to ``max_parallel`` rewrites at
+    once, each swap partition-local (separate dirs, no shared state).
     """
     parts = partitions_needing_compaction(table_root)
     if not parts:
         return {}
-    if max_parallel <= 1 or len(parts) == 1:
-        return {part: compact_partition(spark, part) for part in parts}
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(max_parallel, len(parts))) as pool:
-        rows = pool.map(lambda p: compact_partition(spark, p), parts)
-        return dict(zip(parts, rows))
+    with ThreadPoolExecutor(max_workers=max(1, min(max_parallel, len(parts)))) as pool:
+        return dict(zip(parts, pool.map(lambda p: compact_partition(spark, p), parts)))

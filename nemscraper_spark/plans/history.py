@@ -24,8 +24,8 @@ files and vacuums them into consolidated files every 30s
     the merged file's rename and the source deletes leaves duplicate
     rows, never a lost key; membership is a set, so dedup is
     unaffected;
-  * ``read()`` returns the ledger as a Spark DataFrame for queries and
-    tests.
+  * ``read()`` returns the ledger as a Spark DataFrame of its declared
+    fields, for queries and tests.
 
 Schemas per FIXTURES.md §C (downloaded / processed / compacted);
 UInt64/UInt32 in the reference become long/int (Spark has no unsigned).
@@ -145,9 +145,13 @@ class TableHistory:
         }
 
     def read(self) -> DataFrame:
+        """The declared fields, nullable as a parquet scan reads them
+        (no ``date`` partition column), whether empty or not."""
         if not fsutil.list_dirs(self.path, name_prefix="date="):
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.schema(self.schema).parquet(self.path)
+            fields = [T.StructField(f.name, f.dataType) for f in self.schema.fields]
+            return self.spark.createDataFrame([], T.StructType(fields))
+        df = self.spark.read.schema(self.schema).parquet(self.path)
+        return df.select(*self.schema.fieldNames())
 
     def add(self, rows: list[dict]) -> None:
         """Append rows, one file per UTC date of the first timestamp
@@ -190,6 +194,4 @@ class TableHistory:
             )
             self._write(part, merged)
             for f in files:
-                fsutil.delete_file(f)
-                head, tail = posixpath.split(f)
-                fsutil.delete_file(posixpath.join(head, f".{tail}.crc"))
+                fsutil.delete_with_crc(f)

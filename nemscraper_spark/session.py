@@ -12,9 +12,6 @@ exercised on local[N]):
     replaces the reference's hand-tuned batch sizes (BASELINE.md).
   - shuffle.partitions defaults to cores locally; on a 1000-executor
     cluster it should be ~2-3x total cores — pass via ``extra_conf``.
-  - dynamic partition overwrite gives the compactor (plans/compact.py)
-    the same atomic per-partition swap the reference implements with
-    .tmp+rename (src/bin/compactor.rs:645-749).
 """
 
 from __future__ import annotations

@@ -9,10 +9,9 @@ implements the Avro 1.12 object-container spec (public:
 avro.apache.org/docs/1.12.0/specification — magic `Obj\\x01`, file
 metadata map carrying the writer schema JSON, 16-byte sync marker,
 blocks of (count, byte-size, payload, sync)) in pure Python and
-distributes it exactly like the brotli parquet sink
-(plans/compact.py:write_parquet_brotli): Arrow batches leave the JVM
-once via mapInArrow, one container file per non-empty task, bounded
-one-row-per-task driver collect.
+distributes it through mapInArrow: Arrow batches leave the JVM once,
+one container file per non-empty task, bounded one-row-per-task driver
+collect.
 
 Interop is proven cross-IMPLEMENTATION, not just self-roundtrip:
 tests/test_avro_py.py reads Python-written files through the official
@@ -32,9 +31,9 @@ Codecs: "null" (stored) and "deflate" (the spec's required
 compression, stdlib zlib) — both written and read.  Nested
 structs/arrays/maps are out of scope — the typed ETL path for complex
 data stays parquet (S7).  The per-row Python encode/decode is format-parity
-machinery, not the analytics hot path — like the brotli sink, it
-exists so a user of this engine can hand files to (or take files
-from) an Avro shop without a JVM connector."""
+machinery, not the analytics hot path: it exists so a user of this
+engine can hand files to (or take files from) an Avro shop without a
+JVM connector."""
 
 from __future__ import annotations
 

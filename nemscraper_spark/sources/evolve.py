@@ -11,7 +11,9 @@ reference resolves those with a supertype lattice on compaction
 Implementation: a metadata-only pyarrow footer pass (like
 compactor.rs:199-227 — no data read), then per-file read + cast +
 unionByName(allowMissingColumns=True). Ordinary DataFrame code — no
-Catalyst extension needed (SURVEY.md §4).
+Catalyst extension needed (SURVEY.md §4). Text that does not parse
+becomes null (compactor.rs:409-479), under ANSI too (try_cast);
+``arrow_cast`` is the same cast on an arrow batch, for plans/compact.py.
 
 At scale the footer pass is O(|files|) driver-side metadata reads
 (parallelizable with a thread pool); the data pass stays fully
@@ -22,15 +24,19 @@ all-string scan.
 
 from __future__ import annotations
 
+import re
 from functools import reduce
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from nemscraper_spark.functions import to_nem_timestamp
+from nemscraper_spark.functions import clean_str
+from nemscraper_spark.functions.columns import NEM_TS_FORMAT
 
 _STRINGY = {pa.string(), pa.large_string()}
 
@@ -77,20 +83,74 @@ def evolved_schema(files: list[str]) -> dict[str, pa.DataType]:
     return dict(sorted(fields.items()))
 
 
-def _spark_cast(col: str, t: pa.DataType):
+def _spark_cast(col: str, t: pa.DataType, src: T.DataType):
+    """Column ``col`` of Spark type ``src`` as the evolved type ``t``: text
+    is cleaned and parsed, timestamps as NEM text (chunk.rs:425-444)."""
     c = F.col(col)
-    if pa.types.is_timestamp(t):
-        # string source columns hold NEM-format text (chunk.rs:425-444)
-        return F.coalesce(
-            c.cast("timestamp"), to_nem_timestamp(c.cast("string"))
-        ).alias(col)
-    if pa.types.is_floating(t):
-        return c.cast("double").alias(col)
-    if pa.types.is_integer(t):
-        return c.cast("long").alias(col)
-    if pa.types.is_boolean(t):
-        return c.cast("boolean").alias(col)
-    return c.cast("string").alias(col)
+    to = _written(t)[0]
+    if isinstance(src, T.StringType) and to != "string":
+        c = clean_str(c)
+        if to == "timestamp":
+            return F.try_to_timestamp(c, F.lit(NEM_TS_FORMAT)).alias(col)
+    return c.try_cast(to).alias(col)
+
+
+_NEM_STRPTIME = "%Y/%m/%d %H:%M:%S"  # NEM_TS_FORMAT
+# text that Spark's try_cast takes as a double / long / boolean (Java's
+# "d"/"f" suffixes and longs of 19 digits are left out: they parse null)
+_DOUBLE_TEXT = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$|^(?i:[+-]?(inf|infinity|nan))$"
+_LONG_TEXT = r"^[+-]?\d{1,18}$"
+_TRUE_TEXT = pa.array(["t", "true", "y", "yes", "1"])
+_BOOL_TEXT = pa.array(["t", "true", "y", "yes", "1", "f", "false", "n", "no", "0"])
+
+
+def written_schema(target: dict[str, pa.DataType]) -> pa.Schema:
+    """The arrow schema the compactor writes for an evolved schema."""
+    return pa.schema([(name, _written(t)[1]) for name, t in target.items()])
+
+
+def arrow_cast(batch: pa.RecordBatch, schema: pa.Schema, tz: str) -> pa.RecordBatch:
+    """``_spark_cast`` on one arrow batch: every column of ``schema``
+    (a ``written_schema``) from ``batch``, typed nulls where the batch
+    lacks it. Text is cleaned (clean_str) and parsed to null on
+    failure; NEM timestamps are wall-clock times in the Spark session
+    zone ``tz``. Naive timestamps (Spark's INT96) are UTC instants."""
+    cols = []
+    for name, t in zip(schema.names, schema.types):
+        if name not in batch.schema.names:
+            cols.append(pa.nulls(batch.num_rows, t))
+            continue
+        c = batch.column(name)
+        if c.type not in _STRINGY or t == pa.string():
+            cols.append(pc.cast(c, t, safe=False))
+            continue
+        s = pc.utf8_trim(c, characters=" ")
+        s = pc.replace_substring_regex(s, pattern='^"(.*)"$', replacement=r"\1")
+        if pa.types.is_timestamp(t):
+            local = pc.strptime(s, format=_NEM_STRPTIME, unit="s", error_is_null=True)
+            # strptime takes one-digit fields and rolls 2025/02/30 over
+            # into March; Spark's strict parser gives null for both
+            exact = pc.equal(pc.strftime(local, format=_NEM_STRPTIME), s)
+            cols.append(_to_utc(pc.if_else(exact, local, None), tz).cast(t))
+        elif pa.types.is_boolean(t):
+            low = pc.utf8_lower(s)
+            cols.append(pc.if_else(pc.is_in(low, _BOOL_TEXT), pc.is_in(low, _TRUE_TEXT), None))
+        else:
+            ok = pc.match_substring_regex(s, _LONG_TEXT if pa.types.is_integer(t) else _DOUBLE_TEXT)
+            cols.append(pc.if_else(ok, pc.utf8_ltrim(s, characters="+"), None).cast(t))
+    return pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
+def _to_utc(local: pa.Array, tz: str) -> pa.Array:
+    """Naive wall-clock times in zone ``tz`` as UTC instants, resolved
+    as java.time does: a DST overlap takes the earlier instant, a time
+    in a DST gap moves later by the gap's length."""
+    m = re.fullmatch(r"([+-])(\d\d):(\d\d)", tz)
+    if m is None:
+        u = pc.assume_timezone(local, timezone=tz, ambiguous="earliest", nonexistent="earliest")
+        return pc.add(u, pc.subtract(local, pc.local_timestamp(u)))  # 0 outside a gap
+    offset = int(m[1] + "1") * (int(m[2]) * 3600 + int(m[3]) * 60)
+    return pc.subtract(local.cast(pa.timestamp("s", tz="UTC")), pa.scalar(offset, pa.duration("s")))
 
 
 def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -110,27 +170,29 @@ def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
     parts = []
     for group_files in groups.values():
         df = spark.read.parquet(*group_files)
-        present = set(df.columns)
+        present = {f.name: f.dataType for f in df.schema.fields}
         cols = []
         for name, t in target.items():
             if name in present:
-                cols.append(_spark_cast(name, t))
+                cols.append(_spark_cast(name, t, present[name]))
             else:
-                cols.append(F.lit(None).cast(_spark_cast_type(t)).alias(name))
+                cols.append(F.lit(None).cast(_written(t)[0]).alias(name))
         parts.append(df.select(*cols))
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
-def _spark_cast_type(t: pa.DataType) -> str:
-    if pa.types.is_timestamp(t):
-        return "timestamp"
-    if pa.types.is_floating(t):
-        return "double"
-    if pa.types.is_integer(t):
-        return "long"
-    if pa.types.is_boolean(t):
-        return "boolean"
-    return "string"
+# evolved arrow type → its Spark type and the arrow type the compactor
+# writes (anything else is a string)
+_WRITTEN = (
+    (pa.types.is_timestamp, "timestamp", pa.timestamp("us", tz="UTC")),
+    (pa.types.is_floating, "double", pa.float64()),
+    (pa.types.is_integer, "long", pa.int64()),
+    (pa.types.is_boolean, "boolean", pa.bool_()),
+)
+
+
+def _written(t: pa.DataType) -> tuple[str, pa.DataType]:
+    return next(((sp, ar) for is_t, sp, ar in _WRITTEN if is_t(t)), ("string", pa.string()))
 
 
 def list_parquet_files(root: str) -> list[str]:

@@ -77,6 +77,13 @@ def delete_file(path: str, missing_ok: bool = True) -> None:
     fs.delete_file(local)
 
 
+def delete_with_crc(path: str) -> None:
+    """Delete a file and the ``.<name>.crc`` sidecar Hadoop writes."""
+    head, tail = posixpath.split(path)
+    delete_file(path)
+    delete_file(posixpath.join(head, f".{tail}.crc"))
+
+
 def delete_dir(path: str, missing_ok: bool = True) -> None:
     fs, local, _ = get_fs(path)
     if missing_ok and fs.get_file_info(local).type == pafs.FileType.NotFound:

@@ -326,8 +326,8 @@ def ingest(
     monotonically within long sessions (native buffer growth;
     measured 9s -> 44s -> 85s across repeats at 8x300k rows, while
     snappy recovered to ~1-2s). The compactor (plans/compact.py)
-    rewrites every partition to zstd with the jni buffer pool off, so
-    data at REST keeps the dense codec — only the write-once hot path
+    rewrites every partition to zstd through pyarrow, so data at REST
+    keeps the dense codec — only the write-once hot path
     pays snappy's ~1.5x size for its ~4x speed and stability.
 
     Returns {table_key: row_count} so callers can run the conservation

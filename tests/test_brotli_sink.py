@@ -1,8 +1,7 @@
 """BROTLI-5 at-rest parity (reference README.md:14-27, writer at
 src/process/chunk.rs:367-369): with SPARK_GRAFT_REST_CODEC=brotli the
-compactor's staged write goes through the distributed pyarrow sink, so
-the compacted partition IS the reference's production format — no JVM
-codec jar required."""
+compactor's pyarrow writer stages brotli-5, so the compacted partition
+IS the reference's production format — no JVM codec jar required."""
 
 from __future__ import annotations
 
@@ -12,10 +11,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 
-from nemscraper_spark.plans.compact import (
-    compact_partition,
-    write_parquet_brotli,
-)
+from nemscraper_spark.plans.compact import compact_partition
 
 
 def _make_partition(tmp_path):
@@ -45,34 +41,6 @@ def test_compaction_brotli_at_rest(spark, tmp_path, monkeypatch):
             assert md.row_group(rg).column(c).compression == "BROTLI"
     got = pq.read_table(part / files[0]).to_pydict()
     assert sorted(got["a"]) == [1, 2, 3, 4, 5]
-
-
-def test_brotli_sink_distributes_one_file_per_task(spark, tmp_path):
-    out = tmp_path / "sink"
-    df = spark.range(100).repartition(4)
-    write_parquet_brotli(df, str(out), level=5)
-    files = sorted(os.listdir(out))
-    assert len(files) == 4
-    total = 0
-    for f in files:
-        md = pq.ParquetFile(out / f).metadata
-        assert md.row_group(0).column(0).compression == "BROTLI"
-        total += md.num_rows
-    assert total == 100
-    vals = sorted(
-        v for f in files for v in pq.read_table(out / f)["id"].to_pylist()
-    )
-    assert vals == list(range(100))
-
-
-def test_brotli_sink_skips_empty_tasks(spark, tmp_path):
-    out = tmp_path / "sink_empty"
-    # 1 row across 8 partitions: 7 tasks see no batches, write nothing
-    df = spark.range(1).repartition(8)
-    write_parquet_brotli(df, str(out), level=5)
-    files = os.listdir(out)
-    assert len(files) == 1
-    assert pq.ParquetFile(out / files[0]).metadata.num_rows == 1
 
 
 def test_compaction_crash_recovery_still_holds_under_brotli(

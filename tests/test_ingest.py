@@ -292,6 +292,18 @@ def test_history_vacuum_touches_only_multi_file_partitions(spark, tmp_path):
     assert h.keys() == {"a1.zip", "b1.zip", "b2.zip", "t0.zip", "t1.zip", "t2.zip"}
 
 
+def test_history_read_schema_is_the_same_empty_or_not(spark, tmp_path):
+    """read() gives the declared fields whether the ledger is empty or
+    holds rows (no discovered ``date`` partition column)."""
+    empty = TableHistory(spark, str(tmp_path / "a"), "downloaded")
+    full = TableHistory(spark, str(tmp_path / "b"), "downloaded")
+    full.add([_row("a.zip", 1), _row("b.zip", 2)])
+    assert empty.read().collect() == []
+    assert len(full.read().collect()) == 2
+    assert empty.read().schema == full.read().schema
+    assert full.read().schema.fieldNames() == full.schema.fieldNames()
+
+
 @pytest.mark.parametrize("name", ["downloaded", "processed"])
 def test_history_reads_spark_written_ledger(spark, tmp_path, name):
     """A ledger written by Spark's parquet writer (INT96 timestamps,
@@ -427,3 +439,169 @@ def test_compaction_file_uri_root(spark, multi_file_partition):
     from nemscraper_spark.sources import fsutil
 
     assert fsutil.parquet_rows(uri_root) == before
+
+
+@pytest.fixture()
+def ansi(spark):
+    """ANSI mode on, as in a default Spark 4 session."""
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    yield
+    spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+@pytest.fixture()
+def lattice_partition(spark, tmp_path):
+    """A date= partition whose three files disagree on every column
+    (compactor.rs:230-256, 409-479): NEM text beside a Spark (INT96)
+    timestamp and a +10:00 timestamp, "abc" beside a double, int32
+    beside int64, and V missing from one file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "TBL" / "date=2025-06-01"
+    part.mkdir(parents=True)
+    pq.write_table(
+        pa.table({
+            "K": pa.array([1, 2, 3], pa.int32()),
+            "TS": ["2025/06/01 00:00:05", ' "2025/06/01 00:00:10" ', "2025/02/30 00:00:00"],
+            "V": ["abc", " 1.5", None],
+        }),
+        part / "a.parquet",
+    )
+    spark.sql(
+        "SELECT 4L AS K, TIMESTAMP '2025-06-01 00:00:15' AS TS, 2.5D AS V"
+    ).coalesce(1).write.mode("append").parquet(str(part))
+    pq.write_table(
+        pa.table({
+            "K": pa.array([5], pa.int64()),
+            # 2025-06-01 10:00:20 +10:00, as epoch ms
+            "TS": pa.array([1748736020000], pa.timestamp("ms", tz="+10:00")),
+        }),
+        part / "c.parquet",
+    )
+    return str(part)
+
+
+def test_compaction_evolves_lattice_under_ansi(spark, ansi, lattice_partition):
+    """The lattice partition compacts to one file that Spark reads back
+    typed, with non-parsing text (and the impossible 2025/02/30) as
+    null — no CAST_INVALID_INPUT under ANSI."""
+    part = lattice_partition
+    assert compact_partition(spark, part) == 5
+    files = glob.glob(os.path.join(part, "*.parquet"))
+    assert len(files) == 1 and os.path.basename(files[0]).startswith("compacted-")
+    df = spark.read.parquet(part)
+    assert df.schema.simpleString() == "struct<K:bigint,TS:timestamp,V:double>"
+    got = sorted(tuple(r) for r in df.selectExpr("K", "unix_seconds(TS)", "V").collect())
+    t0 = 1748736000  # 2025-06-01 00:00:00 UTC, the session zone
+    assert got == [
+        (1, t0 + 5, None),
+        (2, t0 + 10, 1.5),
+        (3, None, None),
+        (4, t0 + 15, 2.5),
+        (5, t0 + 20, None),
+    ]
+
+
+def test_read_evolved_agrees_with_compaction(spark, ansi, lattice_partition):
+    """read_evolved over the un-compacted partition returns what Spark
+    reads from the compacted file, row for row, under ANSI."""
+    part = lattice_partition
+    files = glob.glob(os.path.join(part, "*.parquet"))
+    before = sorted(read_evolved(spark, files).collect(), key=lambda r: r.K)
+    compact_partition(spark, part)
+    after = sorted(spark.read.parquet(part).collect(), key=lambda r: r.K)
+    assert before == after
+
+
+def test_compact_partition_starts_no_spark_job(spark, multi_file_partition):
+    """The rewrite runs on the driver. A control job run after it in
+    another group proves the tracker has seen every earlier job (the
+    listener bus delivers in order)."""
+    import time
+
+    _, part = multi_file_partition
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("compact", "compact_partition")
+        compact_partition(spark, part)
+        sc.setJobGroup("control", "one job")
+        spark.range(3).collect()
+        for _ in range(100):
+            if tracker.getJobIdsForGroup("control"):
+                break
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("control")
+        assert tracker.getJobIdsForGroup("compact") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
+
+
+def test_compaction_leaves_no_source_litter(spark, multi_file_partition):
+    """Each deleted source takes its Hadoop .crc sidecar with it: the
+    one compacted file is the only parquet left, and no file is named
+    after a source."""
+    _, part = multi_file_partition
+    sources = [f for f in os.listdir(part) if f.endswith(".parquet")]
+    assert any(f == f".{s}.crc" for s in sources for f in os.listdir(part))
+    compact_partition(spark, part)
+    left = os.listdir(part)
+    assert [f for f in left if f.endswith(".parquet")] == [
+        f for f in left if f.startswith("compacted-")
+    ]
+    assert len([f for f in left if f.startswith("compacted-")]) == 1
+    assert not [f for f in left if any(s in f for s in sources)]
+
+
+@pytest.mark.parametrize("tz", ["UTC", "+10:00", "America/New_York"])
+def test_text_parses_agree_with_spark(spark, ansi, tmp_path, tz):
+    """The compactor's text parses (evolve.arrow_cast) give what Spark's
+    try_cast / try_to_timestamp give in read_evolved, value for value,
+    in a fixed-offset and a DST session zone (the gap and overlap
+    times of 2025 in New York included)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = {
+        "D": ["1.5", "+2", ".5", "5.", "1e5", "-1E-3", "inf", "-Infinity", "NaN",
+              "abc", "", ' "3" ', "1e400", "0x10", "1,5"],
+        "L": ["12", "+12", "-0", "1.0", "abc", "", ' "7" ', "9" * 20, "1e3"],
+        "B": ["t", "TRUE", "yes", "y", "1", "f", "No", "0", "", "maybe"],
+        "TS": ["2025/06/01 00:00:05", ' "2025/06/01 00:00:10" ', "2025/6/1 00:00:05",
+               "2025/02/30 00:00:00", "2025/06/01 24:00:00", "2025-06-01 00:00:05",
+               "2025/03/09 02:30:00", "2025/11/02 01:30:00", "abc", ""],
+    }
+    n = max(len(v) for v in texts.values())
+    part = tmp_path / "date=2025-06-01"
+    part.mkdir()
+    pq.write_table(
+        pa.table({"K": list(range(n)), **{c: v + [None] * (n - len(v)) for c, v in texts.items()}}),
+        part / "text.parquet",
+    )
+    pq.write_table(
+        pa.table({
+            "K": [n], "D": [0.5], "L": [5], "B": [True],
+            "TS": pa.array([0], pa.timestamp("us", tz="UTC")),
+        }),
+        part / "typed.parquet",
+    )
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        files = glob.glob(str(part / "*.parquet"))
+        cols = ["K", "B", "D", "L", "unix_seconds(TS)"]
+        before = read_evolved(spark, files).selectExpr(*cols).collect()
+        compact_partition(spark, str(part))
+        after = spark.read.parquet(str(part)).selectExpr(*cols).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+    def rows(rs):
+        return sorted((r[0], *map(repr, r[1:])) for r in rs)
+
+    assert rows(after) == rows(before)
+    assert len(after) == n + 1
