@@ -3,8 +3,6 @@ from nemscraper_spark.functions.columns import (
     date_from_filename,
     epoch_ms,
     time_bucket,
-    to_double,
-    to_nem_timestamp,
 )
 
 __all__ = [
@@ -12,6 +10,4 @@ __all__ = [
     "date_from_filename",
     "epoch_ms",
     "time_bucket",
-    "to_double",
-    "to_nem_timestamp",
 ]

@@ -24,27 +24,6 @@ def clean_str(col: Column | str) -> Column:
     return F.regexp_replace(c, '^"(.*)"$', "$1")
 
 
-def to_double(col: Column | str) -> Column:
-    """String → double; non-numeric/empty → null.
-
-    Parity: src/process/chunk.rs:211-227 (parse::<f64>, err → null).
-    Spark's cast has the same null-on-failure semantics (ANSI off).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return clean_str(c).cast("double")
-
-
-def to_nem_timestamp(col: Column | str) -> Column:
-    """Parse the NEM 'YYYY/MM/DD HH:MM:SS' format.
-
-    Parity: src/process/chunk.rs:425-444. The reference stores epoch-ms
-    with a fixed +10:00 offset; we rely on the session timezone
-    (session.NEM_TIMEZONE for the ingest path) for the same instants.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_timestamp(clean_str(c), NEM_TS_FORMAT)
-
-
 def time_bucket(col: Column | str, seconds: int, end_label: bool = False) -> Column:
     """Tumbling time bucket of ``seconds``, label = bucket start (or end).
 

@@ -15,7 +15,7 @@ files and vacuums them into consolidated files every 30s
     checkpoint is the dedup set and this ledger only records what was
     ingested;
   * ``add()`` writes one small parquet file per date on the driver
-    through pyarrow and sources/fsutil, so ``file://`` / ``gs://``
+    through ``fsutil.write_parquet``, so ``file://`` / ``gs://``
     roots work as bare paths do. Each file is staged as a hidden
     ``.<name>.tmp`` (Spark skips dot-files) and renamed into place;
   * ``vacuum()`` (M3) merges only partitions that hold two or more
@@ -36,7 +36,6 @@ sidecars) read, merge and vacuum the same way.
 from __future__ import annotations
 
 import posixpath
-import uuid
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -123,17 +122,6 @@ class TableHistory:
         with fsutil.open_input(path) as fh:
             return pq.read_table(fh, columns=columns)
 
-    def _write(self, part: str, table: pa.Table) -> None:
-        """One snappy part file in ``part``, staged under a hidden name
-        and renamed into place, so a concurrent scan never sees it torn."""
-        fs, local, _ = fsutil.get_fs(part)
-        fs.create_dir(local, recursive=True)
-        name = f"part-{uuid.uuid4()}.parquet"
-        tmp = posixpath.join(local, f".{name}.tmp")
-        with fs.open_output_stream(tmp) as out:
-            pq.write_table(table, out, compression="snappy")
-        fs.move(tmp, posixpath.join(local, name))
-
     def keys(self) -> set:
         """The values of the ledger's key column (its first field)."""
         key = self.schema.fields[0].name
@@ -172,7 +160,7 @@ class TableHistory:
             day = (rec[ts_cols[0]] or now).strftime("%Y%m%d")
             by_date.setdefault(day, []).append(rec)
         for day, recs in by_date.items():
-            self._write(
+            fsutil.write_parquet(
                 posixpath.join(self.path, f"date={day}"),
                 pa.Table.from_pylist(recs, schema=self.arrow_schema),
             )
@@ -192,6 +180,6 @@ class TableHistory:
             merged = pa.concat_tables(
                 self._read_file(f).select(names).cast(self.arrow_schema) for f in files
             )
-            self._write(part, merged)
+            fsutil.write_parquet(part, merged)
             for f in files:
                 fsutil.delete_with_crc(f)

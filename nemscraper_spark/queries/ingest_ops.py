@@ -104,7 +104,7 @@ def nem_datasource_scan(spark, sf_dir):
     scans the NEM ZIP with planning-time partitions (one per ZIP
     member) and yields the generic parsed layer; the query counts
     D-rows per table and the oracle independently recounts them from
-    the raw fixture bytes.  Same grammar as the mapInPandas splitter
+    the raw fixture bytes.  Same grammar as the driver-side ingest
     (nem_ingest_conservation pins that path end-to-end through
     parquet); this entry pins the CONNECTOR surface — format
     registration, partition planning, by-value class shipping to

@@ -109,10 +109,10 @@ def written_schema(target: dict[str, pa.DataType]) -> pa.Schema:
     return pa.schema([(name, _written(t)[1]) for name, t in target.items()])
 
 
-def arrow_cast(batch: pa.RecordBatch, schema: pa.Schema, tz: str) -> pa.RecordBatch:
-    """``_spark_cast`` on one arrow batch: every column of ``schema``
-    (a ``written_schema``) from ``batch``, typed nulls where the batch
-    lacks it. Text is cleaned (clean_str) and parsed to null on
+def arrow_cast(batch: pa.RecordBatch | pa.Table, schema: pa.Schema, tz: str):
+    """``_spark_cast`` on one arrow batch or table: every column of
+    ``schema`` (a ``written_schema``) from ``batch``, typed nulls where
+    the batch lacks it. Text is cleaned (clean_str) and parsed to null on
     failure; NEM timestamps are wall-clock times in the Spark session
     zone ``tz``. Naive timestamps (Spark's INT96) are UTC instants."""
     cols = []
@@ -124,8 +124,7 @@ def arrow_cast(batch: pa.RecordBatch, schema: pa.Schema, tz: str) -> pa.RecordBa
         if c.type not in _STRINGY or t == pa.string():
             cols.append(pc.cast(c, t, safe=False))
             continue
-        s = pc.utf8_trim(c, characters=" ")
-        s = pc.replace_substring_regex(s, pattern='^"(.*)"$', replacement=r"\1")
+        s = clean_text(c)
         if pa.types.is_timestamp(t):
             local = pc.strptime(s, format=_NEM_STRPTIME, unit="s", error_is_null=True)
             # strptime takes one-digit fields and rolls 2025/02/30 over
@@ -138,7 +137,14 @@ def arrow_cast(batch: pa.RecordBatch, schema: pa.Schema, tz: str) -> pa.RecordBa
         else:
             ok = pc.match_substring_regex(s, _LONG_TEXT if pa.types.is_integer(t) else _DOUBLE_TEXT)
             cols.append(pc.if_else(ok, pc.utf8_ltrim(s, characters="+"), None).cast(t))
-    return pa.RecordBatch.from_arrays(cols, schema=schema)
+    return type(batch).from_arrays(cols, schema=schema)
+
+
+def clean_text(s):
+    """``clean_str`` on an arrow string array: trim spaces, then strip
+    one pair of outer double quotes (chunk.rs:21-28)."""
+    s = pc.utf8_trim(s, characters=" ")
+    return pc.replace_substring_regex(s, pattern='^"(.*)"$', replacement=r"\1")
 
 
 def _to_utc(local: pa.Array, tz: str) -> pa.Array:

@@ -16,6 +16,7 @@ Spark readers.
 from __future__ import annotations
 
 import posixpath
+import uuid
 
 import pyarrow.fs as pafs
 
@@ -24,8 +25,12 @@ def get_fs(path: str) -> tuple[pafs.FileSystem, str, str]:
     """Resolve ``path`` to (filesystem, fs-local path, scheme prefix).
 
     ``prefix + local_path`` reconstructs a Spark-readable URI. Bare
-    POSIX paths get the local filesystem and an empty prefix.
+    POSIX paths get the local filesystem and an empty prefix; Hadoop's
+    ``file:/abs`` form (binaryFile's ``path`` column) the prefix
+    ``file:``.
     """
+    if path.startswith("file:") and not path.startswith("file://"):
+        return pafs.LocalFileSystem(), path[len("file:"):], "file:"
     if "://" in path:
         fs, local = pafs.FileSystem.from_uri(path)
         scheme = path.split("://", 1)[0]
@@ -108,6 +113,22 @@ def write_text(path: str, text: str) -> None:
     with fs.open_output_stream(tmp) as f:
         f.write(text.encode("utf-8"))
     fs.move(tmp, local)
+
+
+def write_parquet(dir_path: str, table) -> None:
+    """Write ``table`` as one new snappy ``part-<uuid>.snappy.parquet``
+    in ``dir_path``, staged under a hidden ``.<name>.tmp`` (Spark skips
+    dot-files) and renamed into place, so a concurrent scan never sees
+    it torn."""
+    import pyarrow.parquet as pq
+
+    fs, local, _ = get_fs(dir_path)
+    fs.create_dir(local, recursive=True)
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    tmp = posixpath.join(local, f".{name}.tmp")
+    with fs.open_output_stream(tmp) as out:
+        pq.write_table(table, out, compression="snappy")
+    fs.move(tmp, posixpath.join(local, name))
 
 
 def read_text(path: str) -> str:

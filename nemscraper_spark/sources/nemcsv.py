@@ -14,46 +14,52 @@ the first 4 columns (marker, table, subtable, version) are dropped from
 output (chunk.rs:336-345); rows before any I row are dropped
 (csv_batch_processor.rs:72-74).
 
-Spark execution model — one task per input file, matching the
-reference's per-file worker pool (main.rs:208-239):
+:func:`ingest` runs on the driver with pyarrow and starts no Spark job,
+as the reference splits and converts each file inside one process
+(split.rs:27-62, chunk.rs:312-422, main.rs:208-239):
 
-    binaryFile/wholetext scan → per-file python parse (mapInPandas —
-    genuinely imperative text parsing, the one place SURVEY.md §7.1
-    sanctions the slow path) → generic (file, table, headers, fields)
-    rows → per-table projection + first-non-null type inference →
-    cast plan (double / NEM timestamp / trimmed string) →
-    write.partitionBy("date")
+    list inputs (sources/fsutil) → each ZIP's *.csv members →
+    nem_segmenter blocks, grouped by (table, I-header) →
+    pyarrow.csv tokenization, D-rows only → first-1000-row type
+    inference → clean + cast (sources/evolve.arrow_cast) → one snappy
+    part file per (group, date=)
 
-At 100TB the file corpus parallelizes as |files| tasks; each table's
-convert/write is an independent job over a filtered view of the parsed
-scan, which Spark caches once (the reference re-reads the CSV per batch
-instead, chunk.rs:320-332).
+Groups run in a driver thread pool; pyarrow releases the GIL while it
+tokenizes, casts and writes, but reading and segmenting the files is
+Python on one driver. So ingest throughput is bounded by one machine,
+like the reference's single-process worker pool.
 """
 
 from __future__ import annotations
 
-import os
+import csv
+import fnmatch
+import io
+import posixpath
+import re
+import zipfile
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.csv as pacsv
+from pyspark.sql import SparkSession
 
-from nemscraper_spark.functions import (
-    clean_str,
-    date_from_filename,
-    to_double,
-    to_nem_timestamp,
-)
 from nemscraper_spark.sources import fsutil
+from nemscraper_spark.sources.evolve import arrow_cast, clean_text
 
-PARSED_SCHEMA = "src_file string, table_key string, headers string, line string"
-BLOCK_SCHEMA = (
-    "src_file string, table_key string, headers string, lines array<string>"
-)
 INFERENCE_SAMPLE_ROWS = 1000  # chunk.rs:324 — first 1k rows drive inference
 _HDR_SEP = "\x1f"  # joins header names into one string column
-SLICE_LINES = 100_000  # ~7MB/slice row — the reference's 100MiB batch
-# cap (split.rs:34) scaled to line units; bounds single-row size AND
-# gives the post-parse repartition slice-granular units to balance
+_MARKERS = ["_c0", "_c1", "_c2", "_c3"]  # marker, table, subtable, version
+_ARROW_TYPES = {
+    "double": pa.float64(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+    "string": pa.string(),
+}
+# functions.date_from_filename's two patterns (chunk.rs:258-308)
+_COMPACT_DATE = re.compile(r"(20[0-3]\d)(0[1-9]|1[0-2])(0[1-9]|[12]\d|3[01])", re.ASCII)
+_DASHED_DATE = re.compile(r"(20[0-3]\d)[-_](0[1-9]|1[0-2])[-_](0[1-9]|[12]\d|3[01])", re.ASCII)
 
 
 def nem_segmenter():
@@ -73,7 +79,7 @@ def nem_segmenter():
     Built in function scope on purpose: cloudpickle ships the returned
     closure BY VALUE, so executors in a foreign-driver deployment never
     import ``nemscraper_spark`` to run it. Stdlib only. Shared by the
-    mapInPandas splitter (:func:`parse_blocks`) and the ``nemcsv``
+    driver-side :func:`ingest` and the executor-side ``nemcsv``
     connector (sources/nemsource.py)."""
     import csv as _csv
     import re
@@ -100,80 +106,12 @@ def nem_segmenter():
     return segment
 
 
-def parse_blocks(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
-    """Scan ZIPs and/or raw CSVs → block slices (BLOCK_SCHEMA).
-
-    One input file = one Spark task (binaryFile rows are file-granular),
-    so the ZIP-member iteration (split.rs:36-55) runs partition-parallel.
-    ``input_path``: a directory/glob or an explicit list of files.
-
-    The python side does SEGMENTATION ONLY (:func:`nem_segmenter` —
-    find ``I,`` block boundaries with one C-speed regex pass and split
-    each block body into lines); no python CSV parsing of data rows.
-    Each output row is one <=SLICE_LINES slice of a block's raw lines
-    as an Arrow list<string> (one offsets buffer + one data
-    buffer — per-line metadata is NOT repeated, which is what keeps the
-    python->JVM transfer and the fan-out shuffle at ~file size instead
-    of 3x). Line-level rows come from a JVM-side explode; the CSV
-    tokenization happens in ``table_frame`` via ``from_csv`` inside
-    whole-stage codegen. Net effect: the 2.2M-row single-file ingest
-    moved from ~60k rows/s (python csv.reader row loop) to the python
-    stage being a ~2s slice of the job.
-    """
-    paths = input_path if isinstance(input_path, list) else [input_path]
-    binf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.[zZcC][iIsS][pPvV]*")  # *.zip / *.csv
-        .load(paths)
-        .select("path", "content")
-    )
-
-    segment = nem_segmenter()
-
-    def extract(iterator):
-        import io
-        import os as _os
-        import zipfile
-
-        import pandas as pd
-
-        for pdf in iterator:
-            src_files, keys, hdrs, line_lists = [], [], [], []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                base = _os.path.basename(path)
-                members = []
-                if base.lower().endswith(".zip"):
-                    with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                        for m in zf.namelist():
-                            if m.lower().endswith(".csv"):
-                                members.append(zf.read(m))
-                else:
-                    members.append(bytes(content))
-                for raw in members:
-                    for k2, h, body in segment(raw.decode("utf-8", "replace")):
-                        for off in range(0, max(len(body), 1), SLICE_LINES):
-                            src_files.append(base)
-                            keys.append(k2)
-                            hdrs.append(h)
-                            line_lists.append(body[off : off + SLICE_LINES])
-            yield pd.DataFrame(
-                {
-                    "src_file": pd.Series(src_files, dtype="object"),
-                    "table_key": pd.Series(keys, dtype="object"),
-                    "headers": pd.Series(hdrs, dtype="object"),
-                    "lines": pd.Series(line_lists, dtype="object"),
-                }
-            )
-
-    return binf.mapInPandas(extract, schema=BLOCK_SCHEMA)
-
-
-def parse_files(spark: SparkSession, input_path: str | list[str]) -> DataFrame:
-    """Line-granular view of :func:`parse_blocks` (PARSED_SCHEMA): the
-    slice rows exploded JVM-side to one row per raw line."""
-    return parse_blocks(spark, input_path).select(
-        "src_file", "table_key", "headers", F.explode("lines").alias("line")
-    )
+def file_date(name: str) -> str:
+    """Python twin of ``functions.date_from_filename``: ``YYYY-MM-DD``
+    from an 8-digit ``YYYYMMDD`` or a ``YYYY-MM-DD`` / ``YYYY_MM_DD``
+    run in ``name`` (years 2000-2039), else ``unknown-date``."""
+    m = _COMPACT_DATE.search(name) or _DASHED_DATE.search(name)
+    return "-".join(m.groups()) if m else "unknown-date"
 
 
 def _looks_float(s: str) -> bool:
@@ -209,235 +147,126 @@ def infer_types(samples: dict[str, str | None]) -> dict[str, str]:
     return plan
 
 
-def sample_query(parsed: DataFrame, table_key: str) -> DataFrame:
-    """Bounded per-table inference sample: filter + limit on the
-    (cached) slice frame. CollectLimit scans partitions incrementally
-    and stops at N rows, so this job shuffles NOTHING and usually
-    touches only the first cached partition(s) — mirroring the
-    reference's "first 1000 rows of one batch" sampling
-    (chunk.rs:320-332). Plan shape pinned in tests/test_plan_quality.py."""
-    return (
-        parsed.filter(F.col("table_key") == table_key)
-        .filter(F.col("line").startswith("D,"))
-        .select("headers", "line")
-        .limit(INFERENCE_SAMPLE_ROWS)
+def _list_inputs(input_path: str | list[str]) -> list[str]:
+    """A list as is; a directory or a glob's ``*.zip`` / ``*.csv`` files."""
+    if isinstance(input_path, list):
+        return input_path
+    head, pattern = input_path, "*"
+    if any(ch in posixpath.basename(input_path) for ch in "*?["):
+        head, pattern = posixpath.split(input_path)
+    return [
+        f
+        for f in fsutil.list_files(head)
+        if fnmatch.fnmatch(posixpath.basename(f), pattern)
+        and f.lower().endswith((".zip", ".csv"))
+    ]
+
+
+def _texts(path: str) -> list[str]:
+    """The decoded text of each ``*.csv`` member of a ZIP, or of a CSV."""
+    with fsutil.open_input(path) as fh:
+        raw = fh.read()
+    if not path.lower().endswith(".zip"):
+        return [raw.decode("utf-8", "replace")]
+    with zipfile.ZipFile(io.BytesIO(raw)) as zf:
+        return [
+            zf.read(m).decode("utf-8", "replace")
+            for m in zf.namelist()
+            if m.lower().endswith(".csv")
+        ]
+
+
+def _d_rows(lines: list[str], headers: list[str]) -> pa.Table:
+    """The D-rows of ``lines`` as string columns named ``headers``,
+    cleaned (clean_str), with "" as null (chunk.rs:211-216). A row of
+    the wrong width is null-padded or truncated in its place, as Spark's
+    PERMISSIVE ``from_csv`` does (csv_batch_processor.rs:80-88)."""
+    names = _MARKERS + headers
+    ragged: list[tuple[int, str]] = []
+
+    def keep(row) -> str:
+        ragged.append((row.number, row.text))
+        return "skip"
+
+    t = pacsv.read_csv(
+        pa.py_buffer("\n".join(lines).encode("utf-8")),
+        # serial, so the handler sees every row's number
+        read_options=pacsv.ReadOptions(column_names=names, use_threads=False),
+        parse_options=pacsv.ParseOptions(invalid_row_handler=keep),
+        convert_options=pacsv.ConvertOptions(
+            column_types=dict.fromkeys(names, pa.string()),
+            strings_can_be_null=False,
+            quoted_strings_can_be_null=False,
+        ),
+    )
+    fixed = [(n, row) for n, text in ragged for row in csv.reader([text]) if row[:1] == ["D"]]
+    if fixed:
+        pad = [None] * len(names)
+        cols = zip(*((row + pad)[: len(names)] for _, row in fixed))
+        extra = pa.Table.from_arrays([pa.array(c, pa.string()) for c in cols], names=names)
+        # row numbers count the non-empty rows, kept and skipped alike
+        n_rows = t.num_rows + len(ragged)
+        kept = np.setdiff1d(np.arange(1, n_rows + 1), [n for n, _ in ragged])
+        order = np.argsort(np.concatenate([kept, [n for n, _ in fixed]]), kind="stable")
+        t = pa.concat_tables([t, extra]).take(order)
+    t = t.filter(pc.equal(t.column(0), "D"))
+    cols = [clean_text(t.column(i)) for i in range(len(_MARKERS), len(names))]
+    return pa.Table.from_arrays(
+        [pc.if_else(pc.equal(c, ""), None, c) for c in cols], names=headers
     )
 
 
-def discover_tables(blocks: DataFrame) -> DataFrame:
-    """Distinct table keys among slices holding >=1 D-line. Partial
-    (map-side) distinct collapses each partition to its local key set
-    before the exchange, so the shuffle carries |tables| x |partitions|
-    tiny rows — never the line data."""
-    return (
-        blocks.filter(F.exists("lines", lambda x: x.startswith("D,")))
-        .select("table_key")
-        .distinct()
-    )
+def ingest(spark: SparkSession, input_path: str | list[str], out_dir: str) -> dict[str, int]:
+    """Full S4-S7 pipeline: parse → per-table typed tables → Hive
+    ``date=`` partitioned parquet under ``out_dir/<TABLE>/``.
 
-
-def table_frame(parsed: DataFrame, table_key: str, sample=None) -> DataFrame:
-    """Project one table's rows out of the segmented scan: JVM-side
-    ``from_csv`` tokenization (quote-aware, whole-stage codegen — the
-    python side never parses data rows), then the reference's cleaning
-    + type inference."""
-    import csv as _csv
-
-    sub = parsed.filter(F.col("table_key") == table_key)
-    if sample is None:
-        sample = sample_query(parsed, table_key).collect()
-    if not sample:
-        raise KeyError(f"no rows for table {table_key!r}")
-    headers = sample[0]["headers"].split(_HDR_SEP)
-
-    def _clean_py(v):
-        # python twin of clean_str + empty-string→null, for inference
-        # over the collected sample only (the data path cleans in Spark)
-        if v is None:
-            return None
-        v = v.strip()
-        if len(v) >= 2 and v[0] == '"' and v[-1] == '"':
-            v = v[1:-1]
-        return v or None
-
-    sample_fields = []
-    for r in sample:
-        row = next(_csv.reader([r["line"]]), None)
-        if row and row[0] == "D":
-            sample_fields.append(row[4:])
-    samples: dict[str, str | None] = {}
-    for i, h in enumerate(headers):
-        samples[h] = next(
-            (
-                _clean_py(f[i])
-                for f in sample_fields
-                if i < len(f) and _clean_py(f[i]) is not None
-            ),
-            None,
-        )
-    plan = infer_types(samples)
-
-    # JVM CSV tokenization: 4 marker cols + the block's headers, all
-    # string; PERMISSIVE mode null-pads ragged short rows and ignores
-    # extras (the splitter's pad/truncate, csv_batch_processor.rs:80-88)
-    ddl = ", ".join(
-        [f"_c{i} STRING" for i in range(4)] + [f"`{h}` STRING" for h in headers]
-    )
-    rec = F.from_csv(F.col("line"), ddl)
-    sub = sub.select("src_file", rec.alias("r")).filter(F.col("r._c0") == "D")
-    raw = sub.select(
-        "src_file",
-        *[clean_str(F.col("r").getField(h)).alias(h) for h in headers],
-    )
-    # empty strings are nulls (chunk.rs:211-216 parses "" to None)
-    raw = raw.select(
-        "src_file",
-        *[F.when(F.col(h) == "", None).otherwise(F.col(h)).alias(h) for h in headers],
-    )
-
-    cols = []
-    for h in headers:
-        if plan[h] == "double":
-            cols.append(to_double(F.col(h)).alias(h))
-        elif plan[h] == "timestamp":
-            cols.append(to_nem_timestamp(F.col(h)).alias(h))
-        else:
-            cols.append(F.col(h).alias(h))
-    return raw.select("src_file", *cols)
-
-
-def ingest(
-    spark: SparkSession,
-    input_path: str | list[str],
-    out_dir: str,
-    compression: str = "snappy",
-) -> dict[str, int]:
-    """Full S4-S7 pipeline: parse → per-table typed frames → Hive
-    `date=` partitioned parquet under out_dir/<TABLE>/.
+    ``input_path`` is a list of files, or a directory or glob whose
+    ``*.zip`` / ``*.csv`` files are read. Blocks are grouped by
+    (table, I-header), so two header versions of one table in one call
+    each keep their own columns. Each group's types come from its first
+    ``INFERENCE_SAMPLE_ROWS`` D-rows; text that does not parse as the
+    inferred type becomes null. Timestamps are NEM text in the Spark
+    session time zone, the only thing ``spark`` supplies.
 
     Partition value = date extracted from the source FILENAME
-    (chunk.rs:258-308, 348-351), not from row data.
+    (chunk.rs:258-308, 348-351), not from row data. Files are snappy:
+    the compactor (plans/compact.py) rewrites a partition with the
+    dense codec once it holds two or more files.
 
-    Compression: SNAPPY on the hot ingest sink, dense zstd at
-    compaction — a measured deviation from the reference's brotli-5-
-    everywhere (which needs an extra codec jar on Spark's classpath,
-    SURVEY.md §7.1). On parquet-java's zstd-jni path a partitioned
-    zstd write ran 3-4x slower than snappy per write and degraded
-    monotonically within long sessions (native buffer growth;
-    measured 9s -> 44s -> 85s across repeats at 8x300k rows, while
-    snappy recovered to ~1-2s). The compactor (plans/compact.py)
-    rewrites every partition to zstd through pyarrow, so data at REST
-    keeps the dense codec — only the write-once hot path
-    pays snappy's ~1.5x size for its ~4x speed and stability.
-
-    Returns {table_key: row_count} so callers can run the conservation
-    check (verify.rs:56-133: D-row count == parquet row count).
+    Returns {table_key: row_count} over every file of each table written
+    to (footers only), so callers can run the conservation check
+    (verify.rs:56-133: D-row count == parquet row count).
     """
-    blocks = parse_blocks(spark, input_path)
-    # a single big file parses as ONE binaryFile task; spread its block
-    # SLICES across the cluster before the (explode + from_csv + cast +
-    # write) heavy stage — slice rows carry no per-line metadata, so
-    # this shuffle moves ~the raw line bytes, nothing more. Only when
-    # files < cores: with a real file corpus the natural per-file
-    # parallelism stands and nothing is shuffled.
-    n_files, n_bytes = _input_stats(input_path)
-    par = spark.sparkContext.defaultParallelism
-    # fan out only when it can pay for its shuffle: few files AND enough
-    # bytes that the heavy stage benefits from extra tasks (a small
-    # batch's whole job is cheaper than one extra stage boundary)
-    if 0 < n_files < par and n_bytes >= FAN_OUT_MIN_BYTES:
-        blocks = blocks.repartition(par)
-    # cache the SLICE rows (compact list<string> columnar form, ~file
-    # size); each consumer re-explodes from cache — explode is
-    # whole-stage-codegen'd and costs far less than materializing the
-    # line-granular cache would
-    blocks = blocks.cache()
-    parsed = blocks.select(
-        "src_file", "table_key", "headers", F.explode("lines").alias("line")
-    )
-    try:
-        # Discovery job: tiny post-partial-distinct shuffle. (The
-        # previous design ranked EVERY D-line with a row_number window
-        # partitioned by table_key: a full-corpus shuffle that also
-        # funneled each table's entire data through one task.)
-        keys = [r[0] for r in discover_tables(blocks).collect()]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    segment = nem_segmenter()
+    groups: dict[tuple[str, str], dict[str, list[str]]] = {}
+    for path in _list_inputs(input_path):
+        date = file_date(posixpath.basename(path))
+        for text in _texts(path):
+            for key, headers, lines in segment(text):
+                groups.setdefault((key, headers), {}).setdefault(date, []).extend(lines)
 
-        def _write_table(key: str) -> tuple[str, int]:
-            # per-table bounded sample job (filter + CollectLimit on the
-            # cached slice frame — no shuffle, early-exit after N rows)
-            df = table_frame(parsed, key)
-            out = df.withColumn("date", date_from_filename(F.col("src_file"))).drop(
-                "src_file"
+    def write_group(item) -> str | None:
+        (key, headers), by_date = item
+        names = headers.split(_HDR_SEP)
+        tables = {}
+        for date, lines in by_date.items():
+            if any(lines):  # pyarrow rejects an empty input
+                t = _d_rows(lines, names)
+                if t.num_rows:
+                    tables[date] = t
+        if not tables:
+            return None
+        head = pa.concat_tables(tables.values()).slice(0, INFERENCE_SAMPLE_ROWS)
+        firsts = [pc.drop_null(c) for c in head.columns]
+        plan = infer_types({h: c[0].as_py() if len(c) else None for h, c in zip(names, firsts)})
+        schema = pa.schema([(h, _ARROW_TYPES[plan[h]]) for h in names])
+        for date, t in tables.items():
+            fsutil.write_parquet(
+                posixpath.join(out_dir, key, f"date={date}"), arrow_cast(t, schema, tz)
             )
-            # NOTE on row order: the fan-out shuffle moves whole SLICES
-            # (each a contiguous run of file lines), so within-row-group
-            # time clustering survives without an explicit sort — a
-            # sortWithinPartitions("date", ts) here was measured to add
-            # ~1.5s for zero size/stats gain. Re-clustering across
-            # files is the compactor's job (plans/compact.py).
-            path = os.path.join(out_dir, key)
-            out.write.mode("append").partitionBy("date").option(
-                "compression", compression
-            ).parquet(path)
-            # conservation count from the written footers (metadata
-            # only — no extra scan job; verify.rs:56-133 semantics)
-            return key, fsutil.parquet_rows(path)
+        return key
 
-        # Tables write to DISJOINT directories, so the per-table jobs
-        # are independent — submit them from a driver-side thread pool
-        # (the compact_table/rayon shape): each table's sample + write
-        # job is latency-bound on small batches, and on a cluster a
-        # serial loop would leave executors idle between tables.
-        if len(keys) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(8, len(keys))) as pool:
-                written = dict(pool.map(_write_table, sorted(keys)))
-        else:
-            written = dict(map(_write_table, keys))
-        return written
-    finally:
-        blocks.unpersist()
-
-
-FAN_OUT_MIN_BYTES = 32 * 1024 * 1024  # below this the shuffle costs more
-# than the parallelism buys (one ~7MB slice per SLICE_LINES lines; a
-# <32MB batch yields too few slices to spread anyway)
-
-
-def _input_stats(input_path: str | list[str]) -> tuple[int, int]:
-    """Driver-side (file count, total bytes) for the fan-out decision.
-    (0, 0) when the path isn't locally listable (then the natural
-    partitioning stands)."""
-    import glob as _glob
-
-    if isinstance(input_path, list):
-        files = list(input_path)
-    else:
-        try:
-            if os.path.isdir(input_path):
-                files = [
-                    os.path.join(input_path, f)
-                    for f in os.listdir(input_path)
-                    if f.lower().endswith((".zip", ".csv"))
-                ]
-            else:
-                files = _glob.glob(input_path)
-        except OSError:
-            return 0, 0
-    import zipfile as _zf
-
-    total = 0
-    for f in files:
-        try:
-            if f.lower().endswith(".zip"):
-                # the work scales with UNCOMPRESSED bytes (NEM CSVs
-                # deflate 5-15x); the central directory is a cheap
-                # driver-side read
-                with _zf.ZipFile(f) as z:
-                    total += sum(zi.file_size for zi in z.infolist())
-            else:
-                total += os.path.getsize(f)
-        except (OSError, _zf.BadZipFile):
-            pass
-    return len(files), total
+    with ThreadPoolExecutor(max_workers=max(1, min(8, len(groups)))) as pool:
+        keys = {k for k in pool.map(write_group, groups.items()) if k}
+    return {k: fsutil.parquet_rows(posixpath.join(out_dir, k)) for k in sorted(keys)}

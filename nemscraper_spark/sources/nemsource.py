@@ -7,12 +7,10 @@ one row per D-line::
 
     src_file string, table_key string, headers string, line string
 
-exactly the intermediate sources/nemcsv.py's mapInPandas splitter
-produces — both run the same segmenter, ``nemcsv.nem_segmenter``
-(reference grammar: src/process/split.rs:64-125,
-src/process/csv_batch_processor.rs:42-94) — after which the existing
-typed-projection machinery takes over.  The connector form adds what a
-plain mapInPandas kernel can't express:
+the D-lines that sources/nemcsv.ingest tokenizes on the driver — both
+run the same segmenter, ``nemcsv.nem_segmenter`` (reference grammar:
+src/process/split.rs:64-125, src/process/csv_batch_processor.rs:42-94).
+The connector form is the distributed scan of that layer:
 
   * **planning-time partitions** — one InputPartition per ZIP member /
     CSV file, so Spark schedules the scan like any other source (AQE

@@ -8,8 +8,11 @@ worker pools). Spark mapping:
     source's checkpoint IS the reference's `downloaded`/`processed`
     dedup set (M1/M2): each file is processed exactly once across
     restarts, no in-memory HashSet to hydrate.
-  * foreachBatch runs the same batch ingest (sources/nemcsv.ingest's
-    parse→infer→write) — identical semantics batch vs stream.
+  * foreachBatch hands the micro-batch's file paths (Hadoop's
+    ``file:/...`` form, which sources/fsutil reads) to the same batch
+    ingest, sources/nemcsv.ingest, which runs on the driver with
+    pyarrow — identical semantics batch vs stream. The stream selects
+    only ``path``, so Spark never reads the file contents.
   * the service tick (scripts/run_pipeline.run_once) owns the 60s poll
     cadence; each tick drains what has landed with an availableNow
     trigger.

@@ -4,9 +4,9 @@
 Synthesizes N ZIPs of NEM-format CSV (~DATA_MB each, two tables per
 file, realistic column mix: timestamp + ids + floats + quality flag),
 ingests with sources/nemcsv.ingest, and reports wall-clock + rows/s at
-1, 4, and N files. The single-file case is Spark's worst case (one
-unsplittable binaryFile task until the slice fan-out spreads it); the
-multi-file cases show the per-file parallelism a real corpus gets.
+1, 4, and N files. Ingest runs on the driver, so this measures one
+machine's throughput; a file's tables are tokenized, cast and written
+in parallel, its reading and segmenting are serial Python.
 
 Usage: python scripts/ingest_scaling_probe.py [n_files] [rows_per_file]
 """
@@ -63,14 +63,6 @@ def main() -> None:
     from nemscraper_spark.sources.nemcsv import ingest
 
     spark = get_spark(app_name="ingest_scaling_probe")
-    spark.range(1).count()
-
-    def _noop(b):
-        yield from b
-
-    spark.range(64).repartition(32).mapInPandas(_noop, schema="id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
 
     base = tempfile.mkdtemp(prefix="ingest_probe_")
     try:

@@ -605,3 +605,131 @@ def test_text_parses_agree_with_spark(spark, ansi, tmp_path, tz):
 
     assert rows(after) == rows(before)
     assert len(after) == n + 1
+
+
+def _nem_zip(path, table_rows):
+    """One NEM ZIP at ``path`` holding ``(I-header fields, D-rows)`` blocks
+    of the FPP UNIT_MW table."""
+    lines = ["C,NEMP.WORLD,DISPATCHIS,AEMO,PUBLIC,2022/07/20,18:00:00,1,,"]
+    for header, rows in table_rows:
+        lines.append("I,FPP,UNIT_MW,1," + ",".join(header))
+        lines.extend("D,FPP,UNIT_MW,1," + r for r in rows)
+    lines.append('C,"END OF REPORT",9')
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("PUBLIC_DISPATCHIS_202207201800.CSV", "\r\n".join(lines))
+
+
+def _table_rows(spark, root, cols):
+    files = glob.glob(os.path.join(root, "date=*", "*.parquet"))
+    return sorted(tuple(r) for r in read_evolved(spark, files).select(*cols).collect())
+
+
+def test_two_headers_of_one_table_keep_their_columns(spark, tmp_path):
+    """One ingest call that sees two I-headers for the same table writes
+    each row under its own header's columns."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _nem_zip(landing / "PUBLIC_A_20220720_0001.zip",
+             [(["TS", "UNIT", "MW"], ['"2025/06/01 00:00:05",U1,1.5'])])
+    _nem_zip(landing / "PUBLIC_B_20220720_0002.zip",
+             [(["TS", "UNIT", "REGION", "MW"], ['"2025/06/01 00:00:10",U2,NSW1,2.5'])])
+    out = str(tmp_path / "out")
+    assert ingest(spark, str(landing), out) == {"FPP---UNIT_MW---1": 2}
+    assert _table_rows(spark, os.path.join(out, "FPP---UNIT_MW---1"), ["UNIT", "REGION", "MW"]) == [
+        ("U1", None, 1.5),
+        ("U2", "NSW1", 2.5),
+    ]
+
+
+def test_ingest_turns_unparsed_text_to_null_under_ansi(spark, ansi, tmp_path):
+    """A value that does not parse as its column's inferred type becomes
+    null (chunk.rs:211-227) instead of failing the ingest under ANSI."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _nem_zip(landing / "PUBLIC_A_20220720_0001.zip", [(["TS", "UNIT", "MW"], [
+        '"2025/06/01 00:00:05",U1,101.5',
+        '"2025/13/01 00:00:05",U1,n/a',
+    ])])
+    out = str(tmp_path / "out")
+    assert ingest(spark, str(landing), out) == {"FPP---UNIT_MW---1": 2}
+    df = spark.read.parquet(os.path.join(out, "FPP---UNIT_MW---1"))
+    assert dict(df.dtypes)["MW"] == "double" and dict(df.dtypes)["TS"] == "timestamp"
+    got = sorted(df.selectExpr("unix_seconds(TS)", "MW").collect(), key=lambda r: r.MW is None)
+    assert [tuple(r) for r in got] == [(1748736005, 101.5), (None, None)]
+
+
+def test_ragged_rows_are_padded_or_truncated_in_place(spark, tmp_path):
+    """A D-row with too few fields gets nulls, one with too many loses
+    the extras, and both keep their place among the block's rows (the
+    first rows drive type inference)."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _nem_zip(landing / "PUBLIC_A_20220720_0001.zip", [(["K", "UNIT", "MW"], [
+        "1,U1",
+        "2,U2,2.5,extra",
+        "3,U3,3.5",
+        "4",
+    ])])
+    out = str(tmp_path / "out")
+    ingest(spark, str(landing), out)
+    files = glob.glob(os.path.join(out, "FPP---UNIT_MW---1", "date=*", "*.parquet"))
+    import pyarrow.parquet as pq
+
+    assert len(files) == 1
+    assert pq.read_table(files[0]).to_pylist() == [
+        {"K": 1.0, "UNIT": "U1", "MW": None},
+        {"K": 2.0, "UNIT": "U2", "MW": 2.5},
+        {"K": 3.0, "UNIT": "U3", "MW": 3.5},
+        {"K": 4.0, "UNIT": None, "MW": None},
+    ]
+
+
+def test_file_date_matches_spark_date_from_filename(spark):
+    """The driver's filename date (partition value) is the Spark
+    ``date_from_filename`` value, name for name."""
+    from pyspark.sql import functions as F
+
+    from nemscraper_spark.functions import date_from_filename
+    from nemscraper_spark.sources.nemcsv import file_date
+
+    names = [
+        "PUBLIC_DISPATCHIS_20220720_0000000367313233.zip",  # 8-digit, first wins
+        "PUBLIC_X_202207201800.CSV",
+        "report-2024-02-29.csv",  # dashed
+        "report_2024_12_31.zip",  # underscored
+        "mixed_2024-01_05.zip",
+        "PUBLIC_19991231_20400101.zip",  # out of range
+        "PUBLIC_20221320_0001.zip",  # month 13
+        "PUBLIC_2022-13-01.zip",
+        "no_date_here.zip",
+        "",
+    ]
+    want = [
+        r[0]
+        for r in spark.createDataFrame([(n,) for n in names], "n string")
+        .select(date_from_filename(F.col("n")))
+        .collect()
+    ]
+    assert [file_date(n) for n in names] == want
+
+
+@pytest.mark.parametrize(
+    "path, local, prefix",
+    [
+        ("file:/tmp/x/a.zip", "/tmp/x/a.zip", "file:"),
+        ("file:///tmp/x/a.zip", "/tmp/x/a.zip", "file://"),
+        ("/tmp/x/a.zip", "/tmp/x/a.zip", ""),
+    ],
+)
+def test_get_fs_round_trips_local_forms(path, local, prefix):
+    """Hadoop's ``file:/abs`` (binaryFile's path column), ``file:///abs``
+    and a bare path all resolve to the local filesystem, and
+    ``prefix + local`` gives the path back."""
+    import pyarrow.fs as pafs
+
+    from nemscraper_spark.sources import fsutil
+
+    fs, got_local, got_prefix = fsutil.get_fs(path)
+    assert isinstance(fs, pafs.LocalFileSystem)
+    assert (got_local, got_prefix) == (local, prefix)
+    assert got_prefix + got_local == path

@@ -77,9 +77,9 @@ def test_connector_drops_pre_i_and_c_rows(spark, tmp_path):
 
 
 def test_connector_matches_splitter_on_malformed_grammar(spark, tmp_path):
-    """The connector's line layer must equal the mapInPandas splitter's
-    (D-filtered) line layer on grammar edge cases — the 'exactly the
-    same intermediate' contract."""
+    """The connector's line layer must equal the D-lines of the
+    segmenter that ingest tokenizes, on grammar edge cases — the
+    'exactly the same intermediate' contract."""
     txt = "\r\n".join(
         [
             "C,head,er",
@@ -101,15 +101,13 @@ def test_connector_matches_splitter_on_malformed_grammar(spark, tmp_path):
         (r.table_key, r.headers, r.line)
         for r in spark.read.format("nemcsv").load(str(tmp_path / "m.csv")).collect()
     )
-    from pyspark.sql import functions as F
-
-    from nemscraper_spark.sources.nemcsv import parse_files
+    from nemscraper_spark.sources.nemcsv import nem_segmenter
 
     want = sorted(
-        (r.table_key, r.headers, r.line)
-        for r in parse_files(spark, str(tmp_path / "m.csv"))
-        .filter(F.col("line").startswith("D,"))
-        .collect()
+        (key, headers, line)
+        for key, headers, lines in nem_segmenter()(txt)
+        for line in lines
+        if line.startswith("D,")
     )
     assert got == want
     assert ("A---B---1", "H,1\x1fH2", "D,A,B,1,y") in got

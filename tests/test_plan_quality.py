@@ -81,35 +81,42 @@ def test_partition_pruning_on_ingest_output(spark, tmp_path):
     assert df.count() == 4
 
 
-def test_ingest_sampler_is_shuffle_free(spark, tmp_path):
-    """The inference sampler must never shuffle line data. Per-table
-    sample = filter + CollectLimit (no Exchange AT ALL — early-exit on
-    the cached slice frame); table discovery = map-side partial
-    distinct, so its one Exchange carries only deduped keys (the
-    round-1 version ranked every D-line through a global window — a
-    full-corpus shuffle, flagged as a 100TB scale-killer)."""
-    from nemscraper_spark.sources.nemcsv import (
-        discover_tables,
-        parse_blocks,
-        parse_files,
-        sample_query,
-    )
-    from tests.test_ingest import NEM_CSV
+def test_ingest_starts_no_spark_job(spark, tmp_path):
+    """ingest runs on the driver: no job id falls between a control job
+    run just before it and one run just after it (Spark numbers jobs in
+    order; the listener bus delivers them in order)."""
+    import time
+
+    from nemscraper_spark.sources.nemcsv import ingest
+    from tests.test_ingest import D_ROWS_UNIT_MW, NEM_CSV
 
     landing = tmp_path / "landing"
     landing.mkdir()
     with zipfile.ZipFile(landing / "PUBLIC_X_20220720_0001.zip", "w") as zf:
         zf.writestr("PUBLIC_X_20220720.CSV", NEM_CSV)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
-    p = plan(sample_query(parse_files(spark, str(landing)), "FPP---UNIT_MW---1"))
-    assert "Exchange" not in p
-    assert "CollectLimit" in p or "GlobalLimit" in p
+    def control(group):
+        sc.setJobGroup(group, "one job")
+        spark.range(3).collect()
+        for _ in range(100):
+            if tracker.getJobIdsForGroup(group):
+                return tracker.getJobIdsForGroup(group)
+            time.sleep(0.05)
+        raise AssertionError(f"control job {group} never seen")
 
-    pd_ = plan(discover_tables(parse_blocks(spark, str(landing))))
-    # partial aggregate runs BEFORE the exchange: keys are deduped
-    # map-side, the exchange never carries slice/line rows
-    pre_exchange = pd_.split("Exchange")[0]
-    assert "HashAggregate" in pre_exchange or "SortAggregate" in pre_exchange
+    try:
+        before = control("before-ingest")
+        # a job ingest started must not count as a control job
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        counts = ingest(spark, str(landing), str(tmp_path / "out"))
+        after = control("after-ingest")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert min(after) == max(before) + 1
+    assert counts["FPP---UNIT_MW---1"] == D_ROWS_UNIT_MW
 
 
 def test_range_join_bucketed_avoids_bnlj(spark, sf_dir):
