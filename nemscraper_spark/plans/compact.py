@@ -5,9 +5,10 @@ Per `table/date=` partition: resolve the evolved schema from parquet
 footers (metadata only, sources/evolve.evolved_schema), then stream
 every small file + any previous compacted file batch by batch through
 sources/evolve.arrow_cast (text that does not parse becomes null,
-compactor.rs:409-479) into ONE pyarrow ParquetWriter, and swap
-crash-safely. The driver does it all, as the reference does inside one
-process (compactor.rs:545-581); no Spark job runs. The swap is
+compactor.rs:409-479) into ONE file written by fsutil.write_parquet
+(the at-rest codec and row groups every driver-side writer shares),
+and swap crash-safely. The driver does it all, as the reference does
+inside one process (compactor.rs:545-581); no Spark job runs. The swap is
 manifest-guarded stage → rename-in → delete-sources, the engine-level
 equivalent of the reference's .tmp + atomic rename
 (compactor.rs:645-749) — at no point does the partition hold zero
@@ -30,7 +31,6 @@ with >1 file are touched.
 from __future__ import annotations
 
 import json
-import os
 import posixpath
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -111,19 +111,14 @@ def compact_partition(
         ".compact_tmp_" + posixpath.basename(partition_dir).replace("=", "-"),
     )
     fsutil.delete_dir(staging)  # stale tmp from a pre-manifest crash
-    # Dense codec at rest (the cold path — ingest writes snappy, see
-    # sources/nemcsv.ingest): the reference's brotli-5, or zstd at
-    # Spark's parquet writer level (scripts/codec_ab.py compares them).
-    codec = os.environ.get("SPARK_GRAFT_REST_CODEC", "zstd")
-    level = {"brotli": 5, "zstd": 3}.get(codec.lower())
-    fs, local, _ = fsutil.get_fs(staging)
-    fs.create_dir(local, recursive=True)
-    out = fs.open_output_stream(posixpath.join(local, "part-0.parquet"))
-    with out, pq.ParquetWriter(out, schema, compression=codec, compression_level=level) as writer:
+
+    def batches():
         for f in files:
             with fsutil.open_input(f) as fh:
                 for batch in pq.ParquetFile(fh).iter_batches():
-                    writer.write_batch(arrow_cast(batch, schema, tz))
+                    yield arrow_cast(batch, schema, tz)
+
+    fsutil.write_parquet(staging, schema, batches())
     staged = fsutil.list_files(staging, suffix=".parquet")
     # row count from the staged footers (metadata-only, no extra job)
     rows = fsutil.parquet_rows(staging)

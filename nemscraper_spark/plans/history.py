@@ -15,9 +15,10 @@ files and vacuums them into consolidated files every 30s
     checkpoint is the dedup set and this ledger only records what was
     ingested;
   * ``add()`` writes one small parquet file per date on the driver
-    through ``fsutil.write_parquet``, so ``file://`` / ``gs://``
-    roots work as bare paths do. Each file is staged as a hidden
-    ``.<name>.tmp`` (Spark skips dot-files) and renamed into place;
+    through ``fsutil.write_parquet``, in the at-rest layout of every
+    driver-written file, so ``file://`` / ``gs://`` roots work as bare
+    paths do. Each file is staged as a hidden ``.<name>.tmp`` (Spark
+    skips dot-files) and renamed into place;
   * ``vacuum()`` (M3) merges only partitions that hold two or more
     files, partition by partition (table_history.rs:143-185): its cost
     follows the tick's appends, not the ledger's age. A crash between
@@ -162,7 +163,8 @@ class TableHistory:
         for day, recs in by_date.items():
             fsutil.write_parquet(
                 posixpath.join(self.path, f"date={day}"),
-                pa.Table.from_pylist(recs, schema=self.arrow_schema),
+                self.arrow_schema,
+                [pa.Table.from_pylist(recs, schema=self.arrow_schema)],
             )
 
     def vacuum(self) -> None:
@@ -177,9 +179,10 @@ class TableHistory:
         for part, files in self._partitions().items():
             if len(files) < 2:
                 continue
-            merged = pa.concat_tables(
-                self._read_file(f).select(names).cast(self.arrow_schema) for f in files
+            fsutil.write_parquet(
+                part,
+                self.arrow_schema,
+                (self._read_file(f).select(names).cast(self.arrow_schema) for f in files),
             )
-            fsutil.write_parquet(part, merged)
             for f in files:
                 fsutil.delete_with_crc(f)

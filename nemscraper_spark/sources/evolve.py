@@ -29,7 +29,6 @@ from functools import reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pa_ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +36,7 @@ from pyspark.sql import types as T
 
 from nemscraper_spark.functions import clean_str
 from nemscraper_spark.functions.columns import NEM_TS_FORMAT
+from nemscraper_spark.sources import fsutil
 
 _STRINGY = {pa.string(), pa.large_string()}
 
@@ -104,9 +104,11 @@ _TRUE_TEXT = pa.array(["t", "true", "y", "yes", "1"])
 _BOOL_TEXT = pa.array(["t", "true", "y", "yes", "1", "f", "false", "n", "no", "0"])
 
 
-def written_schema(target: dict[str, pa.DataType]) -> pa.Schema:
-    """The arrow schema the compactor writes for an evolved schema."""
-    return pa.schema([(name, _written(t)[1]) for name, t in target.items()])
+def written_schema(target: dict[str, pa.DataType | str]) -> pa.Schema:
+    """The arrow schema ingest and the compactor write for evolved
+    arrow types or inferred Spark type names: written types, fields
+    sorted by name (compactor.rs:335-406)."""
+    return pa.schema([(name, _written(t)[1]) for name, t in sorted(target.items())])
 
 
 def arrow_cast(batch: pa.RecordBatch | pa.Table, schema: pa.Schema, tz: str):
@@ -163,15 +165,16 @@ def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
     """Read many parquet files as one DataFrame under the evolved
     schema, null-filling missing columns.
 
-    Files are grouped by their physical schema (footer signature) so
+    Files are grouped by their field set (name → type; Spark reads
+    parquet columns by name, so column order does not split a group) so
     each group is ONE distributed scan (not |files| jobs), then each
     group is cast to the evolved schema and unioned by name.
     """
     target = evolved_schema(files)
-    groups: dict[str, list[str]] = {}
+    groups: dict[frozenset, list[str]] = {}
     for f in files:
-        sig = pq.read_schema(f).to_string()
-        groups.setdefault(sig, []).append(f)
+        fields = frozenset((fld.name, str(fld.type)) for fld in pq.read_schema(f))
+        groups.setdefault(fields, []).append(f)
 
     parts = []
     for group_files in groups.values():
@@ -187,8 +190,8 @@ def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
-# evolved arrow type → its Spark type and the arrow type the compactor
-# writes (anything else is a string)
+# evolved arrow type → its Spark type and the arrow type ingest and the
+# compactor write (anything else is a string)
 _WRITTEN = (
     (pa.types.is_timestamp, "timestamp", pa.timestamp("us", tz="UTC")),
     (pa.types.is_floating, "double", pa.float64()),
@@ -197,11 +200,16 @@ _WRITTEN = (
 )
 
 
-def _written(t: pa.DataType) -> tuple[str, pa.DataType]:
-    return next(((sp, ar) for is_t, sp, ar in _WRITTEN if is_t(t)), ("string", pa.string()))
+def _written(t: pa.DataType | str) -> tuple[str, pa.DataType]:
+    """``t`` is an evolved arrow type, or a Spark type name (ingest's
+    inferred types, nemcsv.infer_types)."""
+    return next(
+        ((sp, ar) for is_t, sp, ar in _WRITTEN if (sp == t if isinstance(t, str) else is_t(t))),
+        ("string", pa.string()),
+    )
 
 
 def list_parquet_files(root: str) -> list[str]:
-    """All parquet data files under root (any partition depth)."""
-    ds = pa_ds.dataset(root, format="parquet", partitioning="hive")
-    return list(ds.files)
+    """All parquet data files under root (any partition depth), hidden
+    ones left out as Spark leaves them out."""
+    return fsutil.list_files(root, ".parquet", recursive=True)

@@ -10,15 +10,21 @@ through pyarrow.fs so the same code runs on ``file://``, ``s3://``,
 
 Every helper takes/returns FULL paths in the caller's original notation
 (scheme prefix preserved) so results can be handed straight back to
-Spark readers.
+Spark readers. ``write_parquet`` is the one driver-side parquet writer:
+ingest, compaction and the history ledgers share its at-rest layout.
 """
 
 from __future__ import annotations
 
+import os
 import posixpath
 import uuid
 
 import pyarrow.fs as pafs
+
+# rows per row group at rest: arrow-rs's ArrowWriter default, the
+# reference's writer (chunk.rs:367-369, compactor.rs:680-684)
+ROW_GROUP_ROWS = 1 << 20
 
 
 def get_fs(path: str) -> tuple[pafs.FileSystem, str, str]:
@@ -45,13 +51,21 @@ def get_fs(path: str) -> tuple[pafs.FileSystem, str, str]:
 
 def list_files(path: str, suffix: str = "", recursive: bool = False) -> list[str]:
     """Full paths of regular files under ``path`` (sorted), optionally
-    filtered by suffix. Missing dirs yield []."""
+    filtered by suffix. Missing dirs yield []. A file with a path
+    component below ``path`` that starts with ``.`` or ``_`` is hidden,
+    as Spark's listing hides it (staged files, manifests, ``.crc``
+    sidecars); ``path`` itself may be hidden."""
     fs, local, prefix = get_fs(path)
     sel = pafs.FileSelector(local, recursive=recursive, allow_not_found=True)
     out = [
         prefix + info.path
         for info in fs.get_file_info(sel)
-        if info.type == pafs.FileType.File and info.path.endswith(suffix)
+        if info.type == pafs.FileType.File
+        and info.path.endswith(suffix)
+        and not any(
+            c.startswith((".", "_"))
+            for c in posixpath.relpath(info.path, local).split("/")
+        )
     ]
     return sorted(out)
 
@@ -115,19 +129,37 @@ def write_text(path: str, text: str) -> None:
     fs.move(tmp, local)
 
 
-def write_parquet(dir_path: str, table) -> None:
-    """Write ``table`` as one new snappy ``part-<uuid>.snappy.parquet``
-    in ``dir_path``, staged under a hidden ``.<name>.tmp`` (Spark skips
-    dot-files) and renamed into place, so a concurrent scan never sees
-    it torn."""
+def write_parquet(dir_path: str, schema, batches) -> None:
+    """Write ``batches`` (arrow record batches or tables of ``schema``)
+    as one new ``part-<uuid>.parquet`` in ``dir_path``, in the at-rest
+    layout every driver-side writer shares: the ``SPARK_GRAFT_REST_CODEC``
+    codec (default zstd at level 3, the level of Spark's parquet writer;
+    brotli at level 5, the reference's chunk.rs:367-369) and row groups
+    of ``ROW_GROUP_ROWS`` rows, so a file of up to that many rows is one
+    row group. Batches are coalesced as they arrive, so memory is
+    bounded by one row group, not by the file. The file is staged under
+    a hidden ``.<name>.tmp`` (Spark skips dot-files) and renamed into
+    place, so a concurrent scan never sees it torn."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    codec = os.environ.get("SPARK_GRAFT_REST_CODEC", "zstd")
+    level = {"brotli": 5, "zstd": 3}.get(codec.lower())
     fs, local, _ = get_fs(dir_path)
     fs.create_dir(local, recursive=True)
-    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    name = f"part-{uuid.uuid4()}.parquet"
     tmp = posixpath.join(local, f".{name}.tmp")
-    with fs.open_output_stream(tmp) as out:
-        pq.write_table(table, out, compression="snappy")
+    with fs.open_output_stream(tmp) as out, pq.ParquetWriter(
+        out, schema, compression=codec, compression_level=level
+    ) as writer:
+        pending = schema.empty_table()
+        for batch in batches:
+            pending = pa.concat_tables([pending, pa.table(batch)])
+            while pending.num_rows >= ROW_GROUP_ROWS:
+                writer.write_table(pending.slice(0, ROW_GROUP_ROWS), ROW_GROUP_ROWS)
+                pending = pending.slice(ROW_GROUP_ROWS)
+        if pending.num_rows:
+            writer.write_table(pending, ROW_GROUP_ROWS)
     fs.move(tmp, posixpath.join(local, name))
 
 

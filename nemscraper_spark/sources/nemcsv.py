@@ -21,8 +21,8 @@ as the reference splits and converts each file inside one process
     list inputs (sources/fsutil) → each ZIP's *.csv members →
     nem_segmenter blocks, grouped by (table, I-header) →
     pyarrow.csv tokenization, D-rows only → first-1000-row type
-    inference → clean + cast (sources/evolve.arrow_cast) → one snappy
-    part file per (group, date=)
+    inference → clean + cast (sources/evolve.arrow_cast) → one part
+    file per (group, date=) in the at-rest layout (fsutil.write_parquet)
 
 Groups run in a driver thread pool; pyarrow releases the GIL while it
 tokenizes, casts and writes, but reading and segmenting the files is
@@ -47,16 +47,11 @@ import pyarrow.csv as pacsv
 from pyspark.sql import SparkSession
 
 from nemscraper_spark.sources import fsutil
-from nemscraper_spark.sources.evolve import arrow_cast, clean_text
+from nemscraper_spark.sources.evolve import arrow_cast, clean_text, written_schema
 
 INFERENCE_SAMPLE_ROWS = 1000  # chunk.rs:324 — first 1k rows drive inference
 _HDR_SEP = "\x1f"  # joins header names into one string column
 _MARKERS = ["_c0", "_c1", "_c2", "_c3"]  # marker, table, subtable, version
-_ARROW_TYPES = {
-    "double": pa.float64(),
-    "timestamp": pa.timestamp("us", tz="UTC"),
-    "string": pa.string(),
-}
 # functions.date_from_filename's two patterns (chunk.rs:258-308)
 _COMPACT_DATE = re.compile(r"(20[0-3]\d)(0[1-9]|1[0-2])(0[1-9]|[12]\d|3[01])", re.ASCII)
 _DASHED_DATE = re.compile(r"(20[0-3]\d)[-_](0[1-9]|1[0-2])[-_](0[1-9]|[12]\d|3[01])", re.ASCII)
@@ -229,9 +224,12 @@ def ingest(spark: SparkSession, input_path: str | list[str], out_dir: str) -> di
     session time zone, the only thing ``spark`` supplies.
 
     Partition value = date extracted from the source FILENAME
-    (chunk.rs:258-308, 348-351), not from row data. Files are snappy:
-    the compactor (plans/compact.py) rewrites a partition with the
-    dense codec once it holds two or more files.
+    (chunk.rs:258-308, 348-351), not from row data. Files are written
+    as the compactor (plans/compact.py) writes them: the written types
+    of ``evolve.written_schema`` with fields sorted by name, through
+    ``fsutil.write_parquet``. So a partition that one tick writes is
+    already at rest; the compactor merges a partition once it holds two
+    or more files.
 
     Returns {table_key: row_count} over every file of each table written
     to (footers only), so callers can run the conservation check
@@ -259,11 +257,12 @@ def ingest(spark: SparkSession, input_path: str | list[str], out_dir: str) -> di
             return None
         head = pa.concat_tables(tables.values()).slice(0, INFERENCE_SAMPLE_ROWS)
         firsts = [pc.drop_null(c) for c in head.columns]
-        plan = infer_types({h: c[0].as_py() if len(c) else None for h, c in zip(names, firsts)})
-        schema = pa.schema([(h, _ARROW_TYPES[plan[h]]) for h in names])
+        schema = written_schema(
+            infer_types({h: c[0].as_py() if len(c) else None for h, c in zip(names, firsts)})
+        )
         for date, t in tables.items():
             fsutil.write_parquet(
-                posixpath.join(out_dir, key, f"date={date}"), arrow_cast(t, schema, tz)
+                posixpath.join(out_dir, key, f"date={date}"), schema, [arrow_cast(t, schema, tz)]
             )
         return key
 

@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""Codec A/B for BASELINE.md: write the same tables under each codec
-available on Spark's classpath and record size + wall time, so the
-snappy/zstd deviation from the reference's brotli-5
-(/root/reference/README.md:14-27, writer src/process/chunk.rs:367-369)
-is directly comparable to its published numbers. Brotli is NOT on the
-parquet-java classpath here (CodecFactory raises) — the documented
-reason Spark WRITES stay zstd — but pyarrow ships libbrotli, so the
-table below includes REAL brotli-5 rows written by pyarrow on the same
-data: the density gap is measured, not argued. (A cluster with
-parquet brotli-codec on the classpath flips the deviation off via the
-same .option("compression", "brotli"); nothing else changes.)
+"""Codec A/B for BASELINE.md: write the same tables through the
+engine's own at-rest writer, ``sources/fsutil.write_parquet`` (its row
+groups and stage-and-rename included), under each
+``SPARK_GRAFT_REST_CODEC`` value and record size + wall time, so the
+engine's default zstd-3 is directly comparable to the reference's
+brotli-5 (the reference's README.md:14-27, writer
+src/process/chunk.rs:367-369). ``write_parquet`` fixes the level:
+zstd at 3, brotli at 5. Every file the service tick writes (ingest,
+compaction, ledgers) goes through that writer; only the analytics
+outputs (scripts/run_pipeline.py step 4) are Spark-written, snappy.
 
 Usage: python scripts/codec_ab.py [sf_dir] (default /root/testdata/sf0.1)
 Prints a markdown table; paste into BASELINE.md.
@@ -39,70 +38,27 @@ def _tree_bytes(root: str) -> int:
 def main() -> None:
     import tempfile
 
-    from nemscraper_spark.session import get_spark
+    import pyarrow.parquet as pq
+
+    from nemscraper_spark.sources import fsutil
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(app_name="codec_ab")
 
     # one text-heavy table (documents ~ the NEM CSV string payload) and
     # one numeric table (lineitem ~ the typed measurement payload)
-    tables = {}
-    for t in ("documents", "lineitem"):
-        df = spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
-        tables[t] = df.cache()
-        tables[t].count()  # materialize so codec timing excludes the read
-
-    # (codec, parquet zstd level or None). zstd level rides the hadoop
-    # conf parquet.compression.codec.zstd.level (parquet-java >= 1.12).
-    cases = [
-        ("snappy", None),
-        ("zstd", 3),
-        ("zstd", 10),
-        ("gzip", None),
-    ]
+    tables = {
+        t: pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
+        for t in ("documents", "lineitem")
+    }
     rows = []
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    for codec, level in cases:
-        if level is not None:
-            hconf.setInt("parquet.compression.codec.zstd.level", level)
-        for t, df in tables.items():
+    for codec in ("snappy", "zstd", "brotli", "gzip"):
+        os.environ["SPARK_GRAFT_REST_CODEC"] = codec
+        for t, table in tables.items():
             with tempfile.TemporaryDirectory(prefix="codec_ab_") as tmp:
-                out = os.path.join(tmp, "out")
                 t0 = time.perf_counter()
-                df.write.mode("overwrite").option("compression", codec).parquet(out)
+                fsutil.write_parquet(tmp, table.schema, table.to_batches())
                 dt = time.perf_counter() - t0
-                rows.append(
-                    (t, codec if level is None else f"{codec}-{level}",
-                     _tree_bytes(out), round(dt, 2))
-                )
-        if level is not None:
-            hconf.unset("parquet.compression.codec.zstd.level")
-
-    # pyarrow rows: brotli-5 is the REFERENCE'S exact codec+level; the
-    # pyarrow zstd-3 row controls for writer implementation differences
-    # (compare brotli-5/pyarrow against zstd-3/pyarrow, not against the
-    # Spark rows).  Single-threaded single-file writes — density is the
-    # comparable number, wall time is not.
-    import pyarrow.parquet as pq
-
-    for codec, level in (("brotli", 5), ("zstd", 3)):
-        for t in tables:
-            src = pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
-            with tempfile.TemporaryDirectory(prefix="codec_ab_pa_") as tmp:
-                out = os.path.join(tmp, "out.parquet")
-                t0 = time.perf_counter()
-                try:
-                    pq.write_table(
-                        src, out, compression=codec, compression_level=level
-                    )
-                except Exception as ex:  # codec absent in this pyarrow
-                    print(f"pyarrow {codec}-{level} unavailable: {ex}")
-                    continue
-                dt = time.perf_counter() - t0
-                rows.append(
-                    (t, f"{codec}-{level}/pyarrow",
-                     os.path.getsize(out), round(dt, 2))
-                )
+                rows.append((t, codec, _tree_bytes(tmp), round(dt, 2)))
 
     print("\nTable | Codec | Bytes | Ratio vs snappy | Write s")
     print("---|---|---|---|---")

@@ -17,6 +17,7 @@ import pytest
 
 from nemscraper_spark.plans.compact import compact_partition, partitions_needing_compaction
 from nemscraper_spark.plans.history import TableHistory
+from nemscraper_spark.sources import fsutil
 from nemscraper_spark.sources.nemcsv import ingest, infer_types
 from nemscraper_spark.sources.evolve import evolved_schema, read_evolved
 
@@ -130,6 +131,29 @@ def test_evolved_schema_lattice(spark, tmp_path):
     rows = sorted(df.collect(), key=lambda r: r.MARGINALVALUE)
     assert [r.MARGINALVALUE for r in rows] == [1.5, 2.5]
     assert rows[0].ONLY_A == "x" and rows[1].ONLY_A is None
+
+
+def test_read_evolved_groups_by_field_set(spark, tmp_path, monkeypatch):
+    """Files with the same fields in different column orders are one
+    group: one ``DataFrameReader.parquet`` call reads the rows of both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameReader
+
+    pq.write_table(pa.table({"K": [1, 2], "V": ["x", "y"]}), tmp_path / "a.parquet")
+    pq.write_table(pa.table({"V": ["z"], "K": [3]}), tmp_path / "b.parquet")
+    calls = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        calls.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    files = [str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")]
+    got = sorted(tuple(r) for r in read_evolved(spark, files).select("K", "V").collect())
+    assert got == [(1, "x"), (2, "y"), (3, "z")]
+    assert len(calls) == 1
 
 
 def test_compaction(spark, ingested):
@@ -387,6 +411,8 @@ def test_compaction_crash_safe(spark, multi_file_partition, crash_after):
         compact_partition(spark, part, _crash_after=crash_after)
     # mid-crash: no row lost (duplicates allowed in the swap window)
     assert rows(spark.read.parquet(root)) == before
+    # footer counts hide what Spark hides (the staged copy)
+    assert fsutil.parquet_rows(root) == spark.read.parquet(root).count()
     # recovery (implicit in the next compaction pass) converges
     compact_partition(spark, part)
     after_df = spark.read.parquet(root)

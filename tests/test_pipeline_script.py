@@ -233,3 +233,41 @@ def test_streaming_mode_checkpoint_exactly_once(spark, tmp_path):
     # and every tick vacuumed it: one file per ledger partition
     for part in glob.glob(os.path.join(led.path, "date=*")):
         assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
+
+
+def test_tick_leaves_every_partition_at_rest(spark, tmp_path):
+    """After two ticks over a landing dir whose files span two dates,
+    every data file under parquet/ is in the one at-rest layout: the
+    rest codec, fields sorted by name, one row group. ``date=2022-07-20``
+    is written by one tick only; ``date=2022-07-21`` by both ticks, so
+    the second tick compacts its two files."""
+    import pyarrow.parquet as pq
+
+    work = tmp_path / "work"
+    zips = work / "zips"
+    zips.mkdir(parents=True)
+
+    def _drop(day, seq):
+        with zipfile.ZipFile(zips / f"PUBLIC_DISPATCHIS_{day}_000{seq}.zip", "w") as zf:
+            zf.writestr(f"PUBLIC_DISPATCHIS_{day}1800.CSV", NEM_CSV)
+
+    _drop("20220720", 1)
+    _drop("20220721", 1)
+    run_once(spark, str(work), [], None)
+    _drop("20220721", 2)
+    s2 = run_once(spark, str(work), [], None)
+    table = os.path.join(str(work), "parquet", "FPP---UNIT_MW---1")
+    assert list(s2["compacted"]["FPP---UNIT_MW---1"]) == [os.path.join(table, "date=2022-07-21")]
+
+    files = glob.glob(os.path.join(str(work), "parquet", "*", "date=*", "*.parquet"))
+    assert {os.path.basename(os.path.dirname(f)) for f in files} == {
+        "date=2022-07-20",
+        "date=2022-07-21",
+    }
+    codec = os.environ.get("SPARK_GRAFT_REST_CODEC", "zstd").upper()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        names = md.schema.to_arrow_schema().names
+        assert names == sorted(names), f
+        assert md.num_row_groups == 1, f
+        assert {md.row_group(0).column(c).compression for c in range(md.num_columns)} == {codec}, f
