@@ -8,9 +8,12 @@ reference resolves those with a supertype lattice on compaction
     Utf8 < Float64          Utf8 < Timestamp      (nullability ORed,
     fields unioned, sorted alphabetically, missing columns null-filled)
 
-Implementation: a metadata-only pyarrow footer pass (like
-compactor.rs:199-227 — no data read), then per-file read + cast +
-unionByName(allowMissingColumns=True). Ordinary DataFrame code — no
+Implementation: one metadata-only pyarrow footer pass (like
+compactor.rs:199-227 — no data read) gives the evolved target and each
+file's Spark types, as Spark's schema inference would give them. Files
+whose types agree share one scan, handed that schema (so no inference
+job starts); each scan is cast to the target, and unionByName joins
+only scans whose types conflict. Ordinary DataFrame code — no
 Catalyst extension needed (SURVEY.md §4). Text that does not parse
 becomes null (compactor.rs:409-479), under ANSI too (try_cast);
 ``arrow_cast`` is the same cast on an arrow batch, for plans/compact.py.
@@ -69,18 +72,76 @@ def evolve_types(a: pa.DataType, b: pa.DataType) -> pa.DataType:
     raise TypeError(f"no supertype for {a} vs {b}")
 
 
-def evolved_schema(files: list[str]) -> dict[str, pa.DataType]:
-    """Union-of-fields + supertype per field across parquet footers,
+def _footers(files: list[str]) -> list[tuple[pa.Schema, pq.ParquetSchema]]:
+    """Each file's arrow schema and parquet schema, from its footer
+    alone (compactor.rs:199-227: no data read)."""
+    out = []
+    for f in files:
+        with fsutil.open_input(f) as fh:
+            pf = pq.ParquetFile(fh)
+            out.append((pf.schema_arrow, pf.schema))
+    return out
+
+
+def _lattice(schemas) -> dict[str, pa.DataType]:
+    """Union-of-fields + supertype per field across arrow schemas,
     alphabetically ordered (compactor.rs:335-406)."""
     fields: dict[str, pa.DataType] = {}
-    for f in files:
-        sch = pq.read_schema(f)
+    for sch in schemas:
         for field in sch:
             if field.name in fields:
                 fields[field.name] = evolve_types(fields[field.name], field.type)
             else:
                 fields[field.name] = field.type
     return dict(sorted(fields.items()))
+
+
+def evolved_schema(files: list[str]) -> dict[str, pa.DataType]:
+    """The evolved target of ``files``, from their parquet footers."""
+    return _lattice(arrow for arrow, _ in _footers(files))
+
+
+# arrow type → the Spark type Spark's parquet schema inference gives it
+# (timestamps and decimals are handled in _spark_types)
+_INFERRED = (
+    (pa.types.is_string, T.StringType()),
+    (pa.types.is_large_string, T.StringType()),
+    (pa.types.is_float64, T.DoubleType()),
+    (pa.types.is_int64, T.LongType()),
+    (pa.types.is_int32, T.IntegerType()),
+    (pa.types.is_boolean, T.BooleanType()),
+    (pa.types.is_date32, T.DateType()),
+)
+
+
+def _spark_types(
+    file: str, arrow: pa.Schema, parquet: pq.ParquetSchema, ntz: bool
+) -> dict[str, T.DataType]:
+    """``{name: Spark type}`` of one file's footer, as Spark's parquet
+    schema inference gives it: a timestamp stored as INT96 or with a
+    time zone is a ``timestamp``, any other a ``timestamp_ntz`` when
+    ``ntz`` (spark.sql.parquet.inferTimestampNTZ.enabled). A type
+    this map does not know raises ``TypeError``."""
+    stored = {parquet.column(i).path: parquet.column(i) for i in range(len(parquet))}
+    out = {}
+    for field in arrow:
+        t = field.type
+        if pa.types.is_timestamp(t):
+            col = stored[field.name]
+            if col.physical_type == "INT96":
+                sp = T.TimestampType()
+            elif "nanoseconds" in str(col.logical_type):
+                sp = None  # Spark reads no TIMESTAMP(NANOS) as a timestamp
+            else:
+                sp = T.TimestampNTZType() if ntz and t.tz is None else T.TimestampType()
+        elif pa.types.is_decimal128(t):
+            sp = T.DecimalType(t.precision, t.scale)
+        else:
+            sp = next((s for is_t, s in _INFERRED if is_t(t)), None)
+        if sp is None:
+            raise TypeError(f"column {field.name!r} of {file}: no Spark type for parquet {t}")
+        out[field.name] = sp
+    return out
 
 
 def _spark_cast(col: str, t: pa.DataType, src: T.DataType):
@@ -165,25 +226,38 @@ def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
     """Read many parquet files as one DataFrame under the evolved
     schema, null-filling missing columns.
 
-    Files are grouped by their field set (name → type; Spark reads
-    parquet columns by name, so column order does not split a group) so
-    each group is ONE distributed scan (not |files| jobs), then each
-    group is cast to the evolved schema and unioned by name.
+    One footer pass gives the evolved target and each file's Spark
+    types. A file joins the first group whose types never give one of
+    its columns a different type, so files that only lack columns share
+    a group. Each group is ONE distributed scan handed its schema
+    (``spark.read.schema``: no schema-inference job; Spark null-fills
+    a column a file lacks), cast to the target; groups whose types
+    conflict (string vs double, say) are unioned by name.
     """
-    target = evolved_schema(files)
-    groups: dict[frozenset, list[str]] = {}
-    for f in files:
-        fields = frozenset((fld.name, str(fld.type)) for fld in pq.read_schema(f))
-        groups.setdefault(fields, []).append(f)
+    if not files:
+        raise ValueError("read_evolved: no files given")
+    footers = _footers(files)
+    target = _lattice(arrow for arrow, _ in footers)
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled").lower() == "true"
+    groups: list[tuple[dict[str, T.DataType], list[str]]] = []
+    for f, (arrow, parquet) in zip(files, footers):
+        types = _spark_types(f, arrow, parquet, ntz)
+        for group_types, group_files in groups:
+            if all(group_types.get(name, t) == t for name, t in types.items()):
+                group_types.update(types)
+                group_files.append(f)
+                break
+        else:
+            groups.append((types, [f]))
 
     parts = []
-    for group_files in groups.values():
-        df = spark.read.parquet(*group_files)
-        present = {f.name: f.dataType for f in df.schema.fields}
+    for types, group_files in groups:
+        schema = T.StructType([T.StructField(name, t) for name, t in types.items()])
+        df = spark.read.schema(schema).parquet(*group_files)
         cols = []
         for name, t in target.items():
-            if name in present:
-                cols.append(_spark_cast(name, t, present[name]))
+            if name in types:
+                cols.append(_spark_cast(name, t, types[name]))
             else:
                 cols.append(F.lit(None).cast(_written(t)[0]).alias(name))
         parts.append(df.select(*cols))

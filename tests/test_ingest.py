@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import zipfile
 
 import pytest
@@ -154,6 +155,131 @@ def test_read_evolved_groups_by_field_set(spark, tmp_path, monkeypatch):
     got = sorted(tuple(r) for r in read_evolved(spark, files).select("K", "V").collect())
     assert got == [(1, "x"), (2, "y"), (3, "z")]
     assert len(calls) == 1
+
+
+def test_read_evolved_rejects_no_files(spark):
+    with pytest.raises(ValueError, match="no files given"):
+        read_evolved(spark, [])
+
+
+@pytest.mark.parametrize("ntz", ["true", "false"])
+def test_footer_types_match_spark_inference(spark, tmp_path, ntz):
+    """The Spark types read_evolved builds from a footer are the ones
+    Spark's own schema inference gives, name for name: for every type
+    the compactor writes (evolve._WRITTEN) plus string, for a Spark
+    file (INT96 timestamps, int), and for naive timestamps, dates and
+    decimals. A type with no mapping raises a TypeError naming it."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nemscraper_spark.sources import evolve
+
+    pq.write_table(
+        pa.table({
+            "TS": pa.array([0], pa.timestamp("us", tz="UTC")),
+            "D": [1.5], "L": [1], "B": [True], "S": ["x"],
+        }),
+        tmp_path / "written.parquet",
+    )
+    spark.sql(
+        "SELECT TIMESTAMP '2025-06-01 00:00:00' AS TS, 1 AS I, 'x' AS S"
+    ).coalesce(1).write.parquet(str(tmp_path / "spark"))
+    pq.write_table(
+        pa.table({
+            "NAIVE": pa.array([0], pa.timestamp("us")),
+            "TZ": pa.array([0], pa.timestamp("ms", tz="+10:00")),
+            "DAY": pa.array([datetime.date(2025, 6, 1)], pa.date32()),
+            "DEC": pa.array([decimal.Decimal("1.25")], pa.decimal128(5, 2)),
+            "LS": pa.array(["x"], pa.large_string()),
+        }),
+        tmp_path / "other.parquet",
+    )
+    files = [str(tmp_path / "written.parquet"), str(tmp_path / "other.parquet")]
+    files += glob.glob(str(tmp_path / "spark" / "*.parquet"))
+    prev = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", ntz)
+    try:
+        for f, (arrow, parquet) in zip(files, evolve._footers(files)):
+            got = evolve._spark_types(f, arrow, parquet, ntz == "true")
+            want = {fld.name: fld.dataType for fld in spark.read.parquet(f).schema}
+            assert got == want, f
+    finally:
+        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", prev)
+
+    for name, t in (("U", pa.uint32()), ("NS", pa.timestamp("ns"))):
+        f = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"K": [1], name: pa.array([1], t)}), f)
+        with pytest.raises(TypeError, match=re.escape(f"'{name}' of {f}")):
+            read_evolved(spark, [f])
+
+
+def _count_parquet_reads(monkeypatch):
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        calls.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
+    return calls
+
+
+def test_read_evolved_starts_no_job_and_scans_once(spark, tmp_path, monkeypatch):
+    """Over a 6-column and a 7-column file of one table, constructing
+    read_evolved starts no Spark job and takes one scan (the missing
+    column is null-filled). A control job in another group proves the
+    tracker has seen every earlier job. String vs double takes two
+    scans and still evolves as test_evolved_schema_lattice expects."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    six = {
+        "FPP_UNITID": ["U1"], "MEASURED_MW": [1.5], "MW_QUALITY_FLAG": [1],
+        "PARTICIPANTID": ["P"], "SCHEDULED_MW": [2.0],
+        "MEASUREMENT_DATETIME": pa.array([0], pa.timestamp("us", tz="UTC")),
+    }
+    pq.write_table(pa.table(six), tmp_path / "six.parquet")
+    seven = {**six, "FPP_UNITID": ["U2"], "AVAILABLE_MW": [3.0]}
+    pq.write_table(pa.table(seven), tmp_path / "seven.parquet")
+    files = [str(tmp_path / "six.parquet"), str(tmp_path / "seven.parquet")]
+
+    calls = _count_parquet_reads(monkeypatch)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("read", "read_evolved")
+        df = read_evolved(spark, files)
+        sc.setJobGroup("control", "one job")
+        spark.range(3).collect()
+        for _ in range(100):
+            if tracker.getJobIdsForGroup("control"):
+                break
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("control")
+        assert tracker.getJobIdsForGroup("read") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(calls) == 1
+    got = sorted(tuple(r) for r in df.select("FPP_UNITID", "AVAILABLE_MW", "MEASURED_MW").collect())
+    assert got == [("U1", None, 1.5), ("U2", 3.0, 1.5)]
+
+    pq.write_table(pa.table({"MARGINALVALUE": ["1.5"], "ONLY_A": ["x"]}), tmp_path / "a.parquet")
+    pq.write_table(pa.table({"MARGINALVALUE": [2.5]}), tmp_path / "b.parquet")
+    calls.clear()
+    df = read_evolved(spark, [str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")])
+    assert len(calls) == 2
+    rows = sorted(df.collect(), key=lambda r: r.MARGINALVALUE)
+    assert [r.MARGINALVALUE for r in rows] == [1.5, 2.5]
+    assert rows[0].ONLY_A == "x" and rows[1].ONLY_A is None
 
 
 def test_compaction(spark, ingested):
