@@ -39,7 +39,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from nemscraper_spark.sources import fsutil
-from nemscraper_spark.sources.evolve import arrow_cast, evolved_schema, written_schema
+from nemscraper_spark.sources.evolve import (
+    arrow_cast,
+    evolved_schema,
+    wall_clock_columns,
+    written_schema,
+)
 
 MANIFEST_NAME = "_COMPACT_MANIFEST.json"
 
@@ -102,6 +107,7 @@ def compact_partition(
         return 0
     schema = written_schema(evolved_schema(files))
     tz = spark.conf.get("spark.sql.session.timeZone")
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled").lower() == "true"
     # staging dir lives beside the partition with a "." basename prefix
     # (hidden to Hadoop/Spark listing) and no "=" (so partition-column
     # inference never parses it): a concurrent table scan never sees
@@ -115,8 +121,12 @@ def compact_partition(
     def batches():
         for f in files:
             with fsutil.open_input(f) as fh:
-                for batch in pq.ParquetFile(fh).iter_batches():
-                    yield arrow_cast(batch, schema, tz)
+                pf = pq.ParquetFile(fh)
+                # a naive timestamp is an instant or a wall-clock time as
+                # read_evolved's Spark read takes it
+                local = wall_clock_columns(pf.schema_arrow, pf.schema, ntz)
+                for batch in pf.iter_batches():
+                    yield arrow_cast(batch, schema, tz, local)
 
     fsutil.write_parquet(staging, schema, batches())
     staged = fsutil.list_files(staging, suffix=".parquet")

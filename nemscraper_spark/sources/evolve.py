@@ -28,6 +28,7 @@ all-string scan.
 from __future__ import annotations
 
 import re
+from collections.abc import Collection
 from functools import reduce
 
 import pyarrow as pa
@@ -114,26 +115,41 @@ _INFERRED = (
 )
 
 
+def wall_clock_columns(arrow: pa.Schema, parquet: pq.ParquetSchema, ntz: bool) -> set[str]:
+    """The columns of one file's footer that Spark's parquet inference
+    reads as ``timestamp_ntz``: naive timestamps not stored as INT96,
+    when ``ntz`` (spark.sql.parquet.inferTimestampNTZ.enabled). Spark
+    casts them to ``timestamp`` as wall-clock times in the session
+    zone."""
+    if not ntz:
+        return set()
+    stored = (parquet.column(i) for i in range(len(parquet)))
+    int96 = {col.path for col in stored if col.physical_type == "INT96"}
+    return {
+        f.name
+        for f in arrow
+        if pa.types.is_timestamp(f.type) and f.type.tz is None and f.name not in int96
+    }
+
+
 def _spark_types(
     file: str, arrow: pa.Schema, parquet: pq.ParquetSchema, ntz: bool
 ) -> dict[str, T.DataType]:
     """``{name: Spark type}`` of one file's footer, as Spark's parquet
     schema inference gives it: a timestamp stored as INT96 or with a
     time zone is a ``timestamp``, any other a ``timestamp_ntz`` when
-    ``ntz`` (spark.sql.parquet.inferTimestampNTZ.enabled). A type
-    this map does not know raises ``TypeError``."""
+    ``ntz`` (wall_clock_columns). A type this map does not know raises
+    ``TypeError``."""
     stored = {parquet.column(i).path: parquet.column(i) for i in range(len(parquet))}
+    local = wall_clock_columns(arrow, parquet, ntz)
     out = {}
     for field in arrow:
         t = field.type
         if pa.types.is_timestamp(t):
-            col = stored[field.name]
-            if col.physical_type == "INT96":
-                sp = T.TimestampType()
-            elif "nanoseconds" in str(col.logical_type):
+            if "nanoseconds" in str(stored[field.name].logical_type):
                 sp = None  # Spark reads no TIMESTAMP(NANOS) as a timestamp
             else:
-                sp = T.TimestampNTZType() if ntz and t.tz is None else T.TimestampType()
+                sp = T.TimestampNTZType() if field.name in local else T.TimestampType()
         elif pa.types.is_decimal128(t):
             sp = T.DecimalType(t.precision, t.scale)
         else:
@@ -157,6 +173,9 @@ def _spark_cast(col: str, t: pa.DataType, src: T.DataType):
 
 
 _NEM_STRPTIME = "%Y/%m/%d %H:%M:%S"  # NEM_TS_FORMAT
+# the text NEM_TS_FORMAT takes under Spark's strict parser, less the
+# day-of-month check (RE2's \d is ASCII only, as Spark's digits are)
+_NEM_TS_TEXT = r"^\d{4}/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01]) ([01]\d|2[0-3]):[0-5]\d:[0-5]\d$"
 # text that Spark's try_cast takes as a double / long / boolean (Java's
 # "d"/"f" suffixes and longs of 19 digits are left out: they parse null)
 _DOUBLE_TEXT = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$|^(?i:[+-]?(inf|infinity|nan))$"
@@ -172,12 +191,19 @@ def written_schema(target: dict[str, pa.DataType | str]) -> pa.Schema:
     return pa.schema([(name, _written(t)[1]) for name, t in sorted(target.items())])
 
 
-def arrow_cast(batch: pa.RecordBatch | pa.Table, schema: pa.Schema, tz: str):
+def arrow_cast(
+    batch: pa.RecordBatch | pa.Table,
+    schema: pa.Schema,
+    tz: str,
+    wall_clock: Collection[str] = (),
+):
     """``_spark_cast`` on one arrow batch or table: every column of
     ``schema`` (a ``written_schema``) from ``batch``, typed nulls where
     the batch lacks it. Text is cleaned (clean_str) and parsed to null on
-    failure; NEM timestamps are wall-clock times in the Spark session
-    zone ``tz``. Naive timestamps (Spark's INT96) are UTC instants."""
+    failure; NEM timestamps, and the naive timestamp columns named in
+    ``wall_clock`` (Spark's ``timestamp_ntz``, see wall_clock_columns),
+    are wall-clock times in the Spark session zone ``tz``. Other naive
+    timestamps (Spark's INT96) are UTC instants."""
     cols = []
     for name, t in zip(schema.names, schema.types):
         if name not in batch.schema.names:
@@ -185,15 +211,21 @@ def arrow_cast(batch: pa.RecordBatch | pa.Table, schema: pa.Schema, tz: str):
             continue
         c = batch.column(name)
         if c.type not in _STRINGY or t == pa.string():
+            if name in wall_clock:
+                c = _to_utc(c, tz)
             cols.append(pc.cast(c, t, safe=False))
             continue
         s = clean_text(c)
         if pa.types.is_timestamp(t):
-            local = pc.strptime(s, format=_NEM_STRPTIME, unit="s", error_is_null=True)
             # strptime takes one-digit fields and rolls 2025/02/30 over
-            # into March; Spark's strict parser gives null for both
-            exact = pc.equal(pc.strftime(local, format=_NEM_STRPTIME), s)
-            cols.append(_to_utc(pc.if_else(exact, local, None), tz).cast(t))
+            # into March; Spark's strict parser gives null for both. The
+            # shape check keeps zero-padded, in-range fields only; the day
+            # check drops a date that rolled over.
+            s = pc.if_else(pc.match_substring_regex(s, _NEM_TS_TEXT), s, None)
+            local = pc.strptime(s, format=_NEM_STRPTIME, unit="s", error_is_null=True)
+            day = pc.utf8_slice_codeunits(s, 8, 10).cast(pa.int64())
+            local = pc.if_else(pc.equal(pc.day(local), day), local, None)
+            cols.append(_to_utc(local, tz).cast(t))
         elif pa.types.is_boolean(t):
             low = pc.utf8_lower(s)
             cols.append(pc.if_else(pc.is_in(low, _BOOL_TEXT), pc.is_in(low, _TRUE_TEXT), None))
@@ -219,7 +251,8 @@ def _to_utc(local: pa.Array, tz: str) -> pa.Array:
         u = pc.assume_timezone(local, timezone=tz, ambiguous="earliest", nonexistent="earliest")
         return pc.add(u, pc.subtract(local, pc.local_timestamp(u)))  # 0 outside a gap
     offset = int(m[1] + "1") * (int(m[2]) * 3600 + int(m[3]) * 60)
-    return pc.subtract(local.cast(pa.timestamp("s", tz="UTC")), pa.scalar(offset, pa.duration("s")))
+    utc = local.cast(pa.timestamp(local.type.unit, tz="UTC"))
+    return pc.subtract(utc, pa.scalar(offset, pa.duration("s")))
 
 
 def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -231,8 +264,9 @@ def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
     its columns a different type, so files that only lack columns share
     a group. Each group is ONE distributed scan handed its schema
     (``spark.read.schema``: no schema-inference job; Spark null-fills
-    a column a file lacks), cast to the target; groups whose types
-    conflict (string vs double, say) are unioned by name.
+    a column a file lacks) and listed without a job, cast to the
+    target; groups whose types conflict (string vs double, say) are
+    unioned by name.
     """
     if not files:
         raise ValueError("read_evolved: no files given")
@@ -253,7 +287,7 @@ def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
     parts = []
     for types, group_files in groups:
         schema = T.StructType([T.StructField(name, t) for name, t in types.items()])
-        df = spark.read.schema(schema).parquet(*group_files)
+        df = _scan(spark, schema, group_files)
         cols = []
         for name, t in target.items():
             if name in types:
@@ -262,6 +296,26 @@ def read_evolved(spark: SparkSession, files: list[str]) -> DataFrame:
                 cols.append(F.lit(None).cast(_written(t)[0]).alias(name))
         parts.append(df.select(*cols))
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _scan(spark: SparkSession, schema: T.StructType, files: list[str]) -> DataFrame:
+    """One parquet scan of ``files`` handed ``schema``. Spark lists more
+    paths than ``_LISTING_THRESHOLD`` with a job, so the threshold is
+    raised to the file count around the call and then restored: the
+    listing stays on the driver."""
+    conf = spark.conf
+    prev = conf.get(_LISTING_THRESHOLD, None)
+    conf.set(_LISTING_THRESHOLD, str(max(len(files), int(prev or 0))))
+    try:
+        return spark.read.schema(schema).parquet(*files)
+    finally:
+        if prev is None:
+            conf.unset(_LISTING_THRESHOLD)
+        else:
+            conf.set(_LISTING_THRESHOLD, prev)
 
 
 # evolved arrow type → its Spark type and the arrow type ingest and the

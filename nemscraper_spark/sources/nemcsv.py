@@ -24,10 +24,13 @@ as the reference splits and converts each file inside one process
     inference → clean + cast (sources/evolve.arrow_cast) → one part
     file per (group, date=) in the at-rest layout (fsutil.write_parquet)
 
-Groups run in a driver thread pool; pyarrow releases the GIL while it
-tokenizes, casts and writes, but reading and segmenting the files is
-Python on one driver. So ingest throughput is bounded by one machine,
-like the reference's single-process worker pool.
+Each (group, date) part is one task in a driver thread pool, as the
+reference gives each file to a worker (split.rs:27-62): every part is
+tokenized in parallel, each group's types are inferred from its parts
+in input order, then every part is cast and written in parallel.
+pyarrow releases the GIL in those kernels; reading and segmenting the
+files stays Python on one thread. So ingest throughput is bounded by
+one machine, like the reference's single-process worker pool.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ import io
 import posixpath
 import re
 import zipfile
+from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -65,11 +69,15 @@ def nem_segmenter():
     fields 1-3 joined "---", headers = the rest joined by _HDR_SEP,
     csv-parsed so quoting round-trips); a short/malformed I row keeps
     the CURRENT block open (csv_batch_processor.rs:72-74 state-machine
-    semantics); lines before the first I row belong to no block. The
-    block body is every raw line up to the next I row (C/D/other rows
-    alike — callers filter), split on ``\n`` with the trailing ``\r``
-    dropped, so a quoted field holding any other line-break character
-    (``\x0c``, ``\u2028``, ...) stays inside its row.
+    semantics); lines before the first I row belong to no block. An I
+    row starts a line: the text starts with ``I,`` or it follows a
+    ``\n``, and it ends at its first ``\r`` or ``\n``. The block body
+    is every raw line up to the next I row (C/D/other rows alike —
+    callers filter), split on ``\n`` with one trailing ``\r`` dropped,
+    so a quoted field holding any other line-break character (``\x0c``,
+    ``\u2028``, ...) stays inside its row. Both scans are C-level
+    ``str`` methods (``find``, ``replace``, ``split``), with no Python
+    step per line.
 
     Built in function scope on purpose: cloudpickle ships the returned
     closure BY VALUE, so executors in a foreign-driver deployment never
@@ -77,21 +85,30 @@ def nem_segmenter():
     driver-side :func:`ingest` and the executor-side ``nemcsv``
     connector (sources/nemsource.py)."""
     import csv as _csv
-    import re
 
-    i_row = re.compile(r"(?m)^I,[^\r\n]*")
     sep = _HDR_SEP
 
+    def lines_of(body: str) -> list[str]:
+        out = body.replace("\r\n", "\n").split("\n")
+        if out[-1].endswith("\r"):  # a last line with no "\n" after it
+            out[-1] = out[-1][:-1]
+        return out
+
     def segment(text: str) -> list[tuple[str, str, list[str]]]:
-        marks = list(i_row.finditer(text))
+        starts = [0] if text.startswith("I,") else []
+        at = text.find("\nI,")
+        while at >= 0:
+            starts.append(at + 1)
+            at = text.find("\nI,", at + 3)
+        starts.append(len(text))
         blocks: list[tuple[str, str, list[str]]] = []
-        for k, m in enumerate(marks):
-            row = next(_csv.reader([m.group(0)]))
-            end = marks[k + 1].start() if k + 1 < len(marks) else len(text)
-            body = [
-                ln[:-1] if ln.endswith("\r") else ln
-                for ln in text[m.end() : end].split("\n")
-            ]
+        for start, end in zip(starts, starts[1:]):
+            eol = text.find("\n", start, end)
+            eol = end if eol < 0 else eol
+            cr = text.find("\r", start, eol)
+            eol = eol if cr < 0 else cr  # the I row ends at its first \r or \n
+            row = next(_csv.reader([text[start:eol]]))
+            body = lines_of(text[eol:end])
             if len(row) >= 5:
                 blocks.append(("---".join(row[1:4]), sep.join(row[4:]), body))
             elif blocks:
@@ -157,18 +174,32 @@ def _list_inputs(input_path: str | list[str]) -> list[str]:
     ]
 
 
-def _texts(path: str) -> list[str]:
-    """The decoded text of each ``*.csv`` member of a ZIP, or of a CSV."""
+def _texts(path: str) -> Iterator[str]:
+    """The decoded text of each ``*.csv`` member of a ZIP, one at a
+    time, or of a CSV."""
     with fsutil.open_input(path) as fh:
         raw = fh.read()
     if not path.lower().endswith(".zip"):
-        return [raw.decode("utf-8", "replace")]
+        yield raw.decode("utf-8", "replace")
+        return
     with zipfile.ZipFile(io.BytesIO(raw)) as zf:
-        return [
-            zf.read(m).decode("utf-8", "replace")
-            for m in zf.namelist()
-            if m.lower().endswith(".csv")
-        ]
+        for m in zf.namelist():
+            if m.lower().endswith(".csv"):
+                yield zf.read(m).decode("utf-8", "replace")
+
+
+def _block_lines(paths: list[str]) -> dict[tuple[str, str], dict[str, list[str]]]:
+    """Each (table, I-header) group's raw block lines by file date, both
+    in input order. Only the lines outlive the call: a member's decoded
+    text goes once it is segmented."""
+    segment = nem_segmenter()
+    groups: dict[tuple[str, str], dict[str, list[str]]] = {}
+    for path in paths:
+        date = file_date(posixpath.basename(path))
+        for text in _texts(path):
+            for key, headers, lines in segment(text):
+                groups.setdefault((key, headers), {}).setdefault(date, []).extend(lines)
+    return groups
 
 
 def _d_rows(lines: list[str], headers: list[str]) -> pa.Table:
@@ -236,36 +267,42 @@ def ingest(spark: SparkSession, input_path: str | list[str], out_dir: str) -> di
     (verify.rs:56-133: D-row count == parquet row count).
     """
     tz = spark.conf.get("spark.sql.session.timeZone")
-    segment = nem_segmenter()
-    groups: dict[tuple[str, str], dict[str, list[str]]] = {}
-    for path in _list_inputs(input_path):
-        date = file_date(posixpath.basename(path))
-        for text in _texts(path):
-            for key, headers, lines in segment(text):
-                groups.setdefault((key, headers), {}).setdefault(date, []).extend(lines)
+    groups = _block_lines(_list_inputs(input_path))
 
-    def write_group(item) -> str | None:
-        (key, headers), by_date = item
-        names = headers.split(_HDR_SEP)
-        tables = {}
-        for date, lines in by_date.items():
-            if any(lines):  # pyarrow rejects an empty input
-                t = _d_rows(lines, names)
-                if t.num_rows:
-                    tables[date] = t
-        if not tables:
+    def tokenize(lines: list[str], names: list[str]) -> pa.Table | None:
+        if not any(lines):  # pyarrow rejects an empty input
             return None
-        head = pa.concat_tables(tables.values()).slice(0, INFERENCE_SAMPLE_ROWS)
-        firsts = [pc.drop_null(c) for c in head.columns]
-        schema = written_schema(
-            infer_types({h: c[0].as_py() if len(c) else None for h, c in zip(names, firsts)})
-        )
-        for date, t in tables.items():
-            fsutil.write_parquet(
-                posixpath.join(out_dir, key, f"date={date}"), schema, [arrow_cast(t, schema, tz)]
-            )
-        return key
+        t = _d_rows(lines, names)
+        return t if t.num_rows else None
 
-    with ThreadPoolExecutor(max_workers=max(1, min(8, len(groups)))) as pool:
-        keys = {k for k in pool.map(write_group, groups.items()) if k}
+    def write(key: str, date: str, t: pa.Table, schema: pa.Schema) -> None:
+        fsutil.write_parquet(
+            posixpath.join(out_dir, key, f"date={date}"), schema, [arrow_cast(t, schema, tz)]
+        )
+
+    keys, writes = set(), []
+    n_parts = sum(len(by_date) for by_date in groups.values())
+    with ThreadPoolExecutor(max_workers=max(1, min(8, n_parts))) as pool:
+        pending = []
+        for (key, headers), by_date in groups.items():
+            names = headers.split(_HDR_SEP)
+            # a part's raw lines go with its task, so they are freed once tokenized
+            parts = [
+                (date, pool.submit(tokenize, by_date.pop(date), names)) for date in list(by_date)
+            ]
+            pending.append((key, names, parts))
+        while pending:  # popped, so a group's tables go once they are written
+            key, names, parts = pending.pop(0)
+            tables = [(date, t) for date, f in parts if (t := f.result()) is not None]
+            if not tables:
+                continue
+            head = pa.concat_tables(t for _, t in tables).slice(0, INFERENCE_SAMPLE_ROWS)
+            firsts = [pc.drop_null(c) for c in head.columns]
+            schema = written_schema(
+                infer_types({h: c[0].as_py() if len(c) else None for h, c in zip(names, firsts)})
+            )
+            writes += [pool.submit(write, key, date, t, schema) for date, t in tables]
+            keys.add(key)
+        for w in writes:
+            w.result()
     return {k: fsutil.parquet_rows(posixpath.join(out_dir, k)) for k in sorted(keys)}

@@ -5,8 +5,9 @@ Synthesizes N ZIPs of NEM-format CSV (~DATA_MB each, two tables per
 file, realistic column mix: timestamp + ids + floats + quality flag),
 ingests with sources/nemcsv.ingest, and reports wall-clock + rows/s at
 1, 4, and N files. Ingest runs on the driver, so this measures one
-machine's throughput; a file's tables are tokenized, cast and written
-in parallel, its reading and segmenting are serial Python.
+machine's throughput: each (table, date) part is tokenized, cast and
+written as its own thread-pool task, while reading and segmenting the
+files is serial Python.
 
 Usage: python scripts/ingest_scaling_probe.py [n_files] [rows_per_file]
 """

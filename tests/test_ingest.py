@@ -282,6 +282,52 @@ def test_read_evolved_starts_no_job_and_scans_once(spark, tmp_path, monkeypatch)
     assert rows[0].ONLY_A == "x" and rows[1].ONLY_A is None
 
 
+def _jobs_started_by(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it started. A
+    control job run after it in another group proves the tracker has
+    seen every earlier job (the listener bus delivers in order)."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("under-test", "fn")
+        out = fn()
+        sc.setJobGroup("control", "one job")
+        spark.range(3).collect()
+        for _ in range(100):
+            if tracker.getJobIdsForGroup("control"):
+                break
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("control")
+        return out, tracker.getJobIdsForGroup("under-test")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_read_evolved_lists_many_files_without_a_job(spark, tmp_path):
+    """Over more files than Spark's parallel-listing threshold (32), one
+    group's scan is still listed on the driver: constructing
+    read_evolved starts no job, the rows are all there, and the
+    session's threshold is left as it was."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    files = []
+    for i in range(40):
+        files.append(str(tmp_path / f"f{i:02d}.parquet"))
+        pq.write_table(pa.table({"K": [i], "V": [i * 0.5]}), files[-1])
+    prev = spark.conf.get(name, None)
+    df, jobs = _jobs_started_by(spark, lambda: read_evolved(spark, files))
+    assert jobs == []
+    assert spark.conf.get(name, None) == prev
+    assert sorted(tuple(r) for r in df.select("K", "V").collect()) == [
+        (i, i * 0.5) for i in range(40)
+    ]
+
+
 def test_compaction(spark, ingested):
     """M4: many small files → 1 file per partition, rows preserved."""
     out, counts = ingested
@@ -667,6 +713,40 @@ def test_read_evolved_agrees_with_compaction(spark, ansi, lattice_partition):
     assert before == after
 
 
+@pytest.mark.parametrize("tz", ["+10:00", "America/New_York"])
+def test_compaction_takes_naive_timestamps_as_read_evolved_does(spark, ansi, tmp_path, tz):
+    """A naive (non-INT96) parquet timestamp beside NEM text is a
+    wall-clock time in the session zone, as Spark casts the
+    ``timestamp_ntz`` it infers: read_evolved and the compacted file
+    give the same instants (a New York DST-gap time moves later)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "TBL" / "date=2025-06-01"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"K": [1], "TS": ["2025/06/01 00:00:05"]}), part / "text.parquet")
+    naive = [datetime.datetime(2025, 6, 1, 0, 0, 20), datetime.datetime(2025, 3, 9, 2, 30)]
+    pq.write_table(
+        pa.table({"K": [2, 3], "TS": pa.array(naive, pa.timestamp("us"))}), part / "naive.parquet"
+    )
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        files = glob.glob(str(part / "*.parquet"))
+        cols = ["K", "unix_seconds(TS)"]
+        before = sorted(tuple(r) for r in read_evolved(spark, files).selectExpr(*cols).collect())
+        compact_partition(spark, str(part))
+        after = sorted(tuple(r) for r in spark.read.parquet(str(part)).selectExpr(*cols).collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    assert after == before
+    if tz == "+10:00":
+        t0 = 1748736000 - 36000  # 2025-06-01 00:00:00 +10:00
+        assert after[:2] == [(1, t0 + 5), (2, t0 + 20)]
+
+
 def test_compact_partition_starts_no_spark_job(spark, multi_file_partition):
     """The rewrite runs on the driver. A control job run after it in
     another group proves the tracker has seen every earlier job (the
@@ -759,6 +839,54 @@ def test_text_parses_agree_with_spark(spark, ansi, tmp_path, tz):
     assert len(after) == n + 1
 
 
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_nem_timestamps_parse_as_strictly_as_spark(spark, tmp_path, tz):
+    """arrow_cast's NEM timestamps are Spark's
+    ``try_to_timestamp(clean_str(x), NEM_TS_FORMAT)``, value for value:
+    out-of-range and one-digit fields, days past the month's end, leap
+    days, an early year, a fraction, a sign, a non-ASCII digit, a
+    space-padded hour, and 64k ordinary times spread over a year."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from nemscraper_spark.functions import clean_str
+    from nemscraper_spark.functions.columns import NEM_TS_FORMAT
+    from nemscraper_spark.sources.evolve import arrow_cast, written_schema
+
+    odd = [
+        "2025/06/01 00:60:00", "2025/06/01 00:00:60", "2025/13/01 00:00:00",
+        "2025/00/10 00:00:00", "2025/06/00 00:00:00", "2025/04/31 00:00:00",
+        "2024/02/29 00:00:00", "2025/02/29 00:00:00", "0999/01/01 00:00:00",
+        "2025/06/01 00:00:05.5", "+2025/06/01 00:00:00", "2025/06/01 00:00:0\u0665",
+        "\uff12025/06/01 00:00:00", "2025/06/01  5:00:00", ' "2025/06/01 00:00:05" ',
+        "2025/06/01 23:59:59", "",
+    ]
+    t0 = datetime.datetime(2025, 1, 1)
+    ordinary = [
+        (t0 + datetime.timedelta(seconds=i * 487)).strftime("%Y/%m/%d %H:%M:%S")
+        for i in range(64_000)
+    ]
+    texts = odd + ordinary
+    f = str(tmp_path / "ts.parquet")
+    pq.write_table(pa.table({"K": list(range(len(texts))), "TS": texts}), f)
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        parsed = F.try_to_timestamp(clean_str(F.col("TS")), F.lit(NEM_TS_FORMAT))
+        rows = spark.read.parquet(f).select("K", F.unix_micros(parsed)).orderBy("K").collect()
+        want = [r[1] for r in rows]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    got = arrow_cast(pa.table({"TS": texts}), written_schema({"TS": "timestamp"}), tz)
+    got = got.column("TS").cast(pa.int64()).to_pylist()
+    assert list(zip(odd, got)) == list(zip(odd, want[: len(odd)]))
+    assert got == want
+    assert sum(v is not None for v in got) == len(ordinary) + 4
+
+
 def _nem_zip(path, table_rows):
     """One NEM ZIP at ``path`` holding ``(I-header fields, D-rows)`` blocks
     of the FPP UNIT_MW table."""
@@ -834,6 +962,84 @@ def test_ragged_rows_are_padded_or_truncated_in_place(spark, tmp_path):
         {"K": 3.0, "UNIT": "U3", "MW": 3.5},
         {"K": 4.0, "UNIT": None, "MW": None},
     ]
+
+
+def _line_by_line_segmenter():
+    """The segmenter as it read the grammar with a line-start regex and
+    one Python step per line: the reference for nem_segmenter's blocks."""
+    import csv
+
+    from nemscraper_spark.sources.nemcsv import _HDR_SEP
+
+    i_row = re.compile(r"(?m)^I,[^\r\n]*")
+
+    def segment(text):
+        marks = list(i_row.finditer(text))
+        blocks = []
+        for k, m in enumerate(marks):
+            row = next(csv.reader([m.group(0)]))
+            end = marks[k + 1].start() if k + 1 < len(marks) else len(text)
+            body = [
+                ln[:-1] if ln.endswith("\r") else ln
+                for ln in text[m.end() : end].split("\n")
+            ]
+            if len(row) >= 5:
+                blocks.append(("---".join(row[1:4]), _HDR_SEP.join(row[4:]), body))
+            elif blocks:
+                blocks[-1][2].extend(body)
+        return blocks
+
+    return segment
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "I,A,B,1,H1,H2\r\nD,A,B,1,x,y\r\nC,end\r\n",  # an I row at offset 0
+        "C,h\r\nI,A,B,1,H1\r\nD,A,B,1,x\r\nD,A,B,1,y\r",  # ends in \r, no \n
+        "C,h\nI,A,B,1,H1\r\r\nD,A,B,1,x\r\r\nD,A,B,1,y\r\r\n",  # \r\r\n
+        "C,h\nI,A,B,1,H1\nD,A,B,1,x\nI,short\r\nD,A,B,1,y\nI,C,D,2,H2,H3",  # short I row
+        "D,X,Y,1,orphan\n\rI,A,B,1,H\nxI,A,B,1,H\n\"I,A,B,1,H\"\nI,A,B,1,H\rI,C,D,1,H\n",
+        "I,A,B,1,H1",
+        "",
+    ],
+)
+def test_segmenter_gives_the_line_by_line_blocks(text):
+    """nem_segmenter's I-row scan and C-level line split give the blocks
+    of the line-by-line version: an I row at offset 0, a last line
+    ending in \r, \r\r\n endings, a short I row that keeps the block
+    open, and I rows that do not start a line."""
+    from nemscraper_spark.sources.nemcsv import nem_segmenter
+
+    assert nem_segmenter()(text) == _line_by_line_segmenter()(text)
+
+
+@pytest.mark.parametrize("reverse", [False, True])
+def test_per_part_ingest_infers_types_in_input_order(spark, tmp_path, reverse):
+    """Parts of one table are tokenized in parallel, one per date, but
+    its types still come from the first non-null value in input order:
+    X is null in the first date's rows, NEM text in the second's and a
+    number in the third's, so it is a timestamp in every partition when
+    the files come in date order and a double when they come reversed.
+    Every row lands under its file's date."""
+    import pyarrow.parquet as pq
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    xs = {"20250601": ["", ""], "20250602": ['"2025/06/02 00:00:00"', ""], "20250603": ["1.5", "2"]}
+    paths = []
+    for day, vals in xs.items():
+        paths.append(str(landing / f"PUBLIC_A_{day}_0001.zip"))
+        _nem_zip(paths[-1], [(["K", "X"], [f"{k},{v}" for k, v in enumerate(vals)])])
+    out = str(tmp_path / "out")
+    assert ingest(spark, paths[::-1] if reverse else paths, out) == {"FPP---UNIT_MW---1": 6}
+    root = os.path.join(out, "FPP---UNIT_MW---1")
+    want = "double" if reverse else "timestamp[us, tz=UTC]"
+    for day in xs:
+        files = glob.glob(os.path.join(root, f"date={day[:4]}-{day[4:6]}-{day[6:]}", "*.parquet"))
+        assert len(files) == 1
+        t = pq.read_table(files[0])
+        assert str(t.schema.field("X").type) == want and t.num_rows == 2
 
 
 def test_file_date_matches_spark_date_from_filename(spark):
