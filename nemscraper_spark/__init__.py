@@ -14,7 +14,7 @@ Layout:
   operators   relational / time-series / dedup / similarity / text operators
   functions   shared column-expression helpers (clean_str, time buckets, ...)
   plans       maintenance jobs: compaction, history ledgers
-  streaming   Structured Streaming wrappers around the ingest path
+  streaming   stateful Structured Streaming operators (sessionization)
   queries     the driver-facing query registry (__spark_entry__ re-exports)
 """
 

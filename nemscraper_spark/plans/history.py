@@ -11,9 +11,7 @@ files and vacuums them into consolidated files every 30s
     of every part file with pyarrow, one filename per ZIP, far smaller
     than the data it guards. The service tick
     (scripts/run_pipeline.run_once) calls it once per ledger per tick
-    and runs no Spark job for it. In --streaming mode the stream
-    checkpoint is the dedup set and this ledger only records what was
-    ingested;
+    and runs no Spark job for it;
   * ``add()`` writes one small parquet file per date on the driver
     through ``fsutil.write_parquet``, in the at-rest layout of every
     driver-written file, so ``file://`` / ``gs://`` roots work as bare

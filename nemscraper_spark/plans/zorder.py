@@ -97,28 +97,3 @@ def write_zordered(
         .parquet(path)
     )
 
-
-def file_overlap_fraction(path: str, col: str, lo, hi) -> float:
-    """Fraction of data files whose [min, max] footer range for `col`
-    overlaps [lo, hi] — the fraction a pushed filter must actually
-    read.  Driver-side metadata only (pyarrow dataset footers)."""
-    import pyarrow.dataset as ds
-
-    dataset = ds.dataset(path, format="parquet")
-    total = 0
-    overlapping = 0
-    for frag in dataset.get_fragments():
-        row_groups = frag.row_groups
-        if not row_groups:
-            continue
-        total += 1
-        for rg in row_groups:
-            stats = rg.statistics or {}
-            s = stats.get(col)
-            if s is None or s.get("min") is None:
-                overlapping += 1
-                break
-            if s["min"] <= hi and s["max"] >= lo:
-                overlapping += 1
-                break
-    return overlapping / total if total else 0.0

@@ -15,9 +15,9 @@ poll loop relies on when it re-processes a day's files
 
 Scale notes: the memory sink here holds only the bounded query RESULT
 (≤ days × event-types rows for the window agg); production streams
-write parquet/Kafka sinks (`streaming/ingest.py`).  State size is
-bounded by the watermark horizon, not history — the property that lets
-these operators run forever on a 100 TB/day feed.
+write parquet/Kafka sinks.  State size is bounded by the watermark
+horizon, not history — the property that lets these operators run
+forever on a 100 TB/day feed.
 """
 
 from __future__ import annotations

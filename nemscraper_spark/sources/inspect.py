@@ -1,16 +1,14 @@
-"""Parquet metadata inspection (SURVEY.md §2.1 S13/S14; reference
-src/bin/inspect_parquet.rs:21-188 and verify.rs:88-111).
+"""Parquet footer row counts (SURVEY.md §2.1 S13; reference
+verify.rs:88-111).
 
-Footer-only reads: no row-group data IO. At 100TB this is how you audit
-a table (row counts, per-column encodings/stats, compression ratios)
-in seconds instead of a full scan.
+Footer-only reads: no row-group data IO, so a table's row count costs
+one small read per file instead of a scan.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-from typing import Any
 
 import pyarrow.parquet as pq
 
@@ -27,31 +25,3 @@ def footer_row_count(path: str) -> int:
     """Σ file_metadata.num_rows across files — verify.rs:88-111."""
     return sum(pq.ParquetFile(f).metadata.num_rows for f in _files(path))
 
-
-def inspect_parquet(path: str) -> list[dict[str, Any]]:
-    """Per column-chunk stats: compression, encodings, sizes, min/max —
-    inspect_parquet.rs:21-188's report as structured rows."""
-    out: list[dict[str, Any]] = []
-    for f in _files(path):
-        meta = pq.ParquetFile(f).metadata
-        for rg in range(meta.num_row_groups):
-            group = meta.row_group(rg)
-            for ci in range(group.num_columns):
-                col = group.column(ci)
-                stats = col.statistics
-                out.append(
-                    {
-                        "file": os.path.basename(f),
-                        "row_group": rg,
-                        "column": col.path_in_schema,
-                        "physical_type": str(col.physical_type),
-                        "compression": str(col.compression),
-                        "encodings": ",".join(map(str, col.encodings)),
-                        "num_values": col.num_values,
-                        "compressed_bytes": col.total_compressed_size,
-                        "uncompressed_bytes": col.total_uncompressed_size,
-                        "min": None if stats is None else str(stats.min),
-                        "max": None if stats is None else str(stats.max),
-                    }
-                )
-    return out

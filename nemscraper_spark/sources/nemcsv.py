@@ -126,37 +126,22 @@ def file_date(name: str) -> str:
     return "-".join(m.groups()) if m else "unknown-date"
 
 
-def _looks_float(s: str) -> bool:
-    try:
-        float(s)
-        return True
-    except (TypeError, ValueError):
-        return False
-
-
-def _looks_nem_ts(s: str) -> bool:
-    from datetime import datetime
-
-    try:
-        datetime.strptime(s, "%Y/%m/%d %H:%M:%S")
-        return True
-    except (TypeError, ValueError):
-        return False
-
-
 def infer_types(samples: dict[str, str | None]) -> dict[str, str]:
-    """First-non-null single-value inference (chunk.rs:85-130):
-    parses-as-f64 → double; parses NEM ts → timestamp; else string.
-    Returns column → {'double','timestamp','string'}."""
-    plan = {}
-    for col, v in samples.items():
-        if v is not None and _looks_float(v):
-            plan[col] = "double"
-        elif v is not None and _looks_nem_ts(v):
-            plan[col] = "timestamp"
-        else:
-            plan[col] = "string"
-    return plan
+    """First-non-null single-value inference (chunk.rs:85-130), with the
+    parsers ingest then casts with (evolve.arrow_cast): a sample that
+    casts to float64 → double; else one that casts to a NEM timestamp →
+    timestamp; else string. So no column's first value is nulled by its
+    own type's cast. Returns column → {'double','timestamp','string'}."""
+    t = pa.table({c: pa.array([v], pa.string()) for c, v in samples.items()})
+    # a zone shifts a parsed time but never nulls it, so UTC decides for every zone
+    casts = {
+        kind: arrow_cast(t, written_schema(dict.fromkeys(samples, kind)), "UTC")
+        for kind in ("double", "timestamp")
+    }
+    return {
+        c: next((k for k, cast in casts.items() if cast.column(c)[0].is_valid), "string")
+        for c in samples
+    }
 
 
 def _list_inputs(input_path: str | list[str]) -> list[str]:

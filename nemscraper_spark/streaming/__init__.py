@@ -1,1 +1,1 @@
-"""Structured Streaming wrappers around the ingest path."""
+"""Stateful Structured Streaming operators (stateful.py)."""

@@ -19,9 +19,6 @@ Usage:
   python scripts/run_pipeline.py --workdir /tmp/nem --landing-only --once
       (skip polling; process whatever ZIPs are already in
        <workdir>/zips — the daily re-enqueue sweep shape, main.rs:286-307)
-  python scripts/run_pipeline.py --workdir /tmp/nem --landing-only --streaming --loop 10
-      (same tick, but ingest drains <workdir>/zips through the
-       checkpointed Structured Streaming file source)
 """
 
 from __future__ import annotations
@@ -60,15 +57,13 @@ def run_once(
     feeds: list[str],
     sf_dir: str | None,
     mirror: str | None = None,
-    streaming: bool = False,
 ) -> dict:
     """One tick: returns a summary dict of what moved.
 
-    ``streaming`` changes step 2 only: the ZIPs to ingest are whatever
-    the checkpointed Structured Streaming file source has not yet
-    drained (streaming/ingest.py), instead of the processed ledger's
-    diff against the landing dir. Either way the processed ledger gets
-    one row per ingested ZIP.
+    The processed ledger is the one record of what has been ingested:
+    a tick ingests the landing dir's ZIPs the ledger lacks, then adds
+    one row per ZIP. A crash between the two re-ingests the ZIPs on the
+    next tick (at least once, as the reference's main.rs:248-275).
 
     ``summary["seconds"]`` holds the wall seconds of each phase in
     ``PHASES`` (0.0 when it did not run); ``ledger`` is the ledgers'
@@ -76,6 +71,7 @@ def run_once(
     from nemscraper_spark.plans.compact import compact_table
     from nemscraper_spark.plans.history import TableHistory
     from nemscraper_spark.sources import fetch
+    from nemscraper_spark.sources.nemcsv import ingest
 
     zips_dir = os.path.join(workdir, "zips")
     parquet_dir = os.path.join(workdir, "parquet")
@@ -105,29 +101,17 @@ def run_once(
                 downloaded.add(rows)
         summary["downloaded"] = len(rows)
 
-    # 2. ingest every ZIP not yet seen (main.rs:248-275): the processed
-    #    ledger is the dedup set in batch mode, the stream checkpoint
-    #    in streaming mode
-    if streaming:
-        from nemscraper_spark.streaming.ingest import drain_ingest_stream
-
-        with _phase(seconds, "ingest"):
-            names, counts = drain_ingest_stream(
-                spark, zips_dir, parquet_dir, os.path.join(workdir, "checkpoint")
-            )
-    else:
-        from nemscraper_spark.sources.nemcsv import ingest
-
-        with _phase(seconds, "ledger"):
-            done = processed.keys()
-        with _phase(seconds, "ingest"):
-            todo = [
-                z
-                for z in sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
-                if os.path.basename(z) not in done
-            ]
-            names = [os.path.basename(z) for z in todo]
-            counts = ingest(spark, todo, parquet_dir) if todo else {}
+    # 2. ingest every ZIP the processed ledger lacks (main.rs:248-275)
+    with _phase(seconds, "ledger"):
+        done = processed.keys()
+    with _phase(seconds, "ingest"):
+        todo = [
+            z
+            for z in sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
+            if os.path.basename(z) not in done
+        ]
+        names = [os.path.basename(z) for z in todo]
+        counts = ingest(spark, todo, parquet_dir) if todo else {}
     if names:
         with _phase(seconds, "ledger"):
             processed.add(
@@ -198,15 +182,14 @@ def run_loop(
     interval_sec: float = 60.0,
     stop: threading.Event | None = None,
     mirror: str | None = None,
-    streaming: bool = False,
 ) -> list[dict]:
     """The reference's long-running service shape, as one driver loop:
 
     * every tick is a FULL zips-dir sweep — run_once re-globs the
-      directory (batch) or re-lists it through the stream checkpoint
-      (``streaming``) each time, so files that arrive out-of-band
-      (scp'd in, a crashed tick's leftovers, a previously failed ingest
-      that never reached the ledger) are picked up on the next tick.
+      directory and diffs it against the processed ledger each time,
+      so files that arrive out-of-band (scp'd in, a crashed tick's
+      leftovers, a previously failed ingest that never reached the
+      ledger) are picked up on the next tick.
       This subsumes the reference's daily re-enqueue sweep
       (main.rs:286-307): same idempotence contract (filename-keyed
       skip), tighter cadence.
@@ -241,9 +224,7 @@ def run_loop(
             # cadence (urls.rs:176-184); wait() returns True on stop
             if stop.wait(interval_sec) if i else stop.is_set():
                 break
-            s = run_once(
-                spark, workdir, feeds, sf_dir, mirror=mirror, streaming=streaming
-            )
+            s = run_once(spark, workdir, feeds, sf_dir, mirror=mirror)
             print(json.dumps({"event": "tick", **s}), flush=True)
             summaries.append(s)
         if stop.is_set():
@@ -269,12 +250,6 @@ def main() -> None:
         help="mirror the compacted tree to this URI after each tick "
         "(file:// gs:// s3:// — the reference's gcloud-sync sidecar)",
     )
-    ap.add_argument(
-        "--streaming",
-        action="store_true",
-        help="ingest via the checkpointed Structured Streaming file source "
-        "instead of the ledger-deduped batch loop",
-    )
     args = ap.parse_args()
 
     from nemscraper_spark.session import get_spark
@@ -289,7 +264,6 @@ def main() -> None:
         extra_ticks=0 if args.once else args.loop,
         interval_sec=args.interval,
         mirror=args.mirror,
-        streaming=args.streaming,
     )
     spark.stop()
 

@@ -20,7 +20,12 @@ from nemscraper_spark.plans.compact import compact_partition, partitions_needing
 from nemscraper_spark.plans.history import TableHistory
 from nemscraper_spark.sources import fsutil
 from nemscraper_spark.sources.nemcsv import ingest, infer_types
-from nemscraper_spark.sources.evolve import evolved_schema, read_evolved
+from nemscraper_spark.sources.evolve import (
+    arrow_cast,
+    evolved_schema,
+    read_evolved,
+    written_schema,
+)
 
 NEM_CSV = "\r\n".join(
     [
@@ -96,16 +101,33 @@ def test_type_inference_and_cleaning(spark, ingested):
 
 
 def test_infer_types_unit():
-    plan = infer_types(
-        {"a": "1.5", "b": "2025/06/01 00:00:04", "c": "x1", "d": None, "e": "7"}
-    )
+    import pyarrow as pa
+
+    samples = {
+        "a": "1.5",
+        "b": "2025/06/01 00:00:04",
+        "c": "x1",
+        "d": None,
+        "e": "7",
+        # strptime takes a one-digit month and float() an underscore;
+        # the cast gives null for both, so neither may pick its type
+        "f": "2022/7/20 18:00:00",
+        "g": "1_000",
+    }
+    plan = infer_types(samples)
     assert plan == {
         "a": "double",
         "b": "timestamp",
         "c": "string",
         "d": "string",
         "e": "double",
+        "f": "string",
+        "g": "string",
     }
+    # the value that chose a column's type survives that type's cast
+    text = pa.table({c: pa.array([v], pa.string()) for c, v in samples.items()})
+    cast = arrow_cast(text, written_schema(plan), "UTC")
+    assert all(cast.column(c)[0].is_valid for c, v in samples.items() if v is not None)
 
 
 def test_evolved_schema_lattice(spark, tmp_path):

@@ -87,9 +87,30 @@ def test_loop_resweep_picks_up_outofband_zip(spark, tmp_path):
     finally:
         rp.run_once = rp_run_once
 
+    assert set(ticks[0]) == {"downloaded", "processed", "tables", "compacted", "seconds"}
+    assert set(ticks[0]["seconds"]) == set(rp.PHASES)
+    assert all(v >= 0.0 for v in ticks[0]["seconds"].values())
     assert ticks[0]["processed"] == 1
     assert ticks[1]["processed"] == 1  # the swept-in file, next tick
+    # ``tables`` is the table's footer row total after the ingest
+    assert ticks[1]["tables"]["FPP---UNIT_MW---1"] == 6
     assert ticks[2]["processed"] == 0  # ledger idempotence holds
+    assert ticks[2]["tables"] == {}
+    table = work / "parquet" / "FPP---UNIT_MW---1"
+    assert spark.read.parquet(str(table)).count() == 6
+    assert (table / "date=2022-07-21").is_dir()
+
+    # the processed ledger recorded each file once
+    from nemscraper_spark.plans.history import TableHistory
+
+    led = TableHistory(spark, str(work / "history"), "processed")
+    assert sorted(r.filename for r in led.read().collect()) == [
+        "PUBLIC_DISPATCHIS_20220720_0001.zip",
+        "PUBLIC_DISPATCHIS_20220721_0001.zip",
+    ]
+    # and every tick vacuumed it: one file per ledger partition
+    for part in glob.glob(os.path.join(led.path, "date=*")):
+        assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
 
 
 def test_sigterm_stops_loop_gracefully(spark, tmp_path):
@@ -179,60 +200,6 @@ def test_pipeline_tick_mirrors_compacted_tree(spark, tmp_path):
     s2 = run_once(spark, str(work), [], None, mirror=dst)
     assert s2["mirror"]["copied"] == 0
     assert s2["mirror"]["deleted"] == 0
-
-
-def test_streaming_mode_checkpoint_exactly_once(spark, tmp_path):
-    """--streaming: the file-source checkpoint is the dedup set — a
-    drained ZIP is never re-ingested across ticks (or restarts), and a
-    newly arrived ZIP is picked up by the next availableNow drain."""
-    work = tmp_path / "work"
-    zips = work / "zips"
-    zips.mkdir(parents=True)
-
-    def _drop(day):
-        name = f"PUBLIC_DISPATCHIS_{day}_0001.zip"
-        with zipfile.ZipFile(zips / name, "w") as zf:
-            zf.writestr(
-                f"PUBLIC_DISPATCHIS_{day}1800.CSV",
-                NEM_CSV.replace("20220720", day),
-            )
-
-    _drop("20220720")
-    s1 = run_once(spark, str(work), [], None, streaming=True)
-    assert set(s1) == {"downloaded", "processed", "tables", "compacted", "seconds"}
-    assert set(s1["seconds"]) == {"poll", "ingest", "compact", "mirror", "outputs", "ledger"}
-    assert all(v >= 0.0 for v in s1["seconds"].values())
-    assert s1["processed"] == 1
-    assert s1["tables"]["FPP---UNIT_MW---1"] == 3
-    table = os.path.join(str(work), "parquet", "FPP---UNIT_MW---1")
-    assert spark.read.parquet(table).count() == 3
-
-    # same file again: checkpoint suppresses re-ingest (no row growth)
-    s2 = run_once(spark, str(work), [], None, streaming=True)
-    assert s2["processed"] == 0
-    assert s2["tables"] == {}
-    assert spark.read.parquet(table).count() == 3
-
-    # new arrival: next drain ingests exactly the new file's rows;
-    # ``tables`` carries the table's footer row total after the ingest
-    # (the conservation count), as in batch mode
-    _drop("20220721")
-    s3 = run_once(spark, str(work), [], None, streaming=True)
-    assert s3["processed"] == 1
-    assert s3["tables"]["FPP---UNIT_MW---1"] == 6
-    assert spark.read.parquet(table).count() == 6
-    # the processed ledger recorded both files once each
-    from nemscraper_spark.plans.history import TableHistory
-
-    led = TableHistory(spark, os.path.join(str(work), "history"), "processed")
-    names = [r.filename for r in led.read().collect()]
-    assert sorted(names) == [
-        "PUBLIC_DISPATCHIS_20220720_0001.zip",
-        "PUBLIC_DISPATCHIS_20220721_0001.zip",
-    ]
-    # and every tick vacuumed it: one file per ledger partition
-    for part in glob.glob(os.path.join(led.path, "date=*")):
-        assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
 
 
 def test_tick_leaves_every_partition_at_rest(spark, tmp_path):

@@ -7,13 +7,34 @@ import os
 
 from pyspark.sql import functions as F
 
-from nemscraper_spark.plans.zorder import (
-    file_overlap_fraction,
-    morton_formula,
-    with_zkey,
-    write_zordered,
-)
+from nemscraper_spark.plans.zorder import morton_formula, with_zkey, write_zordered
 from nemscraper_spark.queries.common import load_table
+
+
+def _overlap_fraction(path: str, col: str, lo, hi) -> float:
+    """Fraction of data files whose [min, max] footer range for `col`
+    overlaps [lo, hi] — the fraction a pushed filter must actually
+    read.  Driver-side metadata only (pyarrow dataset footers)."""
+    import pyarrow.dataset as ds
+
+    dataset = ds.dataset(path, format="parquet")
+    total = 0
+    overlapping = 0
+    for frag in dataset.get_fragments():
+        row_groups = frag.row_groups
+        if not row_groups:
+            continue
+        total += 1
+        for rg in row_groups:
+            stats = rg.statistics or {}
+            s = stats.get(col)
+            if s is None or s.get("min") is None:
+                overlapping += 1
+                break
+            if s["min"] <= hi and s["max"] >= lo:
+                overlapping += 1
+                break
+    return overlapping / total if total else 0.0
 
 
 def test_morton_interleave_small_cases(spark):
@@ -69,10 +90,10 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir, tmp_path):
     ewd = (stats["ehi"] - stats["elo"]) // 16 or 1
 
     # ~1/16-wide range probes on each dimension
-    z_user = file_overlap_fraction(zpath, "user_id", stats["ulo"], stats["ulo"] + uw)
-    z_event = file_overlap_fraction(zpath, "event_id", stats["elo"], stats["elo"] + ewd)
-    l_user = file_overlap_fraction(lpath, "user_id", stats["ulo"], stats["ulo"] + uw)
-    l_event = file_overlap_fraction(lpath, "event_id", stats["elo"], stats["elo"] + ewd)
+    z_user = _overlap_fraction(zpath, "user_id", stats["ulo"], stats["ulo"] + uw)
+    z_event = _overlap_fraction(zpath, "event_id", stats["elo"], stats["elo"] + ewd)
+    l_user = _overlap_fraction(lpath, "user_id", stats["ulo"], stats["ulo"] + uw)
+    l_event = _overlap_fraction(lpath, "event_id", stats["elo"], stats["elo"] + ewd)
 
     # linear layout: perfect on its sort column, useless on the other
     assert l_user <= 0.25
