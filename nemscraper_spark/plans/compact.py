@@ -183,7 +183,7 @@ def compact_table(
     once, each swap partition-local (separate dirs, no shared state).
     """
     parts = partitions_needing_compaction(table_root)
-    if not parts:
-        return {}
+    if len(parts) < 2:  # one partition compacts on the calling thread
+        return {p: compact_partition(spark, p) for p in parts}
     with ThreadPoolExecutor(max_workers=max(1, min(max_parallel, len(parts)))) as pool:
         return dict(zip(parts, pool.map(lambda p: compact_partition(spark, p), parts)))

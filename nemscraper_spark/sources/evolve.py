@@ -239,6 +239,8 @@ def clean_text(s):
     """``clean_str`` on an arrow string array: trim spaces, then strip
     one pair of outer double quotes (chunk.rs:21-28)."""
     s = pc.utf8_trim(s, characters=" ")
+    if not pc.any(pc.starts_with(s, '"')).as_py():  # no quote to strip: skip the regex
+        return s
     return pc.replace_substring_regex(s, pattern='^"(.*)"$', replacement=r"\1")
 
 

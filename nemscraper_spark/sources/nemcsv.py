@@ -18,19 +18,23 @@ output (chunk.rs:336-345); rows before any I row are dropped
 as the reference splits and converts each file inside one process
 (split.rs:27-62, chunk.rs:312-422, main.rs:208-239):
 
-    list inputs (sources/fsutil) → each ZIP's *.csv members →
-    nem_segmenter blocks, grouped by (table, I-header) →
-    pyarrow.csv tokenization, D-rows only → first-1000-row type
-    inference → clean + cast (sources/evolve.arrow_cast) → one part
-    file per (group, date=) in the at-rest layout (fsutil.write_parquet)
+    list inputs (sources/fsutil) → each file's *.csv members →
+    nem_segmenter blocks (text) → pyarrow.csv tokenization, D-rows
+    only → per (table, I-header) group and file date, the files'
+    tables in input order → first-1000-row type inference → clean +
+    cast (sources/evolve.arrow_cast) → one part file per (group, date=)
+    in the at-rest layout (fsutil.write_parquet)
 
-Each (group, date) part is one task in a driver thread pool, as the
-reference gives each file to a worker (split.rs:27-62): every part is
-tokenized in parallel, each group's types are inferred from its parts
-in input order, then every part is cast and written in parallel.
-pyarrow releases the GIL in those kernels; reading and segmenting the
-files stays Python on one thread. So ingest throughput is bounded by
-one machine, like the reference's single-process worker pool.
+The files are read and segmented one after another on the calling
+thread, and each block goes to a driver thread pool as soon as its file
+is segmented, as the reference hands each file to a worker as soon as
+it is read (split.rs:27-62, main.rs:208-239): pyarrow tokenizes one
+file's blocks while the next file is read. A file that fails to read,
+unzip or tokenize is skipped whole and reported; the rest are
+ingested. Then each group's types are inferred from its parts in input
+order, and every part is cast and written in parallel. pyarrow releases
+the GIL in those kernels, so ingest throughput is bounded by one
+machine, like the reference's single-process worker pool.
 """
 
 from __future__ import annotations
@@ -38,10 +42,10 @@ from __future__ import annotations
 import csv
 import fnmatch
 import io
+import logging
 import posixpath
 import re
 import zipfile
-from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -53,6 +57,7 @@ from pyspark.sql import SparkSession
 from nemscraper_spark.sources import fsutil
 from nemscraper_spark.sources.evolve import arrow_cast, clean_text, written_schema
 
+_LOG = logging.getLogger(__name__)
 INFERENCE_SAMPLE_ROWS = 1000  # chunk.rs:324 — first 1k rows drive inference
 _HDR_SEP = "\x1f"  # joins header names into one string column
 _MARKERS = ["_c0", "_c1", "_c2", "_c3"]  # marker, table, subtable, version
@@ -63,7 +68,7 @@ _DASHED_DATE = re.compile(r"(20[0-3]\d)[-_](0[1-9]|1[0-2])[-_](0[1-9]|[12]\d|3[0
 
 def nem_segmenter():
     """Build the I/D grammar segmenter ``segment(text)`` → one
-    ``(table_key, headers, lines)`` tuple per block.
+    ``(table_key, headers, body)`` tuple per block.
 
     An ``I,`` row with >= 5 csv fields opens a block (table_key =
     fields 1-3 joined "---", headers = the rest joined by _HDR_SEP,
@@ -71,13 +76,14 @@ def nem_segmenter():
     the CURRENT block open (csv_batch_processor.rs:72-74 state-machine
     semantics); lines before the first I row belong to no block. An I
     row starts a line: the text starts with ``I,`` or it follows a
-    ``\n``, and it ends at its first ``\r`` or ``\n``. The block body
-    is every raw line up to the next I row (C/D/other rows alike —
-    callers filter), split on ``\n`` with one trailing ``\r`` dropped,
-    so a quoted field holding any other line-break character (``\x0c``,
-    ``\u2028``, ...) stays inside its row. Both scans are C-level
-    ``str`` methods (``find``, ``replace``, ``split``), with no Python
-    step per line.
+    ``\n``, and it ends at its first ``\r`` or ``\n``. A block's body
+    is the raw text from the end of its I row to the next I row (C/D/
+    other rows alike — callers filter), less the short I rows it runs
+    past. Callers split it into lines on ``\n``, a ``\r\n`` as one
+    break and a trailing ``\r`` dropped, so a quoted field holding any
+    other line-break character (``\x0c``, ``\u2028``, ...) stays inside
+    its row. The I-row scan is C-level ``str.find``, with no Python step
+    per line.
 
     Built in function scope on purpose: cloudpickle ships the returned
     closure BY VALUE, so executors in a foreign-driver deployment never
@@ -88,13 +94,7 @@ def nem_segmenter():
 
     sep = _HDR_SEP
 
-    def lines_of(body: str) -> list[str]:
-        out = body.replace("\r\n", "\n").split("\n")
-        if out[-1].endswith("\r"):  # a last line with no "\n" after it
-            out[-1] = out[-1][:-1]
-        return out
-
-    def segment(text: str) -> list[tuple[str, str, list[str]]]:
+    def segment(text: str) -> list[tuple[str, str, str]]:
         starts = [0] if text.startswith("I,") else []
         at = text.find("\nI,")
         while at >= 0:
@@ -108,12 +108,11 @@ def nem_segmenter():
             cr = text.find("\r", start, eol)
             eol = eol if cr < 0 else cr  # the I row ends at its first \r or \n
             row = next(_csv.reader([text[start:eol]]))
-            body = lines_of(text[eol:end])
             if len(row) >= 5:
-                blocks.append(("---".join(row[1:4]), sep.join(row[4:]), body))
+                blocks.append(("---".join(row[1:4]), sep.join(row[4:]), [text[eol:end]]))
             elif blocks:
-                blocks[-1][2].extend(body)
-        return blocks
+                blocks[-1][2].append(text[eol:end])
+        return [(key, headers, "".join(body)) for key, headers, body in blocks]
 
     return segment
 
@@ -159,39 +158,29 @@ def _list_inputs(input_path: str | list[str]) -> list[str]:
     ]
 
 
-def _texts(path: str) -> Iterator[str]:
-    """The decoded text of each ``*.csv`` member of a ZIP, one at a
-    time, or of a CSV."""
+def _blocks(path: str, segment) -> list[tuple[str, str, str]]:
+    """The blocks of each ``*.csv`` member of a ZIP, or of a CSV, in
+    order. A member's decoded text goes once it is segmented."""
     with fsutil.open_input(path) as fh:
         raw = fh.read()
     if not path.lower().endswith(".zip"):
-        yield raw.decode("utf-8", "replace")
-        return
+        return segment(raw.decode("utf-8", "replace"))
     with zipfile.ZipFile(io.BytesIO(raw)) as zf:
-        for m in zf.namelist():
-            if m.lower().endswith(".csv"):
-                yield zf.read(m).decode("utf-8", "replace")
+        return [
+            block
+            for m in zf.namelist()
+            if m.lower().endswith(".csv")
+            for block in segment(zf.read(m).decode("utf-8", "replace"))
+        ]
 
 
-def _block_lines(paths: list[str]) -> dict[tuple[str, str], dict[str, list[str]]]:
-    """Each (table, I-header) group's raw block lines by file date, both
-    in input order. Only the lines outlive the call: a member's decoded
-    text goes once it is segmented."""
-    segment = nem_segmenter()
-    groups: dict[tuple[str, str], dict[str, list[str]]] = {}
-    for path in paths:
-        date = file_date(posixpath.basename(path))
-        for text in _texts(path):
-            for key, headers, lines in segment(text):
-                groups.setdefault((key, headers), {}).setdefault(date, []).extend(lines)
-    return groups
-
-
-def _d_rows(lines: list[str], headers: list[str]) -> pa.Table:
-    """The D-rows of ``lines`` as string columns named ``headers``,
-    cleaned (clean_str), with "" as null (chunk.rs:211-216). A row of
-    the wrong width is null-padded or truncated in its place, as Spark's
-    PERMISSIVE ``from_csv`` does (csv_batch_processor.rs:80-88)."""
+def _d_rows(text: str, headers: list[str]) -> pa.Table | None:
+    """The D-rows of a block's text as raw string columns named
+    ``headers``, or None if it holds none. A row of the wrong width is
+    null-padded or truncated in its place, as Spark's PERMISSIVE
+    ``from_csv`` does (csv_batch_processor.rs:80-88)."""
+    if not text.strip("\r\n"):  # pyarrow rejects an empty input
+        return None
     names = _MARKERS + headers
     ragged: list[tuple[int, str]] = []
 
@@ -200,7 +189,7 @@ def _d_rows(lines: list[str], headers: list[str]) -> pa.Table:
         return "skip"
 
     t = pacsv.read_csv(
-        pa.py_buffer("\n".join(lines).encode("utf-8")),
+        pa.py_buffer(text.encode("utf-8")),
         # serial, so the handler sees every row's number
         read_options=pacsv.ReadOptions(column_names=names, use_threads=False),
         parse_options=pacsv.ParseOptions(invalid_row_handler=keep),
@@ -210,7 +199,7 @@ def _d_rows(lines: list[str], headers: list[str]) -> pa.Table:
             quoted_strings_can_be_null=False,
         ),
     )
-    fixed = [(n, row) for n, text in ragged for row in csv.reader([text]) if row[:1] == ["D"]]
+    fixed = [(n, row) for n, line in ragged for row in csv.reader([line]) if row[:1] == ["D"]]
     if fixed:
         pad = [None] * len(names)
         cols = zip(*((row + pad)[: len(names)] for _, row in fixed))
@@ -220,14 +209,27 @@ def _d_rows(lines: list[str], headers: list[str]) -> pa.Table:
         kept = np.setdiff1d(np.arange(1, n_rows + 1), [n for n, _ in ragged])
         order = np.argsort(np.concatenate([kept, [n for n, _ in fixed]]), kind="stable")
         t = pa.concat_tables([t, extra]).take(order)
-    t = t.filter(pc.equal(t.column(0), "D"))
-    cols = [clean_text(t.column(i)) for i in range(len(_MARKERS), len(names))]
-    return pa.Table.from_arrays(
-        [pc.if_else(pc.equal(c, ""), None, c) for c in cols], names=headers
-    )
+    t = t.filter(pc.equal(t.column(0), "D")).select(range(len(_MARKERS), len(names)))
+    return t if t.num_rows else None
 
 
-def ingest(spark: SparkSession, input_path: str | list[str], out_dir: str) -> dict[str, int]:
+def _cleaned(c):
+    """A text column as written: cleaned (clean_str), with "" as null
+    (chunk.rs:211-216)."""
+    s = clean_text(c)
+    return pc.if_else(pc.equal(s, ""), None, s)
+
+
+class Ingested(dict):
+    """``{table_key: rows}`` of one :func:`ingest` call; ``failed`` lists
+    each input file it skipped as ``{"filename", "reason"}``."""
+
+    def __init__(self, counts: dict[str, int], failed: list[dict[str, str]]):
+        super().__init__(counts)
+        self.failed = failed
+
+
+def ingest(spark: SparkSession, input_path: str | list[str], out_dir: str) -> Ingested:
     """Full S4-S7 pipeline: parse → per-table typed tables → Hive
     ``date=`` partitioned parquet under ``out_dir/<TABLE>/``.
 
@@ -247,47 +249,79 @@ def ingest(spark: SparkSession, input_path: str | list[str], out_dir: str) -> di
     already at rest; the compactor merges a partition once it holds two
     or more files.
 
+    A file that cannot be read, unzipped or tokenized (a truncated or
+    empty ZIP, a corrupt member) is skipped whole and listed in the
+    result's ``failed``; every other file is still ingested.
+
     Returns {table_key: row_count} over every file of each table written
     to (footers only), so callers can run the conservation check
     (verify.rs:56-133: D-row count == parquet row count).
     """
     tz = spark.conf.get("spark.sql.session.timeZone")
-    groups = _block_lines(_list_inputs(input_path))
+    segment = nem_segmenter()
+    failed: list[dict[str, str]] = []
 
-    def tokenize(lines: list[str], names: list[str]) -> pa.Table | None:
-        if not any(lines):  # pyarrow rejects an empty input
-            return None
-        t = _d_rows(lines, names)
-        return t if t.num_rows else None
+    def skip(path: str, e: Exception) -> None:
+        _LOG.warning("ingest skipped %s", path, exc_info=e)
+        failed.append({"filename": posixpath.basename(path), "reason": f"{type(e).__name__}: {e}"})
 
     def write(key: str, date: str, t: pa.Table, schema: pa.Schema) -> None:
+        # text columns are cleaned here; arrow_cast cleans the ones it parses
+        cols = [
+            _cleaned(c) if schema.field(name).type == pa.string() else c
+            for name, c in zip(t.column_names, t.columns)
+        ]
+        t = pa.Table.from_arrays(cols, names=t.column_names)
         fsutil.write_parquet(
             posixpath.join(out_dir, key, f"date={date}"), schema, [arrow_cast(t, schema, tz)]
         )
 
     keys, writes = set(), []
-    n_parts = sum(len(by_date) for by_date in groups.values())
-    with ThreadPoolExecutor(max_workers=max(1, min(8, n_parts))) as pool:
-        pending = []
-        for (key, headers), by_date in groups.items():
-            names = headers.split(_HDR_SEP)
-            # a part's raw lines go with its task, so they are freed once tokenized
-            parts = [
-                (date, pool.submit(tokenize, by_date.pop(date), names)) for date in list(by_date)
-            ]
-            pending.append((key, names, parts))
-        while pending:  # popped, so a group's tables go once they are written
-            key, names, parts = pending.pop(0)
-            tables = [(date, t) for date, f in parts if (t := f.result()) is not None]
-            if not tables:
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        # a file's blocks are tokenized while the next file is read
+        files = []
+        for path in _list_inputs(input_path):
+            try:
+                blocks = _blocks(path, segment)
+            except Exception as e:  # noqa: BLE001 - one bad file must not stall the rest
+                skip(path, e)
                 continue
-            head = pa.concat_tables(t for _, t in tables).slice(0, INFERENCE_SAMPLE_ROWS)
-            firsts = [pc.drop_null(c) for c in head.columns]
-            schema = written_schema(
-                infer_types({h: c[0].as_py() if len(c) else None for h, c in zip(names, firsts)})
-            )
-            writes += [pool.submit(write, key, date, t, schema) for date, t in tables]
+            tasks = [
+                ((key, headers), pool.submit(_d_rows, text, headers.split(_HDR_SEP)))
+                for key, headers, text in blocks
+            ]
+            files.append((path, tasks))
+        # each (table, I-header) group's tables by file date, both in input order
+        groups: dict[tuple[str, str], dict[str, list[pa.Table]]] = {}
+        while files:  # popped, so only the groups hold the tables
+            path, tasks = files.pop(0)
+            try:
+                tables = [(group, f.result()) for group, f in tasks]
+            except Exception as e:  # noqa: BLE001
+                skip(path, e)
+                continue
+            date = file_date(posixpath.basename(path))
+            for group, t in tables:
+                part = groups.setdefault(group, {}).setdefault(date, [])
+                if t is not None:
+                    part.append(t)
+        for group in list(groups):  # popped, so a group's tables go once they are written
+            key, headers = group
+            parts = [(date, pa.concat_tables(ts)) for date, ts in groups.pop(group).items() if ts]
+            if not parts:
+                continue
+            head = pa.concat_tables(t for _, t in parts).slice(0, INFERENCE_SAMPLE_ROWS)
+            # each column's first value that is not empty once cleaned, as
+            # raw text: arrow_cast cleans it once, as it cleans the column
+            firsts = [c.filter(pc.not_equal(clean_text(c), "")) for c in head.columns]
+            samples = {
+                h: c[0].as_py() if len(c) else None
+                for h, c in zip(headers.split(_HDR_SEP), firsts)
+            }
+            schema = written_schema(infer_types(samples))
+            writes += [pool.submit(write, key, date, t, schema) for date, t in parts]
             keys.add(key)
         for w in writes:
             w.result()
-    return {k: fsutil.parquet_rows(posixpath.join(out_dir, k)) for k in sorted(keys)}
+    counts = {k: fsutil.parquet_rows(posixpath.join(out_dir, k)) for k in sorted(keys)}
+    return Ingested(counts, failed)

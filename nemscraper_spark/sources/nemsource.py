@@ -82,7 +82,8 @@ def nem_csv_data_source():
 
     def _read_part(partition):
         # Executor-side: one member through the splitter's own I/D
-        # segmenter (split.rs:64-125), keeping only the "D," lines
+        # segmenter (split.rs:64-125), keeping only the "D," lines of
+        # each block's text
         import os
         import zipfile
 
@@ -98,8 +99,10 @@ def nem_csv_data_source():
                 raw = fh.read()
             src = os.path.basename(partition.path)
 
-        for table_key, headers, lines in segment(raw.decode("utf-8", "replace")):
-            for line in lines:
+        for table_key, headers, body in segment(raw.decode("utf-8", "replace")):
+            # lines split on \n, a \r\n as one break, a trailing \r dropped
+            body = body[:-1] if body.endswith("\r") else body
+            for line in body.replace("\r\n", "\n").split("\n"):
                 if line.startswith("D,"):
                     yield (src, table_key, headers, line)
 

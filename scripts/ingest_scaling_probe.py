@@ -5,9 +5,10 @@ Synthesizes N ZIPs of NEM-format CSV (~DATA_MB each, two tables per
 file, realistic column mix: timestamp + ids + floats + quality flag),
 ingests with sources/nemcsv.ingest, and reports wall-clock + rows/s at
 1, 4, and N files. Ingest runs on the driver, so this measures one
-machine's throughput: each (table, date) part is tokenized, cast and
-written as its own thread-pool task, while reading and segmenting the
-files is serial Python.
+machine's throughput. Files are read and segmented one after another,
+and each file's blocks are tokenized in a thread pool as soon as that
+file is segmented, while the next file is read; then each (table, date)
+part is cast and written as its own thread-pool task.
 
 Usage: python scripts/ingest_scaling_probe.py [n_files] [rows_per_file]
 """

@@ -32,6 +32,7 @@ import signal
 import sys
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 _REPO = str(Path(__file__).resolve().parent.parent)
@@ -63,7 +64,10 @@ def run_once(
     The processed ledger is the one record of what has been ingested:
     a tick ingests the landing dir's ZIPs the ledger lacks, then adds
     one row per ZIP. A crash between the two re-ingests the ZIPs on the
-    next tick (at least once, as the reference's main.rs:248-275).
+    next tick (at least once, as the reference's main.rs:248-275). A ZIP
+    that ingest cannot read (truncated, empty, a corrupt member) is
+    listed in ``summary["failed"]`` with its reason and left out of the
+    ledger, so every tick retries it; the tick's other ZIPs are ingested.
 
     ``summary["seconds"]`` holds the wall seconds of each phase in
     ``PHASES`` (0.0 when it did not run); ``ledger`` is the ledgers'
@@ -110,8 +114,11 @@ def run_once(
             for z in sorted(glob.glob(os.path.join(zips_dir, "*.zip")))
             if os.path.basename(z) not in done
         ]
-        names = [os.path.basename(z) for z in todo]
         counts = ingest(spark, todo, parquet_dir) if todo else {}
+    # a file ingest skipped stays out of the ledger, so the next tick retries it
+    summary["failed"] = counts.failed if todo else []
+    bad = {f["filename"] for f in summary["failed"]}
+    names = [n for n in map(os.path.basename, todo) if n not in bad]
     if names:
         with _phase(seconds, "ledger"):
             processed.add(
@@ -126,13 +133,13 @@ def run_once(
         summary["processed"] = len(names)
         summary["tables"] = counts
 
-    # 3. compact each table's multi-file partitions (compactor.rs:584-792)
+    # 3. compact each table's multi-file partitions, every table at once
+    #    (compactor.rs:584-792)
     with _phase(seconds, "compact"):
-        for troot in sorted(glob.glob(os.path.join(parquet_dir, "*"))):
-            if os.path.isdir(troot):
-                res = compact_table(spark, troot)
-                if res:
-                    summary["compacted"][os.path.basename(troot)] = res
+        troots = [t for t in sorted(glob.glob(os.path.join(parquet_dir, "*"))) if os.path.isdir(t)]
+        with ThreadPoolExecutor(max_workers=max(1, min(8, len(troots)))) as pool:
+            res = pool.map(lambda t: compact_table(spark, t), troots)
+            summary["compacted"] = {os.path.basename(t): r for t, r in zip(troots, res) if r}
 
     # 3b. mirror the compacted tree to the bucket (S15 — the
     #     reference's gcloud-sync sidecar, scripts/gcloud-sync.sh:22-41)

@@ -986,6 +986,107 @@ def test_ragged_rows_are_padded_or_truncated_in_place(spark, tmp_path):
     ]
 
 
+def test_d_values_are_cleaned_once(spark, tmp_path):
+    """A D-value is cleaned (clean_str) once, on its way to its type:
+    ``\"\"\"\"\"2.5\"\"\"\"\"`` reads as ``""2.5""``, and one clean leaves
+    ``"2.5"``, which is no double, so it is null in a double column and
+    ``"2.5"`` in a text one. As a first value it makes its column text,
+    since its one clean does not parse."""
+    import pyarrow.parquet as pq
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    nested = '"""""2.5"""""'
+    _nem_zip(landing / "PUBLIC_A_20220720_0001.zip", [(["K", "MW", "TXT", "FIRST"], [
+        f"1,1.5,x,{nested}",
+        f"2,{nested},{nested},3.5",
+    ])])
+    out = str(tmp_path / "out")
+    assert ingest(spark, str(landing), out) == {"FPP---UNIT_MW---1": 2}
+    (f,) = glob.glob(os.path.join(out, "FPP---UNIT_MW---1", "date=*", "*.parquet"))
+    t = pq.read_table(f)
+    assert str(t.schema.field("MW").type) == "double"
+    assert str(t.schema.field("FIRST").type) == "string"
+    assert t.to_pylist() == [
+        {"FIRST": '"2.5"', "K": 1.0, "MW": 1.5, "TXT": "x"},
+        {"FIRST": "3.5", "K": 2.0, "MW": None, "TXT": '"2.5"'},
+    ]
+
+
+def _parts_of(root):
+    """{date: [(pyarrow table, parquet metadata)]} of a table's files."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in sorted(glob.glob(os.path.join(root, "date=*", "*.parquet"))):
+        date = os.path.basename(os.path.dirname(f))[len("date="):]
+        out.setdefault(date, []).append((pq.read_table(f), pq.ParquetFile(f).metadata))
+    return out
+
+
+def test_parts_reassemble_files_in_input_order(spark, tmp_path):
+    """A (table, I-header, date) part is its files' blocks in input
+    order: a date fed by two files, a block that runs on past a short I
+    row, and a second header version of the table in the same call each
+    land as one file per part that keeps the D-row order, in one row
+    group of the rest codec. The first file's block spans several pyarrow
+    chunks."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    n = 40_000
+    text = "\r\n".join(
+        ["C,NEMP.WORLD,DISPATCHIS,AEMO,PUBLIC,2022/07/20,18:00:00,1,,", "I,FPP,UNIT_MW,1,K,MW"]
+        + [f"D,FPP,UNIT_MW,1,{k},{k / 4}" for k in range(n)]
+        + ["I,FPP,short"]  # a short I row: the block runs on
+        + [f"D,FPP,UNIT_MW,1,{k},{k / 4}" for k in range(n, n + 3)]
+        + ['C,"END OF REPORT",9']
+    )
+    with zipfile.ZipFile(landing / "PUBLIC_A_20220720_0001.zip", "w") as zf:
+        zf.writestr("PUBLIC_A_202207201800.CSV", text)
+    _nem_zip(landing / "PUBLIC_A_20220720_0002.zip",
+             [(["K", "MW"], [f"{k},{k / 4}" for k in range(n + 3, n + 6)])])
+    _nem_zip(landing / "PUBLIC_A_20220720_0003.zip",
+             [(["K", "UNIT", "MW"], ["7,U7,1.0", "5,U5,2.0"])])
+    _nem_zip(landing / "PUBLIC_A_20220721_0001.zip", [(["K", "MW"], ["9,0.5", "8,0.25"])])
+    out = str(tmp_path / "out")
+    assert ingest(spark, str(landing), out) == {"FPP---UNIT_MW---1": n + 10}
+    parts = _parts_of(os.path.join(out, "FPP---UNIT_MW---1"))
+    by_cols = {
+        (date, tuple(sorted(t.column_names))): t.column("K").to_pylist()
+        for date, files in parts.items()
+        for t, _ in files
+    }
+    assert by_cols == {
+        ("2022-07-20", ("K", "MW")): [float(k) for k in range(n + 6)],
+        ("2022-07-20", ("K", "MW", "UNIT")): [7.0, 5.0],
+        ("2022-07-21", ("K", "MW")): [9.0, 8.0],
+    }
+    for files in parts.values():
+        for _, md in files:
+            assert md.num_row_groups == 1
+            assert {md.row_group(0).column(c).compression for c in range(md.num_columns)} == {"ZSTD"}
+
+
+def test_ingest_skips_a_zip_whose_member_does_not_decompress(spark, tmp_path):
+    """A ZIP whose member's deflate stream is corrupt is skipped whole
+    and listed with its reason; the call's other file is ingested."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _nem_zip(landing / "PUBLIC_A_20220720_0001.zip", [(["K", "MW"], ["1,1.5"])])
+    bad = landing / "PUBLIC_A_20220720_0002.zip"
+    with zipfile.ZipFile(bad, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("PUBLIC_A_202207201800.CSV", "I,FPP,UNIT_MW,1,K,MW\r\n" + "D,FPP,UNIT_MW,1,2,2.5\r\n" * 500)
+    raw = bytearray(bad.read_bytes())
+    data = zipfile.ZipFile(bad).infolist()[0].header_offset + 30 + len("PUBLIC_A_202207201800.CSV")
+    raw[data + 4 : data + 20] = b"\xff" * 16  # inside the deflate stream
+    bad.write_bytes(bytes(raw))
+    out = str(tmp_path / "out")
+    counts = ingest(spark, str(landing), out)
+    assert counts == {"FPP---UNIT_MW---1": 1}
+    assert [f["filename"] for f in counts.failed] == [bad.name]
+    assert counts.failed[0]["reason"]
+
+
 def _line_by_line_segmenter():
     """The segmenter as it read the grammar with a line-start regex and
     one Python step per line: the reference for nem_segmenter's blocks."""
@@ -1027,13 +1128,23 @@ def _line_by_line_segmenter():
     ],
 )
 def test_segmenter_gives_the_line_by_line_blocks(text):
-    """nem_segmenter's I-row scan and C-level line split give the blocks
-    of the line-by-line version: an I row at offset 0, a last line
-    ending in \r, \r\r\n endings, a short I row that keeps the block
-    open, and I rows that do not start a line."""
+    """nem_segmenter's I-row scan gives the blocks of the line-by-line
+    version, each block's text split into lines as its callers split it
+    (empty lines, which neither keeps, left out): an I row at offset 0,
+    a last line ending in \r, \r\r\n endings, a short I row that keeps
+    the block open, and I rows that do not start a line."""
     from nemscraper_spark.sources.nemcsv import nem_segmenter
 
-    assert nem_segmenter()(text) == _line_by_line_segmenter()(text)
+    def lines(body):
+        body = body[:-1] if body.endswith("\r") else body
+        return [ln for ln in body.replace("\r\n", "\n").split("\n") if ln]
+
+    got = [(key, headers, lines(body)) for key, headers, body in nem_segmenter()(text)]
+    want = [
+        (key, headers, [ln for ln in body if ln])
+        for key, headers, body in _line_by_line_segmenter()(text)
+    ]
+    assert got == want
 
 
 @pytest.mark.parametrize("reverse", [False, True])

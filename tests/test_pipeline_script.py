@@ -87,7 +87,10 @@ def test_loop_resweep_picks_up_outofband_zip(spark, tmp_path):
     finally:
         rp.run_once = rp_run_once
 
-    assert set(ticks[0]) == {"downloaded", "processed", "tables", "compacted", "seconds"}
+    assert set(ticks[0]) == {
+        "downloaded", "processed", "tables", "compacted", "seconds", "failed"
+    }
+    assert ticks[0]["failed"] == []
     assert set(ticks[0]["seconds"]) == set(rp.PHASES)
     assert all(v >= 0.0 for v in ticks[0]["seconds"].values())
     assert ticks[0]["processed"] == 1
@@ -111,6 +114,55 @@ def test_loop_resweep_picks_up_outofband_zip(spark, tmp_path):
     # and every tick vacuumed it: one file per ledger partition
     for part in glob.glob(os.path.join(led.path, "date=*")):
         assert len(glob.glob(os.path.join(part, "*.parquet"))) == 1
+
+
+def test_bad_zips_do_not_stall_the_tick(spark, tmp_path):
+    """A tick whose landing dir holds one good, one half-truncated and
+    one zero-byte ZIP ingests the good one with its D-rows conserved,
+    lists each bad file once with its reason and leaves it out of the
+    processed ledger; the next tick ingests a newly landed good ZIP."""
+    import json
+
+    from nemscraper_spark.plans.history import TableHistory
+    from nemscraper_spark.sources import fsutil
+
+    work = tmp_path / "work"
+    zips = work / "zips"
+    zips.mkdir(parents=True)
+
+    def _drop(name):
+        with zipfile.ZipFile(zips / name, "w", zipfile.ZIP_DEFLATED) as zf:
+            zf.writestr(name.replace(".zip", ".CSV"), NEM_CSV)
+
+    _drop("PUBLIC_DISPATCHIS_20220720_0001.zip")
+    _drop("PUBLIC_DISPATCHIS_20220720_0002.zip")
+    whole = (zips / "PUBLIC_DISPATCHIS_20220720_0002.zip").read_bytes()
+    (zips / "PUBLIC_DISPATCHIS_20220720_0002.zip").write_bytes(whole[: len(whole) // 2])
+    (zips / "PUBLIC_DISPATCHIS_20220720_0003.zip").write_bytes(b"")
+    bad = {"PUBLIC_DISPATCHIS_20220720_0002.zip", "PUBLIC_DISPATCHIS_20220720_0003.zip"}
+    d_rows = sum(line.startswith("D,") for line in NEM_CSV.splitlines())
+    table = str(work / "parquet" / "FPP---UNIT_MW---1")
+
+    s1 = run_once(spark, str(work), [], None)
+    json.dumps(s1)  # the tick line
+    assert s1["processed"] == 1
+    assert sorted(f["filename"] for f in s1["failed"]) == sorted(bad)
+    assert all("BadZipFile" in f["reason"] for f in s1["failed"])
+    landed = sum(fsutil.parquet_rows(str(t)) for t in (work / "parquet").iterdir())
+    assert landed == d_rows
+    led = TableHistory(spark, str(work / "history"), "processed")
+    assert led.keys() == {"PUBLIC_DISPATCHIS_20220720_0001.zip"}
+
+    _drop("PUBLIC_DISPATCHIS_20220721_0001.zip")
+    s2 = run_once(spark, str(work), [], None)
+    assert s2["processed"] == 1
+    assert sorted(f["filename"] for f in s2["failed"]) == sorted(bad)  # retried
+    landed = sum(fsutil.parquet_rows(str(t)) for t in (work / "parquet").iterdir())
+    assert landed == 2 * d_rows
+    assert os.path.isdir(os.path.join(table, "date=2022-07-21"))
+    assert led.keys() == {
+        "PUBLIC_DISPATCHIS_20220720_0001.zip", "PUBLIC_DISPATCHIS_20220721_0001.zip"
+    }
 
 
 def test_sigterm_stops_loop_gracefully(spark, tmp_path):
