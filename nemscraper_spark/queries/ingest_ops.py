@@ -149,42 +149,32 @@ def nem_datasource_stream(spark, sf_dir):
     cycle (main.rs:286-307) with Spark owning scheduling, retries and
     exactly-once bookkeeping via the checkpoint.
 
-    The query stages one NEM ZIP, drains it, lands a SECOND ZIP while
-    the stream is live (the poll-loop case), drains again, and returns
-    per-table D-row counts — which must equal exactly 2x the fixture's
-    D-lines: each file consumed once, none reprocessed, none missed.
-    The DuckDB oracle recounts the raw fixture bytes independently."""
-    tmp = tempfile.mkdtemp(prefix="nem_ds_stream_")
-    landing = os.path.join(tmp, "landing")
-    ckpt = os.path.join(tmp, "ckpt")
-    os.makedirs(landing)
-    with zipfile.ZipFile(
-        os.path.join(landing, "PUBLIC_DISPATCHIS_20220720_0001.zip"), "w"
-    ) as zf:
-        zf.writestr("PUBLIC_DISPATCHIS_202207201800.CSV", _NEM_CSV)
-
+    The query stages one NEM ZIP and drains it to a parquet sink, lands
+    a SECOND ZIP while the stream is down (the poll loop's next file),
+    drains again from the same checkpoint, and returns per-table D-row
+    counts — which must equal exactly 2x the fixture's D-lines: each
+    file consumed once, none reprocessed, none missed.  The DuckDB
+    oracle recounts the raw fixture bytes independently."""
+    from nemscraper_spark.queries.streaming_ops import _drain
     from nemscraper_spark.sources.nemsource import register as _reg_ds
 
+    tmp = tempfile.mkdtemp(prefix="nem_ds_stream_")
+    landing = os.path.join(tmp, "landing")
+    out = os.path.join(tmp, "out")
+    os.makedirs(landing)
     _reg_ds(spark)
-    q = (
-        spark.readStream.format("nemcsv")
-        .load(landing)
-        .writeStream.format("memory")
-        .queryName("nemspark_nem_ds_stream")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
+    for day in ("20220720", "20220721"):
         with zipfile.ZipFile(
-            os.path.join(landing, "PUBLIC_DISPATCHIS_20220721_0001.zip"), "w"
+            os.path.join(landing, f"PUBLIC_DISPATCHIS_{day}_0001.zip"), "w"
         ) as zf:
-            zf.writestr("PUBLIC_DISPATCHIS_202207211800.CSV", _NEM_CSV)
-        q.processAllAvailable()
-    finally:
-        q.stop()
+            zf.writestr(f"PUBLIC_DISPATCHIS_{day}1800.CSV", _NEM_CSV)
+        _drain(
+            spark.readStream.format("nemcsv").load(landing),
+            "nemspark_nem_ds_stream", sf_dir,
+            sink="parquet", ckpt=os.path.join(tmp, "ckpt"), path=out,
+        )
     counts = (
-        spark.table("nemspark_nem_ds_stream")
+        spark.read.parquet(out)
         .groupBy("table_key")
         .agg(F.count("*").alias("n_rows"))
         .collect()

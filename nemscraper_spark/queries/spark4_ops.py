@@ -30,9 +30,6 @@ Spark 4 line and absent from the round-4 registry:
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from nemscraper_spark.queries.common import (
@@ -42,7 +39,7 @@ from nemscraper_spark.queries.common import (
     oracle_dec_sum,
     register,
 )
-from nemscraper_spark.queries.streaming_ops import _staged_stream, _state_width
+from nemscraper_spark.queries.streaming_ops import _drain, _staged, _staged_stream
 
 # ------------------------------------------------------- VARIANT ----
 
@@ -179,12 +176,6 @@ def udtf_ngram_explode(spark, sf_dir):
 
 # -------------------------------------------- state-store reader ----
 
-# The audited checkpoint must outlive the query function: the returned
-# DataFrame reads it lazily when the driver collects.  Keyed by
-# applicationId (a string, never a stopped context) + sf_dir, one
-# bounded drain per session; a few KB of HDFS-state files in tmp.
-_AUDIT_CKPT: dict[tuple[str, str], str] = {}
-
 
 @register(
     "streaming_state_audit",
@@ -214,33 +205,18 @@ def streaming_state_audit(spark, sf_dir):
     job.  State is read per shuffle partition in parallel; nothing
     here collects to the driver.
     """
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    ckpt = _AUDIT_CKPT.get(key)
-    if ckpt is None or not os.path.isdir(ckpt):
-        stream, _stage = _staged_stream(spark, sf_dir)
-        agg = stream.groupBy("event_type").agg(
+
+    def drain(ckpt):
+        agg = _staged_stream(spark, sf_dir).groupBy("event_type").agg(
             F.count("*").alias("n_events"),
             dec_sum("value").alias("sum_value"),
         )
-        ckpt = tempfile.mkdtemp(prefix="nemspark-stateaudit-")
-        conf_key = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, str(_state_width(spark, sf_dir)))
-        try:
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("noop")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
-        q.awaitTermination()
-        _AUDIT_CKPT[key] = ckpt
+        _drain(agg, "nemspark_streaming_state_audit", sf_dir,
+               mode="complete", sink="noop", ckpt=ckpt)
+
+    # the audited checkpoint outlives this call (the returned DataFrame
+    # reads it lazily), so it is staged: one bounded drain per session
+    ckpt = _staged(spark, sf_dir, "audit", drain)
     state = spark.read.format("statestore").load(ckpt)
     # Aggregation state buffers are named by function ("count", "sum"),
     # not by output alias; the decimal sum buffer is widened to

@@ -63,17 +63,26 @@ def nem_csv_data_source():
 
     def _expand_parts(files):
         """One partition per ZIP member / raw CSV — the unit the
-        reference's per-file worker pool schedules (main.rs:208-239)."""
+        reference's per-file worker pool schedules (main.rs:208-239).
+        A ZIP whose directory cannot be read (truncated, empty) is
+        skipped and logged, as sources/nemcsv.ingest skips it, so one
+        bad file does not fail the scan."""
+        import logging
         import zipfile
 
         parts = []
         for f in files:
             low = f.lower()
             if low.endswith(".zip"):
-                with zipfile.ZipFile(f) as zf:
-                    for m in sorted(zf.namelist()):
-                        if m.lower().endswith(".csv"):
-                            parts.append(_NemPart(f, m))
+                try:
+                    with zipfile.ZipFile(f) as zf:
+                        members = sorted(zf.namelist())
+                except (OSError, zipfile.BadZipFile) as e:
+                    logging.getLogger("nemscraper_spark.nemsource").warning(
+                        "nemcsv skipped %s: %s", f, e
+                    )
+                    continue
+                parts.extend(_NemPart(f, m) for m in members if m.lower().endswith(".csv"))
             elif low.endswith(".csv"):
                 parts.append(_NemPart(f, None))
         return parts

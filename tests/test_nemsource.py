@@ -211,3 +211,24 @@ def test_stream_reader_batch_parity(spark, tmp_path):
         map(tuple, spark.read.format("nemcsv").load(str(landing)).collect())
     )
     assert got == want and len(got) == 10
+
+
+def test_bad_zip_is_skipped_by_batch_and_stream_scans(spark, sf_dir, tmp_path):
+    """A zero-byte ZIP beside a good one is skipped at planning time, as
+    ingest skips it: the batch scan and an availableNow drain of the
+    stream reader both return the good ZIP's D-lines."""
+    from nemscraper_spark.queries.streaming_ops import _drain
+
+    register(spark)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _zip_fixture(str(landing), "PUBLIC_A_20220720")
+    (landing / "PUBLIC_B_20220721_0001.zip").write_bytes(b"")
+    want = sorted(l for v in _expected_d_lines().values() for l in v)
+
+    batch = spark.read.format("nemcsv").load(str(landing)).collect()
+    assert sorted(r.line for r in batch) == want
+    assert {r.src_file for r in batch} == {"PUBLIC_A_20220720.CSV"}
+    stream = spark.readStream.format("nemcsv").load(str(landing))
+    drained = _drain(stream, "nem_bad_zip_test", sf_dir).collect()
+    assert sorted(map(tuple, drained)) == sorted(map(tuple, batch))

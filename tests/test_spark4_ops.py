@@ -93,15 +93,15 @@ def test_state_audit_equals_batch_and_reuses_checkpoint(spark, sf_dir):
         .collect()
     }
     assert first == batch
-    from nemscraper_spark.queries.spark4_ops import _AUDIT_CKPT
+    from nemscraper_spark.queries.streaming_ops import _STAGE_CACHE
 
-    n_ckpts = len(_AUDIT_CKPT)
+    n_stages = len(_STAGE_CACHE)
     second = {
         r.event_type: (r.n_events, r.sum_value)
         for r in fn(spark, sf_dir).collect()
     }
     assert second == first
-    assert len(_AUDIT_CKPT) == n_ckpts  # cache hit, no new drain
+    assert len(_STAGE_CACHE) == n_stages  # cache hit, no new drain
 
 
 def test_cross_dup_fraction_independent_recompute(spark, sf_dir):
