@@ -42,9 +42,7 @@ _SHINGLE_SQL = """
 
 
 def _shingles(spark, sf_dir):
-    # Delegates to training_data's session-level shingle cache: the
-    # frame is identical, and routing through one builder lets the
-    # whole dedup family share a single persisted explode. Lazy import
+    # One shingle builder for the whole dedup family. Lazy import
     # (training_data lazily imports from this module elsewhere).
     from nemscraper_spark.queries.training_data import _shingle_frame
 
@@ -267,8 +265,7 @@ def _dedup_groups_md5(spark, sf_dir, n_perm: int, band_size: int):
     # "documents#md5reps") and is shared by every dedup-groups
     # consumer in the session, at either geometry, instead of being
     # rebuilt per query (round-9 verdict, r10 queue item b).  The tag
-    # name is admitted in training_data._COUNTED_TAGS; the shingle
-    # cache matches "documents" exactly, so this tag never pollutes it.
+    # name is admitted in training_data._COUNTED_TAGS.
     reps_docs = d.join(reps, "doc_id")
     tag = getattr(d, "_sg_table_tag", None)
     if tag is not None:
@@ -302,10 +299,7 @@ def dedup_groups_lsh(spark, sf_dir):
     linear in corpus size, the composition a 100TB keep-list would
     actually run.  The registered entry seeds with md5 so the oracle
     replays collapse, banding, verify, AND the transitive closure —
-    the production geometry is hash-gated end to end, not rows-only.
-    The xxhash64 seeding (library default lsh_verified_pairs) stays
-    the cheaper production parameterization, pinned by the
-    subset/recall tests in tests/test_training_ops.py."""
+    the production geometry is hash-gated end to end, not rows-only."""
     return _dedup_groups_md5(spark, sf_dir, n_perm=16, band_size=4)
 
 

@@ -4,9 +4,7 @@ the driver's oracle gate.
 `zorder_curve_keys` pins the bit-interleave arithmetic itself: the same
 Python-generated formula renders to Spark (shiftleft/shiftright) and
 DuckDB (<< >>) dialects, so a hash mismatch would catch any divergence
-in the curve definition.  The layout EFFECT (multi-dimensional file
-skipping vs a linear sort) is pinned in tests/test_zorder.py on real
-parquet footers.
+in the curve definition.
 """
 
 from __future__ import annotations
@@ -32,8 +30,8 @@ _COLS = [f"(CAST(user_id AS BIGINT) & {_MASK})", f"(CAST(event_id AS BIGINT) & {
 )
 def zorder_curve_keys(spark, sf_dir):
     """Morton key over (user_id, event_id) for every event — the sort
-    key `plans/zorder.write_zordered` clusters 100 TB files by.  Pure
-    codegen bit arithmetic, shuffle-free."""
+    key a Z-ordered layout clusters files by.  Pure codegen bit
+    arithmetic, shuffle-free."""
     ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",

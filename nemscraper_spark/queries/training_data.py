@@ -466,10 +466,8 @@ def minhash_signatures_md5(spark, sf_dir):
     """The minhash KERNEL itself, hash-match-checkable: K=8 per-doc
     min-of-md5('seed|shingle') signatures, identical byte-for-byte in
     any engine with md5 (P[sig_i equal] = Jaccard — the estimator LSH
-    banding builds on). The production path (minhash_lsh_pairs) swaps
-    md5 for seeded xxhash64 — 8-byte keys, ~4x cheaper — which is
-    engine-specific and therefore rows-only checked; THIS query pins
-    the algorithm cross-engine exactly. One explode + one grouped
+    banding builds on), so THIS query pins the algorithm cross-engine
+    exactly. One explode + one grouped
     8-way min-agg: partial aggregation absorbs the shingle fan-out
     map-side, nothing shuffles but (doc_id, 8 hashes)."""
     d = fan_out(load_table(spark, sf_dir, "documents"))
@@ -569,11 +567,10 @@ def minhash_lsh_pairs_md5(spark, sf_dir):
     """The FULL MinHash+LSH pipeline pinned cross-engine: shingle → 8
     md5 minhash sigs → 4 bands of 2 (bucket = concatenated sig pair) →
     bucket-join candidates → pair-local exact-Jaccard verify ≥ 0.2.
-    Same staged plan as the production path (minhash_lsh_pairs) but
+    Same staged plan as the production geometry (minhash_lsh_pairs);
     every hash is md5, so DuckDB replays the entire algorithm —
     candidates, verify, and threshold — and the driver hash-gates it
-    end to end (the xxhash64 production variant stays rows-only; this
-    query is the cross-engine proof of the banding + verify logic).
+    end to end.
     Scale shape is unchanged: one explode + grouped 8-way min-agg,
     band bucket join (linear, geometry-controlled), semi-join prune,
     per-pair O(|a|+|b|) set intersect."""
@@ -684,46 +681,15 @@ def lsh_band_curve_report(spark, sf_dir):
     return functools.reduce(lambda a, b: a.unionByName(b), arms)
 
 
-# Cross-QUERY stage reuse for the dedup/LSH family: ~8 registered
-# queries each rebuild the identical full-corpus shingle explode (and
-# several the identical 16-way min-agg banding on top). OFF BY DEFAULT:
-# measured at sf0.1 (quiet box, 12-query family suite), the persisted
-# variant ran 47.4 s vs 41.3 s without — at 260k shingle rows the
-# persist barrier + InMemoryTableScan overhead costs more than the
-# recompute it saves, because the explode otherwise fuses into the
-# min-agg under whole-stage codegen (same conclusion as the NOTE in
-# lsh_verified_pairs, now measured cross-query too). At real corpus
-# scale the explode dominates and the trade flips, so the machinery
-# ships behind SPARK_GRAFT_FAMILY_CACHE=1 for cluster deployments.
-# Keys include applicationId (a string, never a stopped context) so a
-# fresh session can never read frames from a dead one; the
-# _sg_table_tag provenance check guarantees the cached frame is
-# bit-equal to what the caller would have built.
-_SHINGLE_CACHE: dict[tuple[str, str], object] = {}
-_BANDS_CACHE: dict[tuple[str, str, tuple], object] = {}
-
-
-def _family_cache_on() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_FAMILY_CACHE") == "1"
+# Read by perfbench/spans.py:TRUNK_CACHES only; nothing here fills them.
+_SHINGLE_CACHE: dict = {}
+_BANDS_CACHE: dict = {}
 
 
 def _shingle_frame(d):
     """(doc_id, text) → exploded distinct word-3-gram rows — the
-    Spark twin of _SHINGLE_SQL, shared by every md5-LSH pipeline.
-    With SPARK_GRAFT_FAMILY_CACHE=1 and ``d`` carrying the load_table
-    provenance tag for the documents table, the result is persisted
-    and reused across every query in the session touching the same
-    (sf_dir) corpus (see the cache-default note above)."""
-    tag = getattr(d, "_sg_table_tag", None)
-    key = None
-    if tag is not None and tag[1] == "documents" and _family_cache_on():
-        key = (d.sparkSession.sparkContext.applicationId, tag[0])
-        hit = _SHINGLE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    sh = (
+    Spark twin of _SHINGLE_SQL, shared by every md5-LSH pipeline."""
+    return (
         d.withColumn("w", F.split("text", " "))
         .filter(F.size("w") >= 3)
         .select(
@@ -736,11 +702,6 @@ def _shingle_frame(d):
             ).alias("shingle"),
         )
     )
-    if key is not None:
-        sh = sh.persist()
-        sh._sg_shingle_key = key
-        _SHINGLE_CACHE[key] = sh
-    return sh
 
 
 def _md5_bands_frame(sh, geometries: tuple[tuple[int, int], ...]):
@@ -749,16 +710,7 @@ def _md5_bands_frame(sh, geometries: tuple[tuple[int, int], ...]):
     _lsh_md5_bands_only_sql.  One aggregate computes the shingle count n
     and s_i = min(md5("i|" || shingle)), which does not depend on n_perm,
     so every geometry reads a prefix of the same signatures.  g = 1 <<
-    the geometry's index keeps buckets of different geometries apart.
-    Cached per (session, sf_dir, geometries) when ``sh`` came out of the
-    shingle cache (opt-in, see the cache-default note above)."""
-    skey = getattr(sh, "_sg_shingle_key", None)
-    key = None
-    if skey is not None:
-        key = (*skey, geometries)
-        hit = _BANDS_CACHE.get(key)
-        if hit is not None:
-            return hit
+    the geometry's index keeps buckets of different geometries apart."""
     mins = sh.groupBy("doc_id").agg(
         F.count("*").alias("n"),
         *[
@@ -766,7 +718,7 @@ def _md5_bands_frame(sh, geometries: tuple[tuple[int, int], ...]):
             for i in range(max(n_perm for n_perm, _ in geometries))
         ],
     )
-    bands = mins.select(
+    return mins.select(
         "doc_id",
         "n",
         F.explode(
@@ -788,10 +740,6 @@ def _md5_bands_frame(sh, geometries: tuple[tuple[int, int], ...]):
             )
         ).alias("bb"),
     ).select("doc_id", "n", "bb.g", "bb.band", "bb.bucket")
-    if key is not None:
-        bands = bands.persist()
-        _BANDS_CACHE[key] = bands
-    return bands
 
 
 def _md5_band_candidates(sh, geometries: tuple[tuple[int, int], ...]):
@@ -939,10 +887,7 @@ def minhash_lsh_pairs(spark, sf_dir):
     The registered entry seeds its 16 permutations with md5 so the
     DuckDB oracle replays banding, verify, and threshold end to end —
     the driver hash-gates the production geometry, not just the
-    compact (8, 2) twin.  The xxhash64 parameterization (~4x cheaper
-    8-byte keys, the library default lsh_verified_pairs) computes the
-    same pipeline with a non-portable hash and stays covered by the
-    recall/subset pins in tests/test_training_ops.py.
+    compact (8, 2) twin.
     """
     d = fan_out(load_table(spark, sf_dir, "documents"))
     return lsh_verified_pairs_md5(d, threshold=0.2, n_perm=16, band_size=4)
@@ -1037,109 +982,6 @@ def dedup_incremental_delta(spark, sf_dir):
             .otherwise(F.lit("base"))
             .alias("kind"),
         )
-    )
-
-
-def lsh_verified_pairs(d, threshold: float = 0.2):
-    """The reusable LSH pipeline over a (doc_id, text) frame: shingle →
-    minhash → band buckets → candidate pairs → pair-local exact-Jaccard
-    verify → (doc_a, doc_b, jaccard >= threshold). See
-    minhash_lsh_pairs for the scale analysis of each stage."""
-    n_perm, band_size = 16, 4
-    # NOTE: deliberately NOT persisted — the explode pipelines into the
-    # partial min-agg / count-agg under whole-stage codegen; caching the
-    # exploded index costs columnar serialization and a pipeline barrier
-    # that measured slower than recomputing it per branch.
-    sh = (
-        d.withColumn("w", F.split("text", " "))
-        .filter(F.size("w") >= 3)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "array_distinct(transform(sequence(0, size(w) - 3),"
-                    " i -> concat_ws(' ', w[i], w[i+1], w[i+2])))"
-                )
-            ).alias("shingle"),
-        )
-    )
-    # K minhash values per doc in one aggregation (no K-fold self-join)
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(n_perm)
-        ]
-    )
-    bands = mins.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"h{b * band_size + j}") for j in range(band_size)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(n_perm // band_size)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    la = bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-    lb = bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
-    cand = (
-        la.join(lb, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    # exact-verify ONLY the candidate docs: semi-join the inverted index
-    # down to docs that appear in some candidate pair before the
-    # quadratic-ish shingle join (at scale candidates << corpus)
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # pair-local exact verify in the equi-join COUNT form (the shape
-    # that retired collect_set from the md5 trunk in round 8), over
-    # 64-bit shingle hashes — xxhash64 keys make the count join's
-    # shuffle ~4x cheaper than the md5 path's shingle strings, which
-    # is exactly why this stays the library-default parameterization.
-    # No per-doc hash SET is ever materialized in an aggregation
-    # buffer: a pathological document costs bounded (doc, hash)
-    # shuffle rows, not one executor-resident array.  countDistinct
-    # reproduces the retired set semantics exactly (equal-hash
-    # shingles — vanishingly rare at 64 bits — collapse, as they did
-    # in the collect_set).  The inner count join loses no candidate:
-    # a bucket collision means equal min-xxhash within the band, so
-    # every candidate pair shares its argmin shingle and n_common >=
-    # 1.  AQE broadcasts the hash table when candidates are few; at
-    # scale it stays a shuffle join keyed by (doc_b, h) — no skew:
-    # per-doc shingles are distinct, so key multiplicity is bounded
-    # by the candidate fan-in, not by shingle popularity.
-    hsel = sh.join(cand_docs, "doc_id", "left_semi").select(
-        "doc_id", F.xxhash64("shingle").alias("h")
-    )
-    cnt = hsel.groupBy("doc_id").agg(F.countDistinct("h").alias("n"))
-    ha = hsel.select(F.col("doc_id").alias("doc_a"), "h")
-    hb = hsel.select(F.col("doc_id").alias("doc_b"), "h")
-    inter = (
-        cand.join(ha, "doc_a")
-        .join(hb, ["doc_b", "h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.countDistinct("h").alias("n_common"))
-    )
-    ca = cnt.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cb = cnt.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    n_common = F.col("n_common")
-    jac = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
-    return (
-        inter.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
 
 

@@ -133,24 +133,18 @@ def clear_trunk_caches() -> None:
     """THE rewrite-boundary / teardown hook: unpersist and drop every
     memoized trunk in every family — counted-pairs, ppjoin
     candidates, near-dup edges, SemDeDup pairs, dup-graph edges —
-    plus the opt-in shingle/band family frames
-    (SPARK_GRAFT_FAMILY_CACHE) and the ANN grid/sample caches
-    (ann_twins), so a session that rewrites its corpus files in
-    place can never be served a stale frame from ANY registry
-    (round-10 ADVICE: the per-module hooks left the other modules'
-    caches alive — the ANN grid had the same staleness hazard with
-    no hook at all)."""
+    plus the ANN grid/sample caches (ann_twins), so a session that
+    rewrites its corpus files in place can never be served a stale
+    frame from ANY registry (round-10 ADVICE: the per-module hooks
+    left the other modules' caches alive — the ANN grid had the same
+    staleness hazard with no hook at all)."""
     from nemscraper_spark.queries.ann_twins import (
         _GRID_CACHE,
         _SAMPLE_CACHE,
     )
-    from nemscraper_spark.queries.training_data import (
-        _BANDS_CACHE,
-        _SHINGLE_CACHE,
-    )
 
     _SAMPLE_CACHE.clear()  # plain lists — nothing persisted to release
-    for cache in (_TRUNKS, _SHINGLE_CACHE, _BANDS_CACHE, _GRID_CACHE):
+    for cache in (_TRUNKS, _GRID_CACHE):
         while cache:
             _, frame = cache.popitem()
             try:

@@ -82,20 +82,48 @@ def download_zip(
     raise RuntimeError(f"download failed after {DOWNLOAD_RETRIES} tries: {url}") from last_err
 
 
+class Polled(list):
+    """DownloadedRow dicts of one :func:`poll_feeds_once` call;
+    ``failed`` lists each feed listing or ZIP that still failed after
+    its retries as ``{"filename", "reason", "phase": "poll" | "download"}``
+    (``filename`` is the feed URL for a listing)."""
+
+    def __init__(self, rows: list[dict], failed: list[dict[str, str]]):
+        super().__init__(rows)
+        self.failed = failed
+
+
+def _failure(filename: str, err: RuntimeError, phase: str) -> dict[str, str]:
+    cause = err.__cause__ or err
+    return {"filename": filename, "reason": f"{type(cause).__name__}: {cause}", "phase": phase}
+
+
 def poll_feeds_once(
     feeds: Iterable[str],
     dest_dir: str,
     already_downloaded: Callable[[str], bool] = lambda name: False,
     get: Callable[[str], bytes] = _default_get,
-) -> list[dict]:
+) -> Polled:
     """One tick of the poll loop: scan every feed, download unseen ZIPs.
-    Returns DownloadedRow dicts for the history ledger."""
+    Returns DownloadedRow dicts for the history ledger. A feed whose
+    listing fails, or a ZIP whose download fails, is skipped and listed
+    in the result's ``failed``, so one outage does not end the tick —
+    the reference's fetch loop and download pool run apart from its
+    processors for the same reason (main.rs:59-68, 104-132)."""
     os.makedirs(dest_dir, exist_ok=True)
-    rows = []
+    rows, failed = [], []
     for feed in feeds:
-        for url in fetch_feed_links(feed, get=get):
+        try:
+            links = fetch_feed_links(feed, get=get)
+        except RuntimeError as e:
+            failed.append(_failure(feed, e, "poll"))
+            continue
+        for url in links:
             name = os.path.basename(urllib.parse.urlparse(url).path)
             if already_downloaded(name) or os.path.exists(os.path.join(dest_dir, name)):
                 continue  # in-flight/finished dedup (main.rs:147-179)
-            rows.append(download_zip(url, dest_dir, get=get))
-    return rows
+            try:
+                rows.append(download_zip(url, dest_dir, get=get))
+            except RuntimeError as e:
+                failed.append(_failure(name, e, "download"))
+    return Polled(rows, failed)

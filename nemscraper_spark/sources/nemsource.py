@@ -92,16 +92,26 @@ def nem_csv_data_source():
     def _read_part(partition):
         # Executor-side: one member through the splitter's own I/D
         # segmenter (split.rs:64-125), keeping only the "D," lines of
-        # each block's text
+        # each block's text. A member that does not decompress (bad
+        # CRC, corrupt deflate data) is logged and yields no rows, as
+        # _expand_parts treats an unreadable ZIP.
+        import logging
         import os
         import zipfile
+        import zlib
 
         if partition is None:  # empty scan (no matching files)
             return
 
         if partition.member is not None:
-            with zipfile.ZipFile(partition.path) as zf:
-                raw = zf.read(partition.member)
+            try:
+                with zipfile.ZipFile(partition.path) as zf:
+                    raw = zf.read(partition.member)
+            except (OSError, EOFError, zipfile.BadZipFile, zlib.error) as e:
+                logging.getLogger("nemscraper_spark.nemsource").warning(
+                    "nemcsv skipped %s:%s: %s", partition.path, partition.member, e
+                )
+                return
             src = os.path.basename(partition.member)
         else:
             with open(partition.path, "rb") as fh:

@@ -66,8 +66,11 @@ def run_once(
     one row per ZIP. A crash between the two re-ingests the ZIPs on the
     next tick (at least once, as the reference's main.rs:248-275). A ZIP
     that ingest cannot read (truncated, empty, a corrupt member) is
-    listed in ``summary["failed"]`` with its reason and left out of the
-    ledger, so every tick retries it; the tick's other ZIPs are ingested.
+    listed in ``summary["failed"]`` with its reason and ``"phase":
+    "ingest"`` and left out of the ledger, so every tick retries it; the
+    tick's other ZIPs are ingested. A feed listing or download that
+    fails is listed there too (``"phase": "poll"`` or ``"download"``),
+    and the tick goes on to ingest what the landing dir holds.
 
     ``summary["seconds"]`` holds the wall seconds of each phase in
     ``PHASES`` (0.0 when it did not run); ``ledger`` is the ledgers'
@@ -89,7 +92,8 @@ def run_once(
 
     seconds = dict.fromkeys(PHASES, 0.0)
     summary: dict = {
-        "downloaded": 0, "processed": 0, "tables": {}, "compacted": {}, "seconds": seconds
+        "downloaded": 0, "processed": 0, "tables": {}, "compacted": {}, "seconds": seconds,
+        "failed": [],
     }
 
     # 1. poll + download, deduped against the ledger (main.rs:147-197)
@@ -104,6 +108,7 @@ def run_once(
             with _phase(seconds, "ledger"):
                 downloaded.add(rows)
         summary["downloaded"] = len(rows)
+        summary["failed"] += rows.failed
 
     # 2. ingest every ZIP the processed ledger lacks (main.rs:248-275)
     with _phase(seconds, "ledger"):
@@ -116,8 +121,9 @@ def run_once(
         ]
         counts = ingest(spark, todo, parquet_dir) if todo else {}
     # a file ingest skipped stays out of the ledger, so the next tick retries it
-    summary["failed"] = counts.failed if todo else []
-    bad = {f["filename"] for f in summary["failed"]}
+    skipped = counts.failed if todo else []
+    summary["failed"] += [{**f, "phase": "ingest"} for f in skipped]
+    bad = {f["filename"] for f in skipped}
     names = [n for n in map(os.path.basename, todo) if n not in bad]
     if names:
         with _phase(seconds, "ledger"):

@@ -141,16 +141,17 @@ def test_closure_captures_shared_helpers():
 def test_closure_skips_mutable_runtime_caches():
     """Module-level dict caches mutate as the session runs — they must
     never enter the digest or fingerprints would drift mid-session."""
-    import nemscraper_spark.queries.training_data as td
+    import nemscraper_spark.queries.trunk_cache as tc
 
     fn = REGISTRY["minhash_lsh_pairs"].fn
     before = entry._closure_parts(fn)
-    assert not any("_SHINGLE_CACHE" in k for k in before)
-    td._SHINGLE_CACHE[("__fp_test__", "x")] = object()
+    assert "fn:nemscraper_spark.queries.trunk_cache.trunk" in before
+    assert not any("_TRUNKS" in k for k in before)
+    tc._TRUNKS[("__fp_test__", "x")] = object()
     try:
         assert entry._closure_parts(fn) == before
     finally:
-        td._SHINGLE_CACHE.pop(("__fp_test__", "x"), None)
+        tc._TRUNKS.pop(("__fp_test__", "x"), None)
 
 
 def test_helper_edit_demotes_green(tmp_path, monkeypatch, fake_repo):

@@ -87,3 +87,33 @@ def test_poll_tick_dedups_against_history_and_disk(tmp_path):
         get=get,
     )
     assert rows2 == []
+
+
+def test_poll_tick_lists_failed_feed_and_download(tmp_path, monkeypatch):
+    """A dead feed and a ZIP that never downloads are skipped and listed
+    in ``failed``; the other ZIP of the live feed still lands."""
+    from nemscraper_spark.sources import fetch
+
+    real = fetch.download_zip
+    monkeypatch.setattr(fetch, "FEED_RETRY_DELAY_S", 0.0)
+    monkeypatch.setattr(
+        fetch, "download_zip", lambda u, d, get: real(u, d, get=get, sleep=lambda s: None)
+    )
+
+    def get(u):
+        if u.startswith("http://dead.example/"):
+            raise OSError("down")
+        if u.endswith("/"):
+            return FEED_HTML
+        if "PUBLIC_A" in u:
+            raise OSError("reset")
+        return b"zipbytes"
+
+    rows = poll_feeds_once(
+        ["http://dead.example/", "http://feed.example/REPORTS/"], str(tmp_path), get=get
+    )
+    assert [r["filename"] for r in rows] == ["PUBLIC_B_20220720_0002.ZIP"]
+    assert rows.failed == [
+        {"filename": "http://dead.example/", "reason": "OSError: down", "phase": "poll"},
+        {"filename": "PUBLIC_A_20220720_0001.zip", "reason": "OSError: reset", "phase": "download"},
+    ]

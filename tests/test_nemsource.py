@@ -5,6 +5,7 @@ one input partition per ZIP member / raw CSV."""
 from __future__ import annotations
 
 import os
+import struct
 import zipfile
 
 from nemscraper_spark.queries.ingest_ops import _NEM_CSV
@@ -215,8 +216,9 @@ def test_stream_reader_batch_parity(spark, tmp_path):
 
 def test_bad_zip_is_skipped_by_batch_and_stream_scans(spark, sf_dir, tmp_path):
     """A zero-byte ZIP beside a good one is skipped at planning time, as
-    ingest skips it: the batch scan and an availableNow drain of the
-    stream reader both return the good ZIP's D-lines."""
+    ingest skips it, and a ZIP whose member data is corrupt is skipped
+    when that member is read: the batch scan and an availableNow drain
+    of the stream reader both return the good ZIP's D-lines."""
     from nemscraper_spark.queries.streaming_ops import _drain
 
     register(spark)
@@ -224,6 +226,16 @@ def test_bad_zip_is_skipped_by_batch_and_stream_scans(spark, sf_dir, tmp_path):
     landing.mkdir()
     _zip_fixture(str(landing), "PUBLIC_A_20220720")
     (landing / "PUBLIC_B_20220721_0001.zip").write_bytes(b"")
+    corrupt = landing / "PUBLIC_C_20220722_0001.zip"
+    with zipfile.ZipFile(corrupt, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("PUBLIC_C_20220722.CSV", _NEM_CSV)
+    with zipfile.ZipFile(corrupt) as zf:
+        info = zf.infolist()[0]
+    data = bytearray(corrupt.read_bytes())
+    name_len, extra_len = struct.unpack_from("<HH", data, info.header_offset + 26)
+    start = info.header_offset + 30 + name_len + extra_len  # member data
+    data[start + info.compress_size // 2] ^= 0xFF
+    corrupt.write_bytes(bytes(data))
     want = sorted(l for v in _expected_d_lines().values() for l in v)
 
     batch = spark.read.format("nemcsv").load(str(landing)).collect()

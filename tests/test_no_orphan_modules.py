@@ -45,15 +45,6 @@ NO_CALLER = {
         "benchmark hook point: perfbench/workloads.py drops the trunks "
         "before each corpus pass"
     ),
-    "nemscraper_spark.plans.zorder.write_zordered": (
-        "the Z-order layout writer; the registered zorder_curve_keys "
-        "checks only its key, tests/test_zorder.py the pruning it gives"
-    ),
-    "nemscraper_spark.queries.training_data.lsh_verified_pairs": (
-        "the xxhash64 LSH pipeline, which no query registers because "
-        "the DuckDB oracle cannot reproduce xxhash64; "
-        "tests/test_training_ops.py pins its recall and its verify"
-    ),
 }
 
 

@@ -148,6 +148,7 @@ def test_bad_zips_do_not_stall_the_tick(spark, tmp_path):
     assert s1["processed"] == 1
     assert sorted(f["filename"] for f in s1["failed"]) == sorted(bad)
     assert all("BadZipFile" in f["reason"] for f in s1["failed"])
+    assert all(f["phase"] == "ingest" for f in s1["failed"])
     landed = sum(fsutil.parquet_rows(str(t)) for t in (work / "parquet").iterdir())
     assert landed == d_rows
     led = TableHistory(spark, str(work / "history"), "processed")
@@ -163,6 +164,41 @@ def test_bad_zips_do_not_stall_the_tick(spark, tmp_path):
     assert led.keys() == {
         "PUBLIC_DISPATCHIS_20220720_0001.zip", "PUBLIC_DISPATCHIS_20220721_0001.zip"
     }
+
+
+def test_dead_feed_does_not_stop_the_loop(spark, tmp_path, monkeypatch):
+    """Two run_loop ticks over one unreadable and one live feed listing:
+    each tick lists the dead feed under ``failed`` with phase "poll" and
+    still downloads and ingests the live feed's new ZIP."""
+    import run_pipeline as rp
+
+    from nemscraper_spark.sources import fetch
+
+    monkeypatch.setattr(fetch, "FEED_RETRY_DELAY_S", 0.0)
+    live = _make_feed(tmp_path)
+    dead = (tmp_path / "no_such_listing.html").as_uri()
+    feed_dir = tmp_path / "feed"
+    ticks = []
+
+    def _spy(*a, **kw):
+        s = run_once(*a, **kw)
+        ticks.append(s)
+        if len(ticks) == 1:  # the live feed publishes its next ZIP
+            z = feed_dir / "PUBLIC_DISPATCHIS_20220721_0001.zip"
+            with zipfile.ZipFile(z, "w") as zf:
+                zf.writestr("PUBLIC_DISPATCHIS_202207211800.CSV", NEM_CSV)
+            listing = feed_dir / "listing.html"
+            listing.write_text(listing.read_text() + f'<a href="{z.name}">z</a>')
+        return s
+
+    monkeypatch.setattr(rp, "run_once", _spy)
+    run_loop(spark, str(tmp_path / "work"), [dead, live], None, extra_ticks=1, interval_sec=0.0)
+
+    assert [t["downloaded"] for t in ticks] == [1, 1]
+    assert [t["processed"] for t in ticks] == [1, 1]
+    for t in ticks:
+        assert [(f["filename"], f["phase"]) for f in t["failed"]] == [(dead, "poll")]
+        assert "URLError" in t["failed"][0]["reason"]
 
 
 def test_sigterm_stops_loop_gracefully(spark, tmp_path):

@@ -409,21 +409,6 @@ def test_ks_global_window_runs_on_value_lattice(spark, sf_dir):
     assert n_buckets <= max_chars // _KS_BUCKET_WIDTH + 1
 
 
-def test_lsh_xxhash_default_no_collect_set(spark, sf_dir):
-    """The xxhash library-default pipeline (lsh_verified_pairs — not a
-    registered query, the cheaper production parameterization) carries
-    the same round-9 count-form verify: no per-doc shingle-hash set in
-    any aggregation buffer, candidates from equi-joins only."""
-    from nemscraper_spark.queries.common import load_table
-    from nemscraper_spark.queries.training_data import lsh_verified_pairs
-
-    d = load_table(spark, sf_dir, "documents")
-    p = plan(lsh_verified_pairs(d, threshold=0.2))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "collect_set" not in p and "array_intersect" not in p
-
-
 def test_sql_views_push_down(spark, sf_dir):
     """The §3.3 SQL surface (nemscraper_spark.sql.register_views) must
     behave exactly like the DataFrame API: a dashboard query's filter

@@ -257,11 +257,11 @@ def test_format_roundtrip_rows_identical_and_stage_cached(spark, sf_dir):
     second invocation must reuse the staged directories."""
     import os
 
-    from nemscraper_spark.queries.ingest_ops import _FMT_STAGE
+    from nemscraper_spark.queries.streaming_ops import _STAGE_CACHE
 
     REGISTRY["format_roundtrip_matrix"].fn(spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    stage = _FMT_STAGE[key]
+    key = (spark.sparkContext.applicationId, sf_dir, "fmt")
+    stage = _STAGE_CACHE[key]
     src = sorted(
         map(
             tuple,
@@ -282,4 +282,4 @@ def test_format_roundtrip_rows_identical_and_stage_cached(spark, sf_dir):
         got = sorted(map(tuple, df.collect()))
         assert got == src, f"{fmt} round trip diverged"
     REGISTRY["format_roundtrip_matrix"].fn(spark, sf_dir).collect()
-    assert _FMT_STAGE[key] == stage  # cache hit, no restage
+    assert _STAGE_CACHE[key] == stage  # cache hit, no restage

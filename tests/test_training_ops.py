@@ -21,24 +21,6 @@ def test_minhash_candidates_subset_of_exact(spark, sf_dir):
         assert recall >= 0.5, f"LSH recall collapsed: {recall:.2f}"
 
 
-def test_xxhash_lsh_library_default_recall(spark, sf_dir):
-    """The xxhash64 parameterization (library default
-    lsh_verified_pairs — ~4x cheaper 8-byte keys, but not portable to
-    the SQL oracle, so the REGISTERED minhash_lsh_pairs entry is the
-    md5 seeding) must keep the same subset + recall contract as the
-    hash-gated primary."""
-    from nemscraper_spark.queries.common import fan_out, load_table
-    from nemscraper_spark.queries.training_data import lsh_verified_pairs
-
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    exact = _pairs(REGISTRY["ngram_jaccard_pairs"].fn(spark, sf_dir))
-    lsh = _pairs(lsh_verified_pairs(d, threshold=0.2))
-    assert lsh <= exact
-    if exact:
-        recall = len(lsh) / len(exact)
-        assert recall >= 0.5, f"xxhash LSH recall collapsed: {recall:.2f}"
-
-
 def test_simhash_kernel_vectorized_bit_identical(spark, sf_dir):
     """The r12 vectorized SimHash kernel (distinct-word memo, numpy
     digest unpack, segmented reduceat vote sum) must produce
@@ -529,98 +511,6 @@ def test_counted_trunk_serves_both_geometries(spark, sf_dir_oracle):
         tc._TRUNKS.update(saved)
 
 
-def test_xxhash_verify_matches_collectset_reference(spark, sf_dir_oracle):
-    """The xxhash library-default pipeline's round-9 count-form verify
-    must be BIT-IDENTICAL to its retired collect_set+array_intersect
-    form (the md5 twin has the same pin in
-    test_verify_matches_collectset_reference)."""
-    from pyspark.sql import functions as F
-
-    from nemscraper_spark.queries.common import fan_out, load_table
-    from nemscraper_spark.queries.training_data import lsh_verified_pairs
-
-    def collectset_reference(d, threshold):
-        n_perm, band_size = 16, 4
-        sh = (
-            d.withColumn("w", F.split("text", " "))
-            .filter(F.size("w") >= 3)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "array_distinct(transform(sequence(0, size(w) - 3),"
-                        " i -> concat_ws(' ', w[i], w[i+1], w[i+2])))"
-                    )
-                ).alias("shingle"),
-            )
-        )
-        mins = sh.groupBy("doc_id").agg(
-            *[
-                F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-                for i in range(n_perm)
-            ]
-        )
-        bands = mins.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.col(f"h{b * band_size + j}")
-                                    for j in range(band_size)
-                                ]
-                            ).alias("bucket"),
-                        )
-                        for b in range(n_perm // band_size)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("doc_id", "bb.band", "bb.bucket")
-        la = bands.select(F.col("doc_id").alias("doc_a"), "band", "bucket")
-        lb = bands.select(F.col("doc_id").alias("doc_b"), "band", "bucket")
-        cand = (
-            la.join(lb, ["band", "bucket"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        cand_docs = (
-            cand.select(F.col("doc_a").alias("doc_id"))
-            .union(cand.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        sets = (
-            sh.join(cand_docs, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set(F.xxhash64("shingle")).alias("ss"))
-        )
-        sa = sets.select(
-            F.col("doc_id").alias("doc_a"), F.col("ss").alias("sa")
-        )
-        sb = sets.select(
-            F.col("doc_id").alias("doc_b"), F.col("ss").alias("sb")
-        )
-        n_common = F.size(F.array_intersect("sa", "sb"))
-        jac = n_common.cast("double") / (
-            F.size("sa") + F.size("sb") - n_common
-        )
-        return (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .filter(jac >= threshold)
-            .select("doc_a", "doc_b", jac.alias("jaccard"))
-        )
-
-    d = fan_out(load_table(spark, sf_dir_oracle, "documents"))
-    ref = sorted(map(tuple, collectset_reference(d, 0.2).collect()))
-    got = sorted(map(tuple, lsh_verified_pairs(d, 0.2).collect()))
-    assert ref == got, (len(ref), len(got))
-    assert len(ref) > 0, "degenerate corpus: no verified pairs"
-
-
 def test_persist_trunk_adaptive_restores_session_conf(spark, sf_dir):
     """The round-9 ADVICE fix: building a cached trunk must not leave
     spark.sql.optimizer.canChangeCachedPlanOutputPartitioning flipped
@@ -761,7 +651,6 @@ def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
 
         tc.clear_trunk_caches()
         assert not tc._TRUNKS
-        assert not td._SHINGLE_CACHE and not td._BANDS_CACHE
         assert not at._GRID_CACHE and not at._SAMPLE_CACHE
 
         # rebuild after clear: identical rows (the hook never corrupts)
