@@ -91,7 +91,7 @@ _FP_ALGO_VERSION = "v2"
 # in this repo are always behaviour tunables (STOPWORDS, _QC_W, _KEYS):
 # editing one changes query results, so it must move the fingerprint.
 # EMPTY module-level dicts stay excluded: those are runtime caches
-# (_SHINGLE_CACHE, sql._REGISTERED, _STAGE_CACHE) that fill as the
+# (trunk_cache._TRUNKS, sql._REGISTERED) that fill as the
 # session runs — admitting them would make a fingerprint computed after
 # query execution differ from the bless-time one.  (All real flows
 # compute fingerprints BEFORE any query runs — _driver_order is called

@@ -48,6 +48,7 @@ from nemscraper_spark.operators.ann import (
     train_pq,
 )
 from nemscraper_spark.queries.common import load_table, register
+from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
 
 DIM = 64
 GRID = 1000
@@ -87,9 +88,13 @@ _NIV_SQL = f"""
 
 def _norm_grid(spark, sf_dir):
     """Spark twin of _NIV_SQL: int grid → L2-normalize → re-floor.
-    Cached + persisted per (session, sf_dir) — every PQ-family query
-    starts from this exact frame (see _cached_grid)."""
-    return _cached_grid(spark, sf_dir, "norm", _build_norm_grid)
+    A persisted trunk per (session, corpus) — every PQ-family query
+    starts from this exact frame."""
+    return trunk(
+        "ann_grid",
+        (spark.sparkContext.applicationId, norm_dir(sf_dir), "norm"),
+        lambda: _build_norm_grid(spark, sf_dir),
+    )
 
 
 def _build_norm_grid(spark, sf_dir):
@@ -139,39 +144,26 @@ _MD5_SAMPLE = (
 
 
 # Grid frames and the bounded training samples drawn from them are
-# identical for every ANN-family query in a session, so both are built
-# ONCE per (application, sf_dir) and shared — re-deriving the grid and
-# re-collecting the sample per query was ~20% of the family's combined
-# bench time.  Keys are (applicationId, sf_dir, kind) STRINGS — never
-# object ids, which can be reused after GC — and the grid's own key is
-# attached to the cached DataFrame so the sample memoizers below only
-# ever cache against an explicitly-keyed grid (any other frame
-# bypasses the cache).  Entries live for the process (bounded: one
-# persisted n×64-bigint frame + a few k×64 sample lists per
-# (application, sf_dir) pair actually queried).
-_GRID_CACHE: dict[tuple[str, str, str], object] = {}
-_SAMPLE_CACHE: dict[tuple, list[list[int]]] = {}
-
-
-def _cached_grid(spark, sf_dir, kind: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _GRID_CACHE.get(key)
-    if df is None:
-        from pyspark import StorageLevel
-
-        df = build(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-        df._nemspark_grid_key = key
-        _GRID_CACHE[key] = df
-    return df
+# identical for every ANN-family query in a session, so each is a
+# trunk (trunk_cache.trunk): built once per (application, corpus) and
+# shared — re-deriving the grid and re-collecting the sample per query
+# was ~20% of the family's combined bench time.
+# Never written; perfbench/spans.py:TRUNK_CACHES reads both names.
+_GRID_CACHE: dict = {}
+_SAMPLE_CACHE: dict = {}
 
 
 def _int_grid(spark, sf_dir):
     """embeddings → (vec_id, e: array<bigint>) on the FLOOR(x*1000)
     grid.  Matches the oracle's iv CTE value-for-value (Spark FLOOR
     returns BIGINT, DuckDB returns an integer-valued DOUBLE — all
-    downstream arithmetic is exact either way).  Cached + persisted
-    per (session, sf_dir)."""
-    return _cached_grid(spark, sf_dir, "int", _build_int_grid)
+    downstream arithmetic is exact either way).  A persisted trunk per
+    (session, corpus)."""
+    return trunk(
+        "ann_grid",
+        (spark.sparkContext.applicationId, norm_dir(sf_dir), "int"),
+        lambda: _build_int_grid(spark, sf_dir),
+    )
 
 
 def _build_int_grid(spark, sf_dir):
@@ -185,44 +177,42 @@ def _build_int_grid(spark, sf_dir):
     )
 
 
-def _md5_sample_rows(e, n: int):
-    """First n (vec_id, e) rows under md5(vec_id) ordering — bounded
-    collect (n ≪ corpus by construction: coarse-quantizer sizing keeps
-    it broadcastable), the twin of _MD5_SAMPLE.  Memoized per cached
-    grid frame (explicit grid key; other frames bypass the cache)."""
-    gkey = getattr(e, "_nemspark_grid_key", None)
-    key = None if gkey is None else ("md5", gkey, n)
-    if key is not None and key in _SAMPLE_CACHE:
-        return _SAMPLE_CACHE[key]
-    rows = [
-        [int(x) for x in r.e]
-        for r in e.withColumn("r", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("r", "vec_id")
-        .limit(n)
-        .collect()
-    ]
-    if key is not None:
-        _SAMPLE_CACHE[key] = rows
-    return rows
+def _md5_sample_rows(spark, sf_dir, n: int):
+    """First n (vec_id, e) rows of the int grid under md5(vec_id)
+    ordering — bounded collect (n ≪ corpus by construction:
+    coarse-quantizer sizing keeps it broadcastable), the twin of
+    _MD5_SAMPLE.  A trunk per (session, corpus, n)."""
+
+    def build():
+        e = _int_grid(spark, sf_dir)
+        return [
+            [int(x) for x in r.e]
+            for r in e.withColumn("r", F.md5(F.col("vec_id").cast("string")))
+            .orderBy("r", "vec_id")
+            .limit(n)
+            .collect()
+        ]
+
+    return trunk(
+        "ann_sample", (spark.sparkContext.applicationId, norm_dir(sf_dir), "md5", n), build
+    )
 
 
-def _id_sample_rows(e, n: int):
-    """First n rows by vec_id — the PQ training sample (production's
-    train-on-prefix recipe: the query vectors sit inside the sample by
-    construction, which is what makes a K=16 codebook usable).  Bounded
-    collect; at 100 TB this is the standard FAISS train-on-sample
-    pattern with a deterministic sample.  Memoized per cached grid
-    (explicit grid key; other frames bypass the cache)."""
-    gkey = getattr(e, "_nemspark_grid_key", None)
-    key = None if gkey is None else ("id", gkey, n)
-    if key is not None and key in _SAMPLE_CACHE:
-        return _SAMPLE_CACHE[key]
-    rows = [
-        [int(x) for x in r.e] for r in e.orderBy("vec_id").limit(n).collect()
-    ]
-    if key is not None:
-        _SAMPLE_CACHE[key] = rows
-    return rows
+def _id_sample_rows(spark, sf_dir, n: int):
+    """First n rows of the norm grid by vec_id — the PQ training sample
+    (production's train-on-prefix recipe: the query vectors sit inside
+    the sample by construction, which is what makes a K=16 codebook
+    usable).  Bounded collect; at 100 TB this is the standard FAISS
+    train-on-sample pattern with a deterministic sample.  A trunk per
+    (session, corpus, n)."""
+
+    def build():
+        e = _norm_grid(spark, sf_dir).orderBy("vec_id").limit(n)
+        return [[int(x) for x in r.e] for r in e.collect()]
+
+    return trunk(
+        "ann_sample", (spark.sparkContext.applicationId, norm_dir(sf_dir), "id", n), build
+    )
 
 
 def _int_queries(e):
@@ -466,9 +456,9 @@ def ann_ivf_cosine_md5(spark, sf_dir):
     broadcast equi-join on cid — the production plan shape."""
     import numpy as np
 
-    e = _int_grid(spark, sf_dir)  # session-cached + persisted
+    e = _int_grid(spark, sf_dir)  # session trunk
     # integer-valued doubles: the float GEMM is exact
-    C = np.asarray(_md5_sample_rows(e, 8), dtype=np.float64)
+    C = np.asarray(_md5_sample_rows(spark, sf_dir, 8), dtype=np.float64)
     return _cos_top5(ivf_pairs(ivf_assign(e, C)))
 
 
@@ -627,7 +617,7 @@ def ann_pq_adc_md5(spark, sf_dir):
     import numpy as np
 
     e = _norm_grid(spark, sf_dir)
-    S = np.asarray(_id_sample_rows(e, TRAIN_N), dtype=np.int64)
+    S = np.asarray(_id_sample_rows(spark, sf_dir, TRAIN_N), dtype=np.int64)
     books = train_pq(S, M_SUB, SEED_K, PQ_ROUNDS)
     return adc_top5(pq_encode(e, books), adc_tables(_int_queries(e), books))
 
@@ -734,11 +724,11 @@ def ann_ivfpq_adc_md5(spark, sf_dir):
     production."""
     import numpy as np
 
-    e = _norm_grid(spark, sf_dir)  # session-cached + persisted
+    e = _norm_grid(spark, sf_dir)  # session trunk
     # coarse quantizer and residual codebooks: integer Lloyd over the
     # first-256-by-id sample — mirrors _coarse_lloyd_ctes and the
     # per-m _lloyd_ctes op-for-op
-    S = np.asarray(_id_sample_rows(e, TRAIN_N), dtype=np.int64)
+    S = np.asarray(_id_sample_rows(spark, sf_dir, TRAIN_N), dtype=np.int64)
     C = lloyd(S, 8, COARSE_ROUNDS)
     books = train_pq(S, M_SUB, SEED_K, PQ_ROUNDS, coarse=C)
     return adc_top5(

@@ -106,8 +106,8 @@ def semantic_dedup_clusters(spark, sf_dir):
 # is tiny (one row per cosine>=0.4 pair), so it is built once per
 # (applicationId, sf_dir) and persisted.  Provenance is by
 # construction — semantic_pairs loads the table itself;
-# corpus-immutability contract documented ONCE at trunk_cache
-# (clear_trunk_caches() is the rewrite-boundary hook).
+# a rewritten corpus rebuilds the trunk by the footprint rule
+# documented ONCE at trunk_cache.
 def semantic_pairs(spark, sf_dir):
     """SemDeDup edge set over the int grid: k(n) md5 centroids ->
     max-dot cluster assignment (Arrow GEMM) -> within-cluster pairs
@@ -130,13 +130,13 @@ def _semantic_pairs_build(spark, sf_dir):
 
     import numpy as np
 
-    from nemscraper_spark.sources.inspect import footer_row_count
+    from nemscraper_spark.sources.fsutil import parquet_rows
 
-    n_docs = footer_row_count(os.path.join(sf_dir, "embeddings.parquet"))
+    n_docs = parquet_rows(os.path.join(sf_dir, "embeddings.parquet"))
     k = max(8, math.ceil(n_docs / _SEMDEDUP_TARGET))
     e = _int_grid(spark, sf_dir)
     # integer-valued doubles: the float GEMM is exact
-    asg = ivf_assign(e, np.asarray(_md5_sample_rows(e, k), dtype=np.float64))
+    asg = ivf_assign(e, np.asarray(_md5_sample_rows(spark, sf_dir, k), dtype=np.float64))
     a = asg.select(
         "cid", F.col("vec_id").alias("keep_id"), F.col("e").alias("qe")
     )
@@ -891,9 +891,9 @@ def embedding_sign_signature(spark, sf_dir):
     import os
 
     from nemscraper_spark.queries.common import fan_out_sized
-    from nemscraper_spark.sources.inspect import footer_row_count
+    from nemscraper_spark.sources.fsutil import parquet_rows
 
-    n_vecs = footer_row_count(os.path.join(sf_dir, "embeddings.parquet"))
+    n_vecs = parquet_rows(os.path.join(sf_dir, "embeddings.parquet"))
     e = fan_out_sized(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
         n_vecs,

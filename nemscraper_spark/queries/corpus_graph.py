@@ -583,7 +583,8 @@ def dup_graph_core_peel(spark, sf_dir):
     # checkpointed edge sets, so free ALL their blocks now (otherwise a
     # long-lived session accumulates 2 peel-round copies per
     # invocation; the round-0 trunk persist is session-scoped and
-    # released by clear_trunk_caches, never here)
+    # released by trunk_cache — on a corpus rewrite or at teardown —
+    # never here)
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in ckpt_ids:
         if rid is not None:

@@ -57,8 +57,8 @@ def _shingles(spark, sf_dir):
 # rebuilding the full explode→collapse→inverted-index-join trunk),
 # and like the counted-pairs trunk its OUTPUT is tiny (one row per
 # surviving edge).  Provenance is by construction — _dup_edges loads
-# the table itself; corpus-immutability contract documented ONCE at
-# trunk_cache (clear_trunk_caches() is the rewrite-boundary hook).
+# the table itself; a rewritten corpus rebuilds the trunk by the
+# footprint rule documented ONCE at trunk_cache.
 def _dup_edges(spark, sf_dir):
     """Connectivity-equivalent near-dup edge set: exact-duplicate
     collapse first, word-3-gram Jaccard >= 0.5 pairs (inverted-index

@@ -269,9 +269,9 @@ def recursive_cte_hierarchy(spark, sf_dir):
     caller's collect no longer needs the conf at all."""
     import os
 
-    from nemscraper_spark.sources.inspect import footer_row_count
+    from nemscraper_spark.sources.fsutil import parquet_rows
 
-    n = footer_row_count(os.path.join(sf_dir, "customer.parquet"))
+    n = parquet_rows(os.path.join(sf_dir, "customer.parquet"))
     need = max(1_000_000, (n + 1) * 101)
     prev = spark.conf.get("spark.sql.cteRecursionRowLimit")
     try:

@@ -323,12 +323,11 @@ def sketch_error_bounds(spark, sf_dir):
 def parquet_footer_rowcounts(spark, sf_dir):
     """S13 metadata-only row counts (verify.rs:88-111): read parquet
     FOOTERS via pyarrow — zero data IO — and cross-check against the
-    oracle's full count. S14's deeper inspector lives in
-    sources/inspect.py."""
-    from nemscraper_spark.sources.inspect import footer_row_count
+    oracle's full count (sources/fsutil.parquet_rows)."""
+    from nemscraper_spark.sources.fsutil import parquet_rows
 
     rows = [
-        (t, footer_row_count(f"{sf_dir}/{t}.parquet"))
+        (t, parquet_rows(f"{sf_dir}/{t}.parquet"))
         for t in ("lineitem", "orders", "events")
     ]
     return spark.createDataFrame(rows, "tbl string, n_rows long")

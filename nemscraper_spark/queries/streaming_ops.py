@@ -33,29 +33,31 @@ from nemscraper_spark.queries.common import (
     oracle_dec_sum,
     register,
 )
+from nemscraper_spark.queries.trunk_cache import norm_dir, trunk
 
 _LOG = logging.getLogger("nemscraper_spark.stream")
 
-# Staged dirs, one per (applicationId, sf_dir, tag): the staged source
-# parquet is identical for every streaming query that reads it, so it
-# is written ONCE per session and shared — re-staging per query was
-# ~2 s of pure write I/O apiece.  The dirs live under the system temp
-# dir for the process lifetime (a few MB at driver scale); production
-# streams read the ingest sink's directory directly and never stage.
-_STAGE_CACHE: dict[tuple[str, str, str], str] = {}
+# Never written; perfbench/spans.py:TRUNK_CACHES reads the name.
+_STAGE_CACHE: dict = {}
 
 
 def _staged(spark, sf_dir, tag, write):
-    """The session's staged dir for (sf_dir, tag): on first use, or if
-    the dir is gone, ``write(dir)`` fills a fresh empty temp dir.  The
-    dir is shared and must NOT be deleted by the caller."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    stage = _STAGE_CACHE.get(key)
-    if stage is None or not os.path.isdir(stage):
+    """The session's staged dir for (corpus, tag), a trunk: on first
+    use, after the corpus is rewritten, or if the dir is gone,
+    ``write(dir)`` fills a fresh empty temp dir (and a stale one is
+    removed).  The staged source is identical for every streaming
+    query that reads it, so it is written ONCE per session and shared —
+    re-staging per query was ~2 s of pure write I/O apiece.  The dir is
+    shared and must NOT be deleted by the caller; production streams
+    read the ingest sink's directory directly and never stage."""
+
+    def build():
         stage = tempfile.mkdtemp(prefix=f"nemspark-{tag}-")
         write(stage)
-        _STAGE_CACHE[key] = stage
-    return stage
+        return stage
+
+    key = (spark.sparkContext.applicationId, norm_dir(sf_dir), tag)
+    return trunk("stage", key, build)
 
 
 def _staged_stream(spark, sf_dir, tag="events"):
@@ -124,9 +126,9 @@ def _state_width(spark, sf_dir, rows_per_partition: int = 25_000) -> int:
     measured 2.5x slower than on 4. A real deployment does the same
     sizing once per stream from its expected per-batch volume; at
     production volume this formula saturates to full parallelism."""
-    from nemscraper_spark.sources.inspect import footer_row_count
+    from nemscraper_spark.sources.fsutil import parquet_rows
 
-    rows = footer_row_count(os.path.join(sf_dir, "events.parquet"))
+    rows = parquet_rows(os.path.join(sf_dir, "events.parquet"))
     return max(2, min(
         spark.sparkContext.defaultParallelism, rows // rows_per_partition
     ))

@@ -221,8 +221,8 @@ def _ppjoin_prefix_frame(sh):
 # pairs query), and its OUTPUT is tiny (the survivor candidate
 # list), while its build pays the df join + per-doc rank window over
 # the full shingle frame.  Provenance by construction (the builder
-# loads the table itself); corpus-immutability contract documented
-# ONCE at trunk_cache, with clear_trunk_caches() the rewrite hook.
+# loads the table itself); a rewritten corpus rebuilds the trunk by
+# the footprint rule documented ONCE at trunk_cache.
 def _ppjoin_cand_cached(spark, sf_dir):
     """(doc_a, doc_b, na, nb) PPJoin survivor candidates, memoized +
     persisted per (session, sf_dir, threshold) — see trunk_cache.
@@ -791,8 +791,8 @@ def _counted_pairs_build(d, geometries: tuple[tuple[int, int], ...]):
 # admitted tag, or a geometry outside the set, runs the same build for
 # its one geometry uncached — never a mismatched frame.  Both constants
 # are plain, so the fingerprint walk sees them: admitting a tag or a
-# geometry invalidates the family.  Corpus-immutability contract:
-# trunk_cache; clear_trunk_caches() is the rewrite-boundary hook.
+# geometry invalidates the family.  A rewritten corpus rebuilds the
+# trunk: the footprint rule at trunk_cache.
 _COUNTED_TAGS = frozenset({"documents", "documents#md5reps"})
 _COUNTED_GEOMETRIES = ((8, 2), (16, 4))
 
@@ -1058,11 +1058,11 @@ def _emb_sized(spark, sf_dir):
     count (fan_out_sized): the numpy kernels downstream pay a per-task
     Arrow/python floor, so a tiny local corpus must not fan to 32
     partitions. No-op once the input has enough natural splits."""
-    from nemscraper_spark.sources.inspect import footer_row_count
+    from nemscraper_spark.sources.fsutil import parquet_rows
 
     import os as _os
 
-    n = footer_row_count(_os.path.join(sf_dir, "embeddings.parquet"))
+    n = parquet_rows(_os.path.join(sf_dir, "embeddings.parquet"))
     return fan_out_sized(load_table(spark, sf_dir, "embeddings"), n)
 
 

@@ -1,54 +1,54 @@
-"""ONE registry for every memoized-and-persisted trunk frame.
+"""ONE memo for every shared sub-result of a session.
 
 Round-11 consolidation of the four parallel cache dicts that grew
 over rounds 8-10 (training_data._COUNTED_CACHE / _PPJOIN_CAND_CACHE,
 corpus_ops._DUP_EDGES_CACHE, corpus_extra._SEM_PAIRS_CACHE — the
 round-10 verdict: "the next trunk cache should be a generalization,
-not a fifth copy").  A *trunk* is a shared sub-plan whose OUTPUT is
-tiny (candidate pairs, near-dup edges, SemDeDup pairs) while its
-build pays the family's full explode/join/window cost, so building
-it once per session and persisting MEMORY_AND_DISK is near-free and
-every extra consumer saves the whole trunk — the trade measured for
-the ANN grid cache (~65%) and the dedup family (BENCH_r10: second
-consumer 6.5 s -> ~1.4 s).
+not a fifth copy"), since joined by the ANN grids and training
+samples (ann_twins) and the streaming stage dirs (streaming_ops).  A
+*trunk* is a shared sub-result whose OUTPUT is small (candidate
+pairs, near-dup edges, SemDeDup pairs, a vector grid, a sample-row
+list, a staged source dir) while its build pays the family's full
+explode/join/window or write cost, so building it once per session
+and keeping it is near-free and every extra consumer saves the whole
+build — the trade measured for the ANN grid cache (~65%) and the
+dedup family (BENCH_r10: second consumer 6.5 s -> ~1.4 s).
 
-CORPUS-IMMUTABILITY CONTRACT (the single copy — the per-family
-builders cite this): cache keys carry the family name, the Spark
-applicationId, the canonicalized corpus directory, and every
-behavior tunable a caller can vary (threshold rationals, provenance
-slice tag; a module constant such as the counted family's geometry
-set, training_data._COUNTED_GEOMETRIES, stays out) — but NO file
-footprint.  A cached
-trunk is therefore only correct while the parquet files under its
-directory are immutable for the lifetime of the Spark application.
-That is the driver-testdata contract (TESTDATA.md: tables are
-generated once, read-only) and the same assumption every persisted
-Spark frame already makes about its source files.  A pipeline that
-rewrites its corpus in-session must call clear_trunk_caches() at the
-rewrite boundary — ONE hook, covering every family (the round-10
-ADVICE gap: the old per-module hooks each cleared only their own
-dict, so a caller following any one doc got silently stale results
-from the others).  Keys include applicationId (a string, never a
-stopped context) so a fresh session can never read frames from a
-dead one.  Entries are pinned for the session lifetime unless the
-hook runs — bounded: one tiny trunk per (family, corpus, tunables)
-actually queried.
+FOOTPRINT RULE: an entry is keyed by (family, applicationId,
+norm_dir() corpus directory, every behavior tunable a caller can
+vary) and stores the corpus directory's footprint (fsutil.footprint:
+file count, total bytes, latest mtime) next to its value.  Every
+lookup lists the directory once; when the footprint differs, every
+entry built over that directory is released (a frame unpersisted, a
+staged dir removed) and the requested one is rebuilt.  A corpus
+rewritten in place mid-session therefore never serves a stale
+answer, and no caller owes a hook call after a rewrite.  Keys include
+applicationId (a string, never a stopped context) so a fresh session
+can never read frames from a dead one.  Entries live for the session
+— bounded: one small value per (family, corpus, tunables) actually
+queried.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import logging
 import os
+import shutil
 import time
 from collections.abc import Callable
 
+from pyspark.sql import DataFrame
+
+from nemscraper_spark.sources.fsutil import footprint
+
 _LOG = logging.getLogger("nemscraper_spark.trunk")
 
-# family-keyed registry; an EMPTY module-level dict (runtime cache)
-# is deliberately outside the fingerprint walk — see
-# __spark_entry__._is_plain_const.
-_TRUNKS: dict[tuple, object] = {}
+# (family, *key) -> (corpus footprint, value); an EMPTY module-level
+# dict (runtime cache) is deliberately outside the fingerprint walk —
+# see __spark_entry__._is_plain_const.
+_TRUNKS: dict[tuple, tuple] = {}
 
 
 def norm_dir(sf_dir) -> str:
@@ -103,21 +103,44 @@ def persist_trunk_adaptive(out):
     return out, rows
 
 
+def _release(value) -> None:
+    """Free what an entry holds: unpersist a frame, remove a staged
+    dir; a row list holds nothing outside the process."""
+    if isinstance(value, str):
+        shutil.rmtree(value, ignore_errors=True)
+    elif isinstance(value, DataFrame):
+        with contextlib.suppress(Exception):  # session already stopped
+            value.unpersist()
+
+
 def trunk(family: str, key: tuple, build: Callable[[], object]):
-    """Return the session's persisted trunk for (family, *key),
-    building + persisting it on first request.  ``key`` must carry
-    the applicationId, the norm_dir()-canonical corpus directory,
-    and every tunable the build depends on (see the module contract
-    above); ``build`` is only invoked on a miss, which logs one JSON
-    record: family, tunables (the key after applicationId and
-    directory), build seconds and row count."""
+    """Return the session's memoized value for (family, *key), building
+    it on first request or when the corpus directory ``key[1]`` no
+    longer has the footprint it was built over.  ``key`` must carry the
+    applicationId, the norm_dir()-canonical corpus directory and every
+    tunable the build depends on (see the module docstring).  A
+    DataFrame from ``build`` is persisted (persist_trunk_adaptive); any
+    other value (a sample-row list, a staged-dir path) is kept as it
+    is.  Each build logs one JSON record: family, tunables (the key
+    after applicationId and directory), build seconds and, for a
+    frame, row count."""
     k = (family, *key)
+    fp = footprint(key[1])
+    # release every entry over this corpus built before a rewrite, not
+    # only the requested one: Spark's cache matches a fresh read of the
+    # same path to a persisted scan of it, so a stale frame left
+    # persisted would stand in for any new plan of the same shape
+    for old in [o for o, (f, _) in _TRUNKS.items() if o[2] == key[1] and f != fp]:
+        _release(_TRUNKS.pop(old)[1])
     hit = _TRUNKS.get(k)
-    if hit is not None:
-        return hit
+    # a staged dir deleted from outside is restaged
+    if hit is not None and (not isinstance(hit[1], str) or os.path.isdir(hit[1])):
+        return hit[1]
     t0 = time.perf_counter()
-    out, rows = persist_trunk_adaptive(build())
-    _TRUNKS[k] = out
+    out, rows = build(), None
+    if isinstance(out, DataFrame):
+        out, rows = persist_trunk_adaptive(out)
+    _TRUNKS[k] = (fp, out)
     record = {
         "event": "trunk_build",
         "family": family,
@@ -130,24 +153,10 @@ def trunk(family: str, key: tuple, build: Callable[[], object]):
 
 
 def clear_trunk_caches() -> None:
-    """THE rewrite-boundary / teardown hook: unpersist and drop every
-    memoized trunk in every family — counted-pairs, ppjoin
-    candidates, near-dup edges, SemDeDup pairs, dup-graph edges —
-    plus the ANN grid/sample caches (ann_twins), so a session that
-    rewrites its corpus files in place can never be served a stale
-    frame from ANY registry (round-10 ADVICE: the per-module hooks
-    left the other modules' caches alive — the ANN grid had the same
-    staleness hazard with no hook at all)."""
-    from nemscraper_spark.queries.ann_twins import (
-        _GRID_CACHE,
-        _SAMPLE_CACHE,
-    )
-
-    _SAMPLE_CACHE.clear()  # plain lists — nothing persisted to release
-    for cache in (_TRUNKS, _GRID_CACHE):
-        while cache:
-            _, frame = cache.popitem()
-            try:
-                frame.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to release
+    """Teardown: unpersist every memoized frame and drop every sample
+    list, in every family.  Staged dirs stay: they hold no executor
+    memory and their footprint check already rebuilds them after a
+    rewrite, so a caller that clears before each pass keeps its
+    stage instead of rewriting it."""
+    for k in [k for k, (_, v) in _TRUNKS.items() if not isinstance(v, str)]:
+        _release(_TRUNKS.pop(k)[1])

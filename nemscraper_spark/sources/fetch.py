@@ -8,7 +8,8 @@ ingest watches. Reference parity:
     collect a[href$=".zip"], resolve relative URLs; 5 retries / 5s.
   * download_zip (zips.rs:21-111): stream to <name>.tmp then rename
     (atomic publish — a half-written file is never visible to the
-    ingest scan); 3 retries with exponential backoff 1<<attempt.
+    ingest scan); 3 retries with exponential backoff 1<<attempt, which
+    a truncated payload (no ZIP central directory) takes too.
   * poll loop (urls.rs:167-209): round-robin feeds, one fetch per tick.
 
 Dedup against the `downloaded` history ledger happens in the caller
@@ -17,11 +18,13 @@ Dedup against the `downloaded` history ledger happens in the caller
 
 from __future__ import annotations
 
+import io
 import os
 import re
 import time
 import urllib.parse
 import urllib.request
+import zipfile
 from collections.abc import Callable, Iterable
 
 FEED_RETRIES = 5  # urls.rs:94-96
@@ -63,8 +66,9 @@ def download_zip(
     sleep: Callable[[float], None] = time.sleep,
 ) -> dict:
     """Fetch one ZIP into dest_dir with .tmp+rename and exponential
-    backoff. Returns {'filename', 'url', 'size_bytes'} (the
-    DownloadedRow shape, FIXTURES.md §C)."""
+    backoff; a payload whose ZIP directory does not open (no member is
+    decompressed) is retried, never published. Returns {'filename',
+    'url', 'size_bytes'} (the DownloadedRow shape, FIXTURES.md §C)."""
     name = os.path.basename(urllib.parse.urlparse(url).path)
     final = os.path.join(dest_dir, name)
     tmp = final + ".tmp"
@@ -72,6 +76,7 @@ def download_zip(
     for attempt in range(DOWNLOAD_RETRIES):
         try:
             data = get(url)
+            zipfile.ZipFile(io.BytesIO(data)).close()  # BadZipFile if cut short
             with open(tmp, "wb") as f:
                 f.write(data)
             os.replace(tmp, final)  # atomic publish (zips.rs:37-57)

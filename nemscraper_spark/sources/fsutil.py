@@ -12,6 +12,7 @@ Every helper takes/returns FULL paths in the caller's original notation
 (scheme prefix preserved) so results can be handed straight back to
 Spark readers. ``write_parquet`` is the one driver-side parquet writer:
 ingest, compaction and the history ledgers share its at-rest layout.
+``footprint`` is what the trunk registry checks a corpus against.
 """
 
 from __future__ import annotations
@@ -49,25 +50,33 @@ def get_fs(path: str) -> tuple[pafs.FileSystem, str, str]:
     return pafs.LocalFileSystem(), path, ""
 
 
-def list_files(path: str, suffix: str = "", recursive: bool = False) -> list[str]:
-    """Full paths of regular files under ``path`` (sorted), optionally
-    filtered by suffix. Missing dirs yield []. A file with a path
-    component below ``path`` that starts with ``.`` or ``_`` is hidden,
-    as Spark's listing hides it (staged files, manifests, ``.crc``
-    sidecars); ``path`` itself may be hidden."""
+def _file_infos(path: str, recursive: bool = False) -> tuple[str, list[pafs.FileInfo]]:
+    """(scheme prefix, ``FileInfo`` of each regular file under ``path``),
+    or of ``path`` itself when it is a file. Missing paths yield no
+    files. A file with a path component below ``path`` that starts with
+    ``.`` or ``_`` is hidden, as Spark's listing hides it (staged files,
+    manifests, ``.crc`` sidecars); ``path`` itself may be hidden."""
     fs, local, prefix = get_fs(path)
+    top = fs.get_file_info(local)
+    if top.type == pafs.FileType.File:
+        return prefix, [top]
     sel = pafs.FileSelector(local, recursive=recursive, allow_not_found=True)
-    out = [
-        prefix + info.path
+    return prefix, [
+        info
         for info in fs.get_file_info(sel)
         if info.type == pafs.FileType.File
-        and info.path.endswith(suffix)
         and not any(
             c.startswith((".", "_"))
             for c in posixpath.relpath(info.path, local).split("/")
         )
     ]
-    return sorted(out)
+
+
+def list_files(path: str, suffix: str = "", recursive: bool = False) -> list[str]:
+    """Full paths of the visible regular files under ``path`` (sorted,
+    see :func:`_file_infos`), optionally filtered by suffix."""
+    prefix, infos = _file_infos(path, recursive)
+    return sorted(prefix + info.path for info in infos if info.path.endswith(suffix))
 
 
 def list_dirs(path: str, name_prefix: str = "") -> list[str]:
@@ -176,10 +185,10 @@ def open_input(path: str):
 
 
 def parquet_rows(root: str) -> int:
-    """Total rows of every parquet file under ``root`` from footers
-    only (driver-side metadata reads, no Spark job) — works on any
-    pyarrow-visible filesystem. Conservation-check kernel
-    (verify.rs:56-133 counts the same way)."""
+    """Total rows of every parquet file under ``root``, or of ``root``
+    itself when it is one file, from footers only (driver-side metadata
+    reads, no Spark job) — works on any pyarrow-visible filesystem.
+    Conservation-check kernel (verify.rs:56-133 counts the same way)."""
     import pyarrow.parquet as pq
 
     total = 0
@@ -187,3 +196,12 @@ def parquet_rows(root: str) -> int:
         with open_input(f) as fh:
             total += pq.ParquetFile(fh).metadata.num_rows
     return total
+
+
+def footprint(root: str) -> tuple[int, int, int]:
+    """(file count, total bytes, latest mtime in ns) of the visible files
+    under ``root`` (or of ``root`` itself when it is one file) from one
+    listing: rewriting, adding or removing a file changes it, and no
+    data is read."""
+    infos = _file_infos(root, recursive=True)[1]
+    return len(infos), sum(i.size for i in infos), max((i.mtime_ns or 0 for i in infos), default=0)

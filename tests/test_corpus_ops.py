@@ -531,6 +531,6 @@ def test_dup_edges_trunk_is_memoized_per_session(spark, sf_dir):
     finally:
         hit = tc._TRUNKS.pop(key, None)
         if hit is not None:
-            hit.unpersist()
+            hit[1].unpersist()
         if saved is not None:
             tc._TRUNKS[key] = saved

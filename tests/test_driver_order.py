@@ -135,7 +135,7 @@ def test_closure_captures_shared_helpers():
     # function-local `from nemscraper_spark... import x` (lazy import
     # inside the body) — invisible to a plain globals walk
     parts = entry._closure_parts(REGISTRY["recursive_cte_hierarchy"].fn)
-    assert any("footer_row_count" in k for k in parts)
+    assert any("parquet_rows" in k for k in parts)
 
 
 def test_closure_skips_mutable_runtime_caches():

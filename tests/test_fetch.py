@@ -3,7 +3,9 @@ poll-tick dedup — all offline via an injected transport."""
 
 from __future__ import annotations
 
+import io
 import os
+import zipfile
 
 import pytest
 
@@ -21,6 +23,16 @@ FEED_HTML = b"""
 <a href="/REPORTS/PUBLIC_A_20220720_0001.zip">dup</a>
 </body></html>
 """
+
+
+def _zip_bytes(name: str = "PUBLIC_A.CSV") -> bytes:
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr(name, "C,NEMP.WORLD\nI,FPP,UNIT_MW,1,A\nD,FPP,UNIT_MW,1,1\n")
+    return buf.getvalue()
+
+
+ZIP = _zip_bytes()
 
 
 def test_fetch_feed_links_resolves_and_dedups():
@@ -53,7 +65,7 @@ def test_download_atomic_and_backoff(tmp_path):
         attempts.append(u)
         if len(attempts) < 3:
             raise OSError("reset")
-        return b"PK\x03\x04zipbytes"
+        return ZIP
 
     row = download_zip(
         "http://x/PUBLIC_A_20220720_0001.zip",
@@ -61,15 +73,53 @@ def test_download_atomic_and_backoff(tmp_path):
         get=get,
         sleep=delays.append,
     )
-    assert row["size_bytes"] == 12
+    assert row["size_bytes"] == len(ZIP)
     assert delays == [1.0, 2.0]  # 1<<attempt (zips.rs:80)
     assert os.path.exists(tmp_path / "PUBLIC_A_20220720_0001.zip")
     assert not os.path.exists(tmp_path / "PUBLIC_A_20220720_0001.zip.tmp")
 
 
+def test_truncated_download_is_retried_not_published(tmp_path):
+    """A payload cut short has no ZIP central directory: it takes the
+    backoff path, and the good bytes of the retry are what lands."""
+    payloads = [ZIP[: len(ZIP) // 2], ZIP]
+    delays = []
+    row = download_zip(
+        "http://x/PUBLIC_A_20220720_0001.zip",
+        str(tmp_path),
+        get=lambda u: payloads.pop(0),
+        sleep=delays.append,
+    )
+    assert delays == [1.0]
+    assert row["size_bytes"] == len(ZIP)
+    assert (tmp_path / "PUBLIC_A_20220720_0001.zip").read_bytes() == ZIP
+    assert sorted(os.listdir(tmp_path)) == ["PUBLIC_A_20220720_0001.zip"]
+
+
+def test_always_truncated_download_fails_and_lands_nothing(tmp_path, monkeypatch):
+    from nemscraper_spark.sources import fetch
+
+    real = fetch.download_zip
+    monkeypatch.setattr(
+        fetch, "download_zip", lambda u, d, get: real(u, d, get=get, sleep=lambda s: None)
+    )
+    html = b'<a href="PUBLIC_A_20220720_0001.zip">A</a>'
+    rows = poll_feeds_once(
+        ["http://feed.example/"],
+        str(tmp_path),
+        get=lambda u: html if u.endswith("/") else ZIP[:-30],
+    )
+    assert rows == []
+    assert [(f["filename"], f["phase"]) for f in rows.failed] == [
+        ("PUBLIC_A_20220720_0001.zip", "download")
+    ]
+    assert "BadZipFile" in rows.failed[0]["reason"]
+    assert os.listdir(tmp_path) == []
+
+
 def test_poll_tick_dedups_against_history_and_disk(tmp_path):
     def get(u):
-        return FEED_HTML if u.endswith("/") else b"zipbytes"
+        return FEED_HTML if u.endswith("/") else ZIP
 
     seen = {"PUBLIC_A_20220720_0001.zip"}  # the history ledger says: done
     rows = poll_feeds_once(
@@ -107,7 +157,7 @@ def test_poll_tick_lists_failed_feed_and_download(tmp_path, monkeypatch):
             return FEED_HTML
         if "PUBLIC_A" in u:
             raise OSError("reset")
-        return b"zipbytes"
+        return ZIP
 
     rows = poll_feeds_once(
         ["http://dead.example/", "http://feed.example/REPORTS/"], str(tmp_path), get=get

@@ -93,15 +93,18 @@ def test_state_audit_equals_batch_and_reuses_checkpoint(spark, sf_dir):
         .collect()
     }
     assert first == batch
-    from nemscraper_spark.queries.streaming_ops import _STAGE_CACHE
+    from nemscraper_spark.queries.trunk_cache import _TRUNKS
 
-    n_stages = len(_STAGE_CACHE)
+    def n_stages_now():
+        return sum(k[0] == "stage" for k in _TRUNKS)
+
+    n_stages = n_stages_now()
     second = {
         r.event_type: (r.n_events, r.sum_value)
         for r in fn(spark, sf_dir).collect()
     }
     assert second == first
-    assert len(_STAGE_CACHE) == n_stages  # cache hit, no new drain
+    assert n_stages_now() == n_stages  # cache hit, no new drain
 
 
 def test_cross_dup_fraction_independent_recompute(spark, sf_dir):
@@ -257,11 +260,11 @@ def test_format_roundtrip_rows_identical_and_stage_cached(spark, sf_dir):
     second invocation must reuse the staged directories."""
     import os
 
-    from nemscraper_spark.queries.streaming_ops import _STAGE_CACHE
+    from nemscraper_spark.queries.trunk_cache import _TRUNKS, norm_dir
 
     REGISTRY["format_roundtrip_matrix"].fn(spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, sf_dir, "fmt")
-    stage = _STAGE_CACHE[key]
+    key = ("stage", spark.sparkContext.applicationId, norm_dir(sf_dir), "fmt")
+    stage = _TRUNKS[key][1]
     src = sorted(
         map(
             tuple,
@@ -282,4 +285,4 @@ def test_format_roundtrip_rows_identical_and_stage_cached(spark, sf_dir):
         got = sorted(map(tuple, df.collect()))
         assert got == src, f"{fmt} round trip diverged"
     REGISTRY["format_roundtrip_matrix"].fn(spark, sf_dir).collect()
-    assert _STAGE_CACHE[key] == stage  # cache hit, no restage
+    assert _TRUNKS[key][1] == stage  # cache hit, no restage

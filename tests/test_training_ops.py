@@ -452,7 +452,7 @@ def test_counted_pairs_cache_provenance(spark, sf_dir_oracle):
     finally:
         hit = tc._TRUNKS.pop(key, None)
         if hit is not None:
-            hit.unpersist()
+            hit[1].unpersist()
         if saved is not None:
             tc._TRUNKS[key] = saved
 
@@ -507,7 +507,7 @@ def test_counted_trunk_serves_both_geometries(spark, sf_dir_oracle):
         assert counted_keys() == before
     finally:
         for k in counted_keys():
-            tc._TRUNKS.pop(k).unpersist()
+            tc._TRUNKS.pop(k)[1].unpersist()
         tc._TRUNKS.update(saved)
 
 
@@ -610,22 +610,25 @@ def test_dedup_groups_reps_slice_uses_derived_tag_cache(spark, sf_dir_oracle):
     finally:
         hit = tc._TRUNKS.pop(rkey, None)
         if hit is not None and saved is None:
-            hit.unpersist()
+            hit[1].unpersist()
         if saved is not None:
             tc._TRUNKS[rkey] = saved
 
 
 def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
-    """THE rewrite-boundary hook (r11: ONE registry, one hook) must
-    unpersist + empty every trunk family at once — the r10 ADVICE
-    gap was per-module hooks leaving sibling caches alive — and a
-    post-clear rebuild yields the same rows.  Teardown clears
-    again so the test leaves the registry in a known-empty state
-    rather than pinning freshly built trunks for the session (r10
-    ADVICE)."""
+    """THE teardown hook (r11: ONE registry, one hook) must
+    unpersist + drop every trunk frame and sample in every family at
+    once — the r10 ADVICE gap was per-module hooks leaving sibling
+    caches alive — and a post-clear rebuild yields the same rows.
+    Staged dirs (str values) stay: they are footprint-checked on
+    disk.  Teardown clears again so the test leaves no frame pinned
+    for the session (r10 ADVICE)."""
     import nemscraper_spark.queries.trunk_cache as tc
     import nemscraper_spark.queries.training_data as td
     from nemscraper_spark.queries import REGISTRY
+
+    def held():
+        return [k for k, (_, v) in tc._TRUNKS.items() if not isinstance(v, str)]
 
     try:
         # populate the ppjoin + semantic trunks for this sf_dir
@@ -642,16 +645,17 @@ def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
 
         # the aggregate clear drops counted, ppjoin, dup-edges AND
         # sem-pairs in one call
-        # warm an ANN grid entry too: the aggregate hook covers it
-        # (same corpus-staleness hazard, previously no hook at all)
+        # warm an ANN grid and sample entry too: the aggregate hook
+        # frees them as well
         import nemscraper_spark.queries.ann_twins as at
 
-        at._int_grid(spark, sf_dir)
-        assert at._GRID_CACHE
+        at._md5_sample_rows(spark, sf_dir, 8)
+        assert ("ann_grid", app, nd, "int") in tc._TRUNKS
+        assert ("ann_sample", app, nd, "md5", 8) in tc._TRUNKS
 
         tc.clear_trunk_caches()
-        assert not tc._TRUNKS
-        assert not at._GRID_CACHE and not at._SAMPLE_CACHE
+        assert not held()
+        assert not [k for k in tc._TRUNKS if k[0] in ("ann_grid", "ann_sample")]
 
         # rebuild after clear: identical rows (the hook never corrupts)
         assert pp_rows == sorted(
@@ -662,7 +666,7 @@ def test_clear_hooks_empty_every_trunk_cache(spark, sf_dir):
         )
     finally:
         tc.clear_trunk_caches()
-        assert not tc._TRUNKS
+        assert not held()
 
 
 def test_failed_trunk_materialization_leaves_no_orphan(spark):
@@ -716,7 +720,7 @@ def test_trunk_build_logs_once_per_miss(spark, caplog):
     finally:
         hit = tc._TRUNKS.pop(("test_log", *key), None)
         if hit is not None:
-            hit.unpersist()
+            hit[1].unpersist()
 
 
 def test_norm_dir_canonicalizes_spellings(tmp_path):
